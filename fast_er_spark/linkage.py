@@ -18,6 +18,13 @@ Here the same flow is::
 
 with pandas inputs replaced by Spark DataFrames and the pattern index sets
 replaced by one (id_a, id_b, pattern_id) DataFrame.
+
+Comparison and Deduplication share ONE engine (fit, sparse path,
+materialization, counts, matched_pairs); they differ only in the pair
+universe, a small object (``_Rectangle``: A x B; ``_Triangle``: the strict
+lower triangle of one table) supplying value parts and join-back, exact
+levels, exact-value CUBE counts, the complement total and the pair-space
+size. The analytic-singles engine and blocking are rectangle-only.
 """
 
 from __future__ import annotations
@@ -27,19 +34,18 @@ import os
 import shutil
 import tempfile
 import uuid
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .estimation import Estimation
 from .operators.agreement import (
     assemble_patterns,
-    char_lsh_value_candidates,
     exact_levels_dedup,
     exact_levels_linkage,
-    fuzzy_levels_dedup,
-    fuzzy_levels_linkage,
     fuzzy_value_parts_dedup,
     fuzzy_value_parts_linkage,
     join_back_dedup,
@@ -156,10 +162,6 @@ def _single_long_bits(n_a, n_b, st, k_fuzzy: int, k_exact: int):
     the row counts (0..n-1); the max per-edge contribution is level 2 on
     the largest-stride fuzzy variable; the max pattern id is
     n_patterns - 1."""
-    import os
-
-    if os.environ.get("FAST_ER_PACK1", "1") == "0":  # A/B escape hatch
-        return None
     if n_a is None or n_b is None or k_fuzzy < 1:
         return None
     ba = max(1, (int(n_a) - 1).bit_length())
@@ -180,6 +182,7 @@ def _batched_distinct_counts(df: DataFrame, cols: list[str]) -> list[int]:
         ]
     ).collect()[0]
     return [int(row[f"c{i}"]) for i in range(len(cols))]
+
 
 
 # implied |A| x |B| pair space above which the materialized pattern frame is
@@ -228,10 +231,6 @@ def _materialize_pairs(
     STORAGE — HDFS/S3 — on a real cluster: executors write the files
     directly); default is a driver-local temp dir, which is correct in
     local mode, and is removed at interpreter exit."""
-    import os
-
-    if os.environ.get("FAST_ER_NO_SPILL"):  # A/B escape hatch (bench only)
-        big = False
     if not big:
         return df.persist()
     spark = df.sparkSession
@@ -244,22 +243,7 @@ def _materialize_pairs(
     else:
         path = tempfile.mkdtemp(prefix="fast_er_pairs_")
         _spill_dirs.append(path)
-    # spill codec override (A/B hatch; e.g. lz4 or uncompressed trade disk
-    # bytes for encode/decode CPU — keep the session default on shared
-    # storage, where spilled bytes cross the network)
-    codec = os.environ.get("FAST_ER_SPILL_CODEC")
-
-    def _write(frame: DataFrame) -> None:
-        w = frame.write.mode("overwrite")
-        if codec:
-            w = w.option("compression", codec)
-        w.parquet(path)
-
-    if (
-        pack_bits is not None
-        and df.columns == ["id_a", "id_b", "pattern_id"]
-        and os.environ.get("FAST_ER_PACK_SPILL", "1") != "0"
-    ):
+    if pack_bits is not None and df.columns == ["id_a", "id_b", "pattern_id"]:
         ba, bb, bp = pack_bits
         if ba + bb + bp <= 63:
             packed = df.select(
@@ -268,7 +252,7 @@ def _materialize_pairs(
                 .bitwiseOR(F.col("pattern_id"))
                 .alias("__pk")
             )
-            _write(packed)
+            packed.write.mode("overwrite").parquet(path)
             return spark.read.parquet(path).select(
                 F.shiftrightunsigned(F.col("__pk"), bb + bp).alias("id_a"),
                 F.shiftrightunsigned(F.col("__pk"), bp)
@@ -276,8 +260,12 @@ def _materialize_pairs(
                 .alias("id_b"),
                 F.col("__pk").bitwiseAND(F.lit((1 << bp) - 1)).alias("pattern_id"),
             )
-    _write(df)
+    df.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return reduce(lambda x, y: x.unionByName(y), frames)
 
 
 def _sparse_fuzzy_union(
@@ -341,11 +329,7 @@ def _sparse_fuzzy_union(
             f.select("id_a", "id_b", (F.col("level") * F.lit(s)).alias("contrib"))
             for f, s in zip(fuzzy_frames, st[:k_fuzzy])
         ]
-    u = contribs[0]
-    for c in contribs[1:]:
-        u = u.unionByName(c)
-    import os
-
+    u = _union(contribs)
     # explicit hash repartition on the agg key BEFORE the groupBy: the
     # partial aggregate then runs AFTER the exchange on co-located data
     # instead of inside the (CPU-bound, 232-task) JW stage, where it hashed
@@ -359,20 +343,11 @@ def _sparse_fuzzy_union(
     # it (fs_pattern_counts +80% at sf0.1 before the gate — the round-1
     # small-input lesson again). FAST_ER_PREPARTITION=0 force-disables.
     if prepartition and os.environ.get("FAST_ER_PREPARTITION", "1") != "0":
-        sp = int(u.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
-        # NEGATIVE RESULT (round 5, keep factor 1): over-partitioning this
-        # exchange (factor 16 -> 1024 tasks at 100k x 100k) looked like a
-        # win in an isolated exchange+agg microbench (smaller per-task agg
-        # hash maps: 5.5-6.5 s vs 7-8 s), but the FULL pipeline measured it
-        # 4-7 s SLOWER (interleaved A/B: counts phase 31.3-33.9 s at
-        # factor 16 vs 26.1-26.8 s at factor 1, the latter under heavier
-        # steal): 16x reduce buckets inflate the map-side shuffle write of
-        # the CPU-bound JW stage (939 MB vs 850 MB + per-bucket stream
-        # overhead) and fragment the spill parquet into 1024 files. The
-        # microbench's persisted input had a trivial map side, which is
-        # exactly where the real cost landed.
-        factor = int(os.environ.get("FAST_ER_ASSEMBLY_PARTITION_FACTOR", "1"))
-        sp = min(sp * max(1, factor), 4096)
+        # exactly the session partition count: over-partitioning this
+        # exchange (16x, PERF.md round 5) measured 4-7 s SLOWER end to end
+        # at 100k x 100k — more reduce buckets inflate the map-side shuffle
+        # write of the CPU-bound JW stage and fragment the spill parquet
+        sp = min(int(u.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")), 4096)
         if pack_bits is not None:
             u = u.repartition(sp, F.shiftrightunsigned(F.col("__e"), pack_bits[2]))
         else:
@@ -384,30 +359,253 @@ def _sparse_fuzzy_union(
             F.sum(F.col("__e").bitwiseAND(F.lit((1 << bc) - 1))).alias("__fz"),
             *multi,
         )
-        if multi_only:
-            g = g.where(F.col("__n") >= 2)
-        return g.select(
+        ids = (
             F.shiftrightunsigned(F.col("__k"), bb).alias("id_a"),
             F.col("__k").bitwiseAND(F.lit((1 << bb) - 1)).alias("id_b"),
-            "__fz",
         )
-    if pack:
-        g = u.groupBy("__k").agg(
-            F.sum("contrib").cast("long").alias("__fz"), *multi
-        )
-        if multi_only:
-            g = g.where(F.col("__n") >= 2)
-        return g.select(
+    elif pack:
+        g = u.groupBy("__k").agg(F.sum("contrib").cast("long").alias("__fz"), *multi)
+        ids = (
             F.shiftrightunsigned(F.col("__k"), 32).cast("long").alias("id_a"),
             F.col("__k").bitwiseAND(F.lit((1 << 32) - 1)).cast("long").alias("id_b"),
-            "__fz",
         )
-    g = u.groupBy("id_a", "id_b").agg(
-        F.sum("contrib").cast("long").alias("__fz"), *multi
-    )
+    else:
+        g = u.groupBy("id_a", "id_b").agg(F.sum("contrib").cast("long").alias("__fz"), *multi)
+        ids = ("id_a", "id_b")
     if multi_only:
-        g = g.where(F.col("__n") >= 2).drop("__n")
+        g = g.where(F.col("__n") >= 2)
+    return g.select(*ids, "__fz")
+
+
+def _moebius(at_least: dict[int, int], k: int) -> dict[int, int]:
+    """Moebius inversion over exact-variable subsets: {e: pairs agreeing on
+    EXACTLY subset e} from {t: pairs agreeing on AT LEAST subset t} (a
+    missing t counts 0), by inclusion-exclusion over the supersets of e.
+    Subset masks follow the pattern-id convention — exact variable j <->
+    bit (k-1-j) — so a mask IS the exact part of a pattern id."""
+    return {
+        e: sum(
+            (-1) ** bin(t ^ e).count("1") * n  # t ^ e = the extra variables
+            for t, n in at_least.items()
+            if (t & e) == e  # t is a superset of e
+        )
+        for e in range(1 << k)
+    }
+
+
+def _side_cube(df: DataFrame, head: list[str], exact: list[str], sfx: str = "") -> DataFrame:
+    """One side's value histogram over every exact-variable subset in ONE
+    CUBE pass (2^k combination rows per input row, partial-aggregated
+    map-side): rows (__h<i>, __v<j>, __n, __gid), every name suffixed by
+    ``sfx`` — suffixes, not DataFrame-attribute references, because
+    self-linkage passes the same frame as both sides, where attribute-id
+    disambiguation of identical plans is unreliable. ``head`` columns are
+    grouped (non-null) in every row; __v<j> is exact variable j's value,
+    NULL where aggregated out, and a real NULL inside the subset drops the
+    group (null never agrees). grouping_id bit order puts the first cube
+    column most significant, so v_j <-> bit k-1-j: the complemented gid is
+    the subset mask in the pattern-id convention."""
+    k = len(exact)
+    hs = [f"__h{i}{sfx}" for i in range(len(head))]
+    vs = [f"__v{j}{sfx}" for j in range(k)]
+    gid = F.col(f"__gid{sfx}")
+    f = df.select(
+        *[F.col(c).cast("string").alias(h) for c, h in zip(head, hs)],
+        *[F.col(c).cast("string").alias(v) for c, v in zip(exact, vs)],
+    )
+    for h in hs:
+        f = f.where(F.col(h).isNotNull())
+    g = f.cube(*hs, *vs).agg(
+        F.count(F.lit(1)).alias(f"__n{sfx}"), F.grouping_id().alias(f"__gid{sfx}")
+    )
+    if hs:
+        # keep only combinations where no head column is aggregated out
+        g = g.where(gid < F.lit(1 << k))
+    for j, v in enumerate(vs):
+        in_subset = F.shiftright(gid, k - 1 - j).bitwiseAND(F.lit(1)) == 0
+        g = g.where(~in_subset | F.col(v).isNotNull())
     return g
+
+
+def _cubes_agree(heads: list[str], k: int) -> Column:
+    """Join condition between an "a" and a "b" ``_side_cube``: same subset
+    and equal grouped values, null-safe (aggregated-out columns are NULL on
+    both sides)."""
+    cond = F.col("__gida") == F.col("__gidb")
+    for c in heads + [f"__v{j}" for j in range(k)]:
+        cond = cond & F.col(c + "a").eqNullSafe(F.col(c + "b"))
+    return cond
+
+
+def _histogram(pairs: DataFrame) -> dict[int, int]:
+    """{pattern_id: pair count} of a pattern frame, in one collect."""
+    return {
+        int(r["pattern_id"]): int(r["cnt"]) for r in pattern_counts(pairs).collect()
+    }
+
+
+class _Rectangle:
+    """The A x B pair universe (Comparison): every (a, b) row pair, or only
+    the same-block pairs when blocking columns are given (the reference's
+    "Blocking", usage.rst)."""
+
+    def __init__(self, df_a, df_b, fuzzy_a, fuzzy_b, exact_a, exact_b,
+                 id_a, id_b, blocking_a, blocking_b):
+        self.df_a, self.n_a = _with_row_id(df_a, id_a)
+        self.df_b, self.n_b = _with_row_id(df_b, id_b)
+        self.blk = blocking_a is not None
+        if self.blk:
+            self.df_a = self.df_a.withColumn("__block", F.col(blocking_a).cast("string"))
+            self.df_b = self.df_b.withColumn("__block", F.col(blocking_b).cast("string"))
+        self.positional = id_a is None and id_b is None
+        # blocked comparisons always use the classic engine (the value-level
+        # collapse would need per-block value histograms)
+        self.analytic_ok = not self.blk
+        self.fuzzy_a, self.fuzzy_b = fuzzy_a, fuzzy_b
+        self.exact_a, self.exact_b = exact_a, exact_b
+        bl = ["__block"] if self.blk else []
+        self.a = self.df_a.select(F.col(_ROW_ID).alias("id_a"), *fuzzy_a, *exact_a, *bl)
+        self.b = self.df_b.select(F.col(_ROW_ID).alias("id_b"), *fuzzy_b, *exact_b, *bl)
+
+    def id_bounds(self) -> tuple[int, int] | None:
+        """Exclusive bounds on id_a / id_b (positional ids only)."""
+        return (self.n_a, self.n_b) if self.positional else None
+
+    def pair_space(self) -> int:
+        """|A| * |B|. Positional row counts are free; the natural-key path
+        pays the two count jobs ONCE, overlapped, and BACKFILLS n_a/n_b so
+        the complement reuses them (four serial count jobs measured +0.25 s
+        per fit at bench scale). Safe to backfill: the packed-key gates
+        additionally require positional ids (id_bounds), so a row COUNT can
+        never be mistaken for an id BOUND."""
+        if self.n_a is None or self.n_b is None:
+            with ThreadPoolExecutor(2) as ex:
+                fa = ex.submit(self.df_a.count) if self.n_a is None else None
+                fb = ex.submit(self.df_b.count) if self.n_b is None else None
+                if fa is not None:
+                    self.n_a = fa.result()
+                if fb is not None:
+                    self.n_b = fb.result()
+        return self.n_a * self.n_b
+
+    def distinct_sizes(self) -> list[tuple[int, int]]:
+        # the A- and B-side count jobs are independent: submit them from
+        # two threads so the scheduler overlaps them on idle cores (wall
+        # ~= max of the two instead of their sum)
+        with ThreadPoolExecutor(2) as ex:
+            fa = ex.submit(_batched_distinct_counts, self.a, self.fuzzy_a)
+            fb = ex.submit(_batched_distinct_counts, self.b, self.fuzzy_b)
+            return list(zip(fa.result(), fb.result()))
+
+    def fuzzy_parts(self, i, p, lower, upper, candidates, sizes):
+        return fuzzy_value_parts_linkage(
+            self.a, self.b, self.fuzzy_a[i], self.fuzzy_b[i], "id_a", "id_b",
+            p, lower, upper, candidates, block=self.blk, sizes=sizes,
+        )
+
+    def join_back(self, matched, rows_a, rows_b) -> DataFrame:
+        return join_back_linkage(matched, rows_a, rows_b, "id_a", "id_b", self.blk)
+
+    def exact_levels(self, j: int) -> DataFrame:
+        return exact_levels_linkage(
+            self.a, self.b, self.exact_a[j], self.exact_b[j], "id_a", "id_b",
+            block=self.blk,
+        )
+
+    def exact_cube_counts(self) -> dict[int, int]:
+        """{grouping id of exact subset S: N>=(S)}, N>=(S) = sum over joint
+        non-null values of cntA*cntB (pairs agreeing on at least S). ONE
+        Spark job: the two side cubes join null-safe per subset and one
+        collect returns every N>=(S). Blocked comparisons add the block key
+        to the joint grouping (pairs only exist within a block)."""
+        bl = ["__block"] if self.blk else []
+        ga = _side_cube(self.a, bl, self.exact_a, "a")
+        gb = _side_cube(self.b, bl, self.exact_b, "b")
+        joint = (
+            ga.join(gb, _cubes_agree(["__h0"] if self.blk else [], len(self.exact_a)))
+            .groupBy("__gida")
+            .agg(F.sum(F.col("__na") * F.col("__nb")).alias("t"))
+            .collect()
+        )
+        return {int(r["__gida"]): int(r["t"]) for r in joint}
+
+    def complement(self, observed: dict[int, int], k_fuzzy: int, k_exact: int) -> np.ndarray:
+        if not self.blk:
+            # positional row ids ship the totals for free; natural keys pay
+            # the two count jobs once (pair_space backfills them)
+            self.pair_space()
+            return counts_with_complement(observed, k_fuzzy, k_exact, self.n_a, self.n_b)
+        # Blocked pair universe: sum over blocks |A_b| * |B_b| (the
+        # reference's blocking sums per-block Counts, usage.rst), passed as
+        # a total x 1 universe
+        ca = self.df_a.groupBy("__block").count().withColumnsRenamed({"count": "na"})
+        cb = self.df_b.groupBy("__block").count().withColumnsRenamed({"count": "nb"})
+        row = ca.join(cb, "__block").select(
+            F.sum(F.col("na") * F.col("nb")).alias("t")
+        ).collect()[0]
+        return counts_with_complement(observed, k_fuzzy, k_exact, int(row["t"] or 0), 1)
+
+
+class _Triangle:
+    """The within-table pair universe (Deduplication): the strict lower
+    triangle id_a > id_b of one table, seen as both sides of the pair."""
+
+    # no triangular value-level joint counts yet
+    analytic_ok = False
+
+    def __init__(self, df, fuzzy, exact, id_col):
+        self.df, self.n = _with_row_id(df, id_col)
+        self.positional = id_col is None
+        self.fuzzy_a = self.fuzzy_b = fuzzy
+        self.exact_a = self.exact_b = exact
+        self.a = self.df.select(F.col(_ROW_ID).alias("id_a"), *fuzzy, *exact)
+        self.b = self.a.withColumnRenamed("id_a", "id_b")
+
+    def id_bounds(self) -> tuple[int, int] | None:
+        return (self.n, self.n) if self.positional else None
+
+    def pair_space(self) -> int:
+        if self.n is None:
+            # natural-key path: count once and backfill so the complement
+            # reuses it (see _Rectangle.pair_space for the safety argument)
+            self.n = self.df.count()
+        return self.n * (self.n - 1) // 2
+
+    def distinct_sizes(self) -> list[tuple[int, int]]:
+        # one aggregation job; the candidate universe is vals x vals
+        return [(s, s) for s in _batched_distinct_counts(self.a, self.fuzzy_a)]
+
+    def fuzzy_parts(self, i, p, lower, upper, candidates, sizes):
+        return fuzzy_value_parts_dedup(
+            self.a, self.fuzzy_a[i], "id_a", p, lower, upper, candidates, sizes=sizes
+        )
+
+    def join_back(self, matched, rows) -> DataFrame:
+        return join_back_dedup(matched, rows, "id_a")
+
+    def exact_levels(self, j: int) -> DataFrame:
+        return exact_levels_dedup(self.a, self.exact_a[j], "id_a")
+
+    def exact_cube_counts(self) -> dict[int, int]:
+        """Triangular N>=(S) = sum over joint non-null values of c*(c-1)/2,
+        keyed by grouping id as in _Rectangle.exact_cube_counts. ONE Spark
+        job: a single CUBE pass aggregates every subset's value histogram,
+        a tiny second aggregation by grouping id sums c*(c-1) (exact longs,
+        halved driver-side — a double division would lose precision past
+        2^53 pairs), one collect."""
+        n = F.col("__n")
+        rows = (
+            _side_cube(self.a, [], self.exact_a)
+            .groupBy("__gid")
+            .agg(F.coalesce(F.sum(n * (n - F.lit(1))), F.lit(0)).alias("t"))
+            .collect()
+        )
+        return {int(r["__gid"]): int(r["t"]) // 2 for r in rows}
+
+    def complement(self, observed: dict[int, int], k_fuzzy: int, k_exact: int) -> np.ndarray:
+        # the complement row includes the diagonal (deduplication.py:825)
+        self.pair_space()
+        return counts_with_complement(observed, k_fuzzy, k_exact, self.n, None)
 
 
 class Comparison:
@@ -438,29 +636,29 @@ class Comparison:
         for c in vars_fuzzy_b + vars_exact_b:
             if c not in df_b.columns:
                 raise ValueError(f"column {c} not in df_b")
-        self.df_a, self._n_a = _with_row_id(df_a, id_a)
-        self.df_b, self._n_b = _with_row_id(df_b, id_b)
-        self.id_a = id_a
-        self.id_b = id_b
-        self.blocking_a = blocking_a
-        self.blocking_b = blocking_b
-        if blocking_a is not None:
-            self.df_a = self.df_a.withColumn("__block", F.col(blocking_a).cast("string"))
-            self.df_b = self.df_b.withColumn("__block", F.col(blocking_b).cast("string"))
-        self.vars_fuzzy_a = vars_fuzzy_a
-        self.vars_fuzzy_b = vars_fuzzy_b
-        self.vars_exact_a = vars_exact_a
-        self.vars_exact_b = vars_exact_b
-        self.k_fuzzy = len(vars_fuzzy_a)
-        self.k_exact = len(vars_exact_a)
+        self.id_a, self.id_b = id_a, id_b
+        self.blocking_a, self.blocking_b = blocking_a, blocking_b
+        self.vars_fuzzy_a, self.vars_fuzzy_b = vars_fuzzy_a, vars_fuzzy_b
+        self.vars_exact_a, self.vars_exact_b = vars_exact_a, vars_exact_b
+        self._start(_Rectangle(
+            df_a, df_b, vars_fuzzy_a, vars_fuzzy_b, vars_exact_a, vars_exact_b,
+            id_a, id_b, blocking_a, blocking_b,
+        ))
+        self.df_a, self.df_b = self._u.df_a, self._u.df_b
+
+    def _start(self, universe) -> None:
+        """Engine state over the given pair universe (_Rectangle/_Triangle)."""
+        self._u = universe
+        self.k_fuzzy = len(universe.fuzzy_a)
+        self.k_exact = len(universe.exact_a)
         self.patterns: DataFrame | None = None
         self._counts: np.ndarray | None = None
         self._sparse: DataFrame | None = None
         self._sparse_materialized = False
         self._pack_bits = None
-        self._ab: tuple[DataFrame, DataFrame] | None = None
+        self._big_cached: bool | None = None
         # analytic-singles engine state (see _analytic/_fit_sparse)
-        self._parts: list[tuple[DataFrame, DataFrame, DataFrame]] | None = None
+        self._parts: list[tuple[DataFrame, ...]] | None = None
         self._multi: DataFrame | None = None
         self._multi_materialized = False
 
@@ -471,10 +669,10 @@ class Comparison:
         materialized pattern frame entirely; small fits keep the one
         union+groupBy plan (the extra value-cube jobs would cost more
         scheduling than they save). '1'/'force' = always (parity tests),
-        '0' = never. Blocked comparisons always use the classic engine
-        (the value-level collapse would need per-block value histograms)."""
+        '0' = never. Rectangle-only (see _Rectangle.analytic_ok and
+        _Triangle.analytic_ok)."""
         mode = os.environ.get("FAST_ER_ANALYTIC_SINGLES", "auto")
-        if mode == "0" or self.blocking_a is not None or self.k_fuzzy < 1:
+        if mode == "0" or not self._u.analytic_ok or self.k_fuzzy < 1:
             return False
         if mode in ("1", "force"):
             return True
@@ -482,26 +680,9 @@ class Comparison:
 
     def _big(self) -> bool:
         """Pair space >= _SPILL_PAIR_SPACE -> parquet spill + pre-partitioned
-        assembly. Positional row counts are free; the natural-key path pays
-        two count jobs once (cached — trivial next to the fit itself)."""
-        if getattr(self, "_big_cached", None) is None:
-            if self._n_a is None or self._n_b is None:
-                # natural-key path: pay the two count jobs ONCE, overlapped,
-                # and BACKFILL _n_a/_n_b so counts()'s complement reuses them
-                # (four serial count jobs measured +0.25 s per fit at bench
-                # scale). Safe to backfill: the packed-key gates additionally
-                # require id_a/id_b/id_col is None (positional ids), so a
-                # row COUNT can never be mistaken for an id BOUND here.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(2) as ex:
-                    fa = ex.submit(self.df_a.count) if self._n_a is None else None
-                    fb = ex.submit(self.df_b.count) if self._n_b is None else None
-                    if fa is not None:
-                        self._n_a = fa.result()
-                    if fb is not None:
-                        self._n_b = fb.result()
-            self._big_cached = self._n_a * self._n_b >= _SPILL_PAIR_SPACE
+        assembly. Cached: the natural-key path pays its row counts once."""
+        if self._big_cached is None:
+            self._big_cached = self._u.pair_space() >= _SPILL_PAIR_SPACE
         return self._big_cached
 
     def fit(
@@ -523,40 +704,18 @@ class Comparison:
         Set False (or use blocking) for the dense reference-shaped path."""
         if self.patterns is not None:
             raise RuntimeError("already fitted")
-        blk = self.blocking_a is not None
-        bl = ["__block"] if blk else []
-        a = self.df_a.select(
-            F.col(_ROW_ID).alias("id_a"), *self.vars_fuzzy_a, *self.vars_exact_a, *bl
-        )
-        b = self.df_b.select(
-            F.col(_ROW_ID).alias("id_b"), *self.vars_fuzzy_b, *self.vars_exact_b, *bl
-        )
-        self._ab = (a, b)
+        u = self._u
         # ALL variables' distinct-value counts in ONE aggregation job per
         # side (2 jobs total): default_value_candidates otherwise runs two
         # count jobs per fuzzy variable just to pick cross-vs-LSH and size
         # the JW stage (~5 s of driver-side latency at 4 variables)
-        sizes_ab = None
-        if self.k_fuzzy and candidates is None:
-            # the A- and B-side count jobs are independent: submit them from
-            # two threads so the scheduler overlaps them on idle cores (wall
-            # ~= max of the two instead of their sum)
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(2) as ex:
-                fa = ex.submit(_batched_distinct_counts, a, self.vars_fuzzy_a)
-                fb = ex.submit(_batched_distinct_counts, b, self.vars_fuzzy_b)
-                da, db = fa.result(), fb.result()
-            sizes_ab = list(zip(da, db))
+        sizes = u.distinct_sizes() if self.k_fuzzy and candidates is None else None
         sparse_path = exact_sparse and self.k_fuzzy >= 1 and 1 <= self.k_exact <= 8
         analytic = sparse_path and self._analytic()
-        fuzzy_frames = []
-        parts = []
-        for i, (ca, cb) in enumerate(zip(self.vars_fuzzy_a, self.vars_fuzzy_b)):
-            matched, rows_a, rows_b = fuzzy_value_parts_linkage(
-                a, b, ca, cb, "id_a", "id_b", p, lower_thr, upper_thr,
-                candidates, block=blk,
-                sizes=sizes_ab[i] if sizes_ab else None,
+        fuzzy_frames, parts = [], []
+        for i in range(self.k_fuzzy):
+            part = u.fuzzy_parts(
+                i, p, lower_thr, upper_thr, candidates, sizes[i] if sizes else None
             )
             if analytic:
                 # the value-pair frame feeds BOTH the assembly join-back
@@ -564,23 +723,17 @@ class Comparison:
                 # in counts(): persist so the JW scoring runs once (the
                 # frame is distinct value pairs — orders of magnitude
                 # smaller than the pair frame it implies)
-                matched = matched.persist()
-            parts.append((matched, rows_a, rows_b))
-            fuzzy_frames.append(
-                join_back_linkage(matched, rows_a, rows_b, "id_a", "id_b", blk)
-            )
+                part = (part[0].persist(), *part[1:])
+            parts.append(part)
+            fuzzy_frames.append(u.join_back(*part))
         self._parts = parts if analytic else None
         # sparse-engine guard: the analytical exact counts CUBE expands 2^k
         # combination rows per input row — past ~8 exact variables the dense
         # path's single union+groupBy is the better plan
         if sparse_path:
-            self._fit_sparse(a, b, fuzzy_frames)
+            self._fit_sparse(fuzzy_frames)
             return self
-        frames = list(fuzzy_frames)
-        for ca, cb in zip(self.vars_exact_a, self.vars_exact_b):
-            frames.append(
-                exact_levels_linkage(a, b, ca, cb, "id_a", "id_b", block=blk)
-            )
+        frames = fuzzy_frames + [u.exact_levels(j) for j in range(self.k_exact)]
         # materialize on first action: counts() and Linkage.transform both
         # consume patterns, and without a shared materialization the whole
         # JW/join DAG re-executes per consumer (measured ~2x wall on the
@@ -592,34 +745,32 @@ class Comparison:
         return self
 
     # ------------------------------------------------- sparse-exact engine
-    def _fit_sparse(self, a: DataFrame, b: DataFrame, fuzzy_frames) -> None:
+    def _fit_sparse(self, fuzzy_frames) -> None:
         st = strides(self.k_fuzzy, self.k_exact)
-        pack = (
-            self.id_a is None and self.id_b is None
-            and _pack_ok(self._n_a, self._n_b)
+        bounds = self._u.id_bounds()
+        pack = bounds is not None and _pack_ok(*bounds)
+        self._pack_bits = (
+            _single_long_bits(*bounds, st, self.k_fuzzy, self.k_exact) if pack else None
         )
-        self._pack_bits = _single_long_bits(
-            self._n_a, self._n_b, st, self.k_fuzzy, self.k_exact
-        ) if pack else None
-        sparse = _sparse_fuzzy_union(
-            fuzzy_frames, st, self.k_fuzzy, pack,
-            prepartition=self._big(), pack_bits=self._pack_bits and self._pack_bits[0],
-        )
-        sparse = self._attach_exact(sparse, a, b, st)
+
+        def union(multi_only: bool = False) -> DataFrame:
+            return self._attach_exact(
+                _sparse_fuzzy_union(
+                    fuzzy_frames, st, self.k_fuzzy, pack,
+                    prepartition=self._big(),
+                    pack_bits=self._pack_bits and self._pack_bits[0],
+                    multi_only=multi_only,
+                ),
+                st,
+            )
+
+        sparse = union()
         if self._parts is not None:
             # analytic-singles engine: the multi-agreement frame (>= 2 fuzzy
             # agreements) is the ONLY pair frame counts()/transform()
             # materialize; single-agreement patterns are counted at the
             # value level and regenerated per-pattern on demand
-            self._multi = self._attach_exact(
-                _sparse_fuzzy_union(
-                    fuzzy_frames, st, self.k_fuzzy, pack,
-                    prepartition=self._big(),
-                    pack_bits=self._pack_bits and self._pack_bits[0],
-                    multi_only=True,
-                ),
-                a, b, st,
-            )
+            self._multi = union(multi_only=True)
         # stays LAZY here; the first consumer (_ensure_sparse) materializes
         # it ONCE — parquet spill for big pair spaces, persist() for small
         # (NOT localCheckpoint: under AQE even a lazy localCheckpoint
@@ -631,15 +782,16 @@ class Comparison:
         # and transform() never do.
         self.patterns = self._sparse.unionByName(self._exact_only_patterns())
 
-    def _attach_exact(self, frame: DataFrame, a: DataFrame, b: DataFrame, st) -> DataFrame:
+    def _attach_exact(self, frame: DataFrame, st) -> DataFrame:
         """exact agreement is a per-pair LOOKUP on the (small-per-pair)
         pair frame — two equi-joins per exact variable against the
         id->value projections, never a pair-materializing self-join."""
+        u = self._u
         exact_expr = F.lit(0).cast("long")
-        for idx, (ca, cb) in enumerate(zip(self.vars_exact_a, self.vars_exact_b)):
+        for idx, (ca, cb) in enumerate(zip(u.exact_a, u.exact_b)):
             s = st[self.k_fuzzy + idx]
-            va = a.select("id_a", F.col(ca).cast("string").alias(f"__ea{idx}"))
-            vb = b.select("id_b", F.col(cb).cast("string").alias(f"__eb{idx}"))
+            va = u.a.select("id_a", F.col(ca).cast("string").alias(f"__ea{idx}"))
+            vb = u.b.select("id_b", F.col(cb).cast("string").alias(f"__eb{idx}"))
             frame = frame.join(va, "id_a").join(vb, "id_b")
             exact_expr = exact_expr + F.when(
                 F.col(f"__ea{idx}") == F.col(f"__eb{idx}"), F.lit(s).cast("long")
@@ -687,87 +839,38 @@ class Comparison:
         implies nA(va, x) * nB(vb, x) row pairs per joint exact-value
         combination x, so each side aggregates one CUBE over
         (fuzzy value x exact-variable subsets) — the same single-job CUBE
-        trick as _exact_joint_counts with the fuzzy value as a mandatory
+        trick as the exact joint counts with the fuzzy value as a mandatory
         grouping column — and the two cubes join THROUGH the value-pair
         frame. Moebius inversion over exact subsets then yields exact
         patterns. One Spark job for all fuzzy variables (union + collect)."""
-        a, b = self._ab
+        u = self._u
         k = self.k_exact
-
-        def side_cube(df: DataFrame, fuzzy_col: str, exact_cols, sfx: str) -> DataFrame:
-            # per-side column SUFFIXES (not DataFrame-attribute references):
-            # self-linkage passes the same frame as both sides, where
-            # attribute-id disambiguation of identical plans is unreliable
-            vs = [f"__v{j}{sfx}" for j in range(k)]
-            f = df.select(
-                F.col(fuzzy_col).cast("string").alias(f"__val{sfx}"),
-                *[F.col(c).cast("string").alias(v) for c, v in zip(exact_cols, vs)],
-            ).where(F.col(f"__val{sfx}").isNotNull())
-            g = f.cube(f"__val{sfx}", *vs).agg(
-                F.count(F.lit(1)).alias(f"__n{sfx}"),
-                F.grouping_id().alias(f"__gid{sfx}"),
-            )
-            # __val is the first cube column = most significant grouping bit:
-            # keep only combinations where it is NOT aggregated out. A v_j
-            # inside the subset must be a real value (null never agrees).
-            g = g.where(F.col(f"__gid{sfx}") < F.lit(1 << k))
-            for j, v in enumerate(vs):
-                in_subset = (
-                    F.shiftright(F.col(f"__gid{sfx}"), k - 1 - j).bitwiseAND(F.lit(1))
-                    == 0
-                )
-                g = g.where(~in_subset | F.col(v).isNotNull())
-            return g
-
         frames = []
         for i in range(self.k_fuzzy):
             matched = self._parts[i][0]
-            ga = side_cube(a, self.vars_fuzzy_a[i], self.vars_exact_a, "a")
-            gb = side_cube(b, self.vars_fuzzy_b[i], self.vars_exact_b, "b")
-            j1 = matched.join(ga, F.col("val_a") == F.col("__vala"))
-            cond = (F.col("val_b") == F.col("__valb")) & (
-                F.col("__gida") == F.col("__gidb")
-            )
-            for j in range(k):
-                cond = cond & F.col(f"__v{j}a").eqNullSafe(F.col(f"__v{j}b"))
-            j2 = j1.join(gb, cond)
+            ga = _side_cube(u.a, [u.fuzzy_a[i]], u.exact_a, "a")
+            gb = _side_cube(u.b, [u.fuzzy_b[i]], u.exact_b, "b")
+            j1 = matched.join(ga, F.col("val_a") == F.col("__h0a"))
+            j2 = j1.join(gb, (F.col("val_b") == F.col("__h0b")) & _cubes_agree([], k))
+            t = F.sum(F.col("__na").cast("long") * F.col("__nb").cast("long"))
             frames.append(
                 j2.groupBy(F.col("level"), F.col("__gida"))
-                .agg(
-                    F.sum(
-                        F.col("__na").cast("long") * F.col("__nb").cast("long")
-                    ).alias("t")
-                )
-                .select(
-                    F.lit(i).alias("var"), F.col("level"),
-                    F.col("__gida").alias("gid"), F.col("t"),
-                )
+                .agg(t.alias("t"))
+                .select(F.lit(i).alias("var"), "level", F.col("__gida").alias("gid"), "t")
             )
-        u = frames[0]
-        for f in frames[1:]:
-            u = u.unionByName(f)
-        rows = u.collect()
         full = (1 << k) - 1
         n_ge: dict[tuple[int, int], dict[int, int]] = {}
-        for r in rows:
+        for r in _union(frames).collect():
+            # gid == full (all v_j aggregated out) is the S = {} row: total
+            # pairs at (var, level) regardless of exacts
             key = (int(r["var"]), int(r["level"]))
-            # subset-mask convention matches _exact_joint_counts: exact
-            # variable j <-> bit (k-1-j), i.e. the mask IS the exact part of
-            # the pattern id. gid == full (all v_j aggregated out) is the
-            # S = {} row: total pairs at (var, level) regardless of exacts.
             n_ge.setdefault(key, {})[full ^ int(r["gid"])] = int(r["t"])
-        out: dict[tuple[int, int, int], int] = {}
-        for (i, lvl), ge in n_ge.items():
-            for e in range(1 << k):
-                total = 0
-                for t in range(1 << k):
-                    if (t & e) == e:  # t is a superset of e
-                        total += (-1) ** (
-                            bin(t).count("1") - bin(e).count("1")
-                        ) * ge.get(t, 0)
-                if total:
-                    out[(i, lvl, e)] = total
-        return out
+        return {
+            (i, lvl, e): c
+            for (i, lvl), ge in n_ge.items()
+            for e, c in _moebius(ge, k).items()
+            if c
+        }
 
     def _single_pairs_batch(self, pids: list[int]) -> DataFrame:
         """(id_a, id_b, pattern_id) for admitted SINGLE-fuzzy-agreement
@@ -787,47 +890,37 @@ class Comparison:
             assert len(nz) == 1, pid
             by_var.setdefault(nz[0], []).append((levels[nz[0]], pid))
         multi = self._ensure_multi().select("id_a", "id_b")
-        a, b = self._ab
         frames = []
         for i, entries in sorted(by_var.items()):
             lvls = sorted({l for l, _ in entries})
-            matched, rows_a, rows_b = self._parts[i]
-            edges = join_back_linkage(
-                matched.where(F.col("level").isin([int(x) for x in lvls])),
-                rows_a, rows_b, "id_a", "id_b", False,
+            matched, *rows = self._parts[i]
+            edges = self._u.join_back(
+                matched.where(F.col("level").isin([int(x) for x in lvls])), *rows
             )
             cand = edges.join(multi, ["id_a", "id_b"], "left_anti").select(
                 "id_a", "id_b",
                 (F.col("level") * F.lit(int(st[i]))).cast("long").alias("__fz"),
             )
             frames.append(
-                self._attach_exact(cand, a, b, st).where(
+                self._attach_exact(cand, st).where(
                     F.col("pattern_id").isin([int(p) for _, p in entries])
                 )
             )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+        return _union(frames)
 
     def _exact_only_patterns(self) -> DataFrame:
         """(id_a, id_b, pattern_id) for pairs agreeing on >=1 exact variable
         and NO fuzzy variable — the heavy frame the sparse path avoids
         materializing; built on demand (API parity / admitted exact-only
         patterns)."""
-        a, b = self._ab
-        blk = self.blocking_a is not None
         st = strides(self.k_fuzzy, self.k_exact)
         frames = [
-            exact_levels_linkage(a, b, ca, cb, "id_a", "id_b", block=blk).select(
+            self._u.exact_levels(i).select(
                 "id_a", "id_b", (F.col("level") * F.lit(st[self.k_fuzzy + i])).alias("contrib")
             )
-            for i, (ca, cb) in enumerate(zip(self.vars_exact_a, self.vars_exact_b))
+            for i in range(self.k_exact)
         ]
-        u = frames[0]
-        for f in frames[1:]:
-            u = u.unionByName(f)
-        allex = u.groupBy("id_a", "id_b").agg(
+        allex = _union(frames).groupBy("id_a", "id_b").agg(
             F.sum("contrib").cast("long").alias("pattern_id")
         )
         return allex.join(
@@ -835,71 +928,19 @@ class Comparison:
         )
 
     def _exact_joint_counts(self) -> dict[int, int]:
-        """Exact-pattern histogram over ALL pairs, computed WITHOUT pair
-        materialization: for every non-empty subset S of exact variables,
-        N>=(S) = sum over joint non-null values of cntA*cntB (pairs agreeing
-        on at least S), then Moebius inversion gives pairs agreeing on
-        exactly the subset e. ONE Spark job: each side aggregates every
-        subset's value histogram in a single CUBE pass (2^k combination rows
-        per input row, partial-aggregated map-side), the two cubes join
-        null-safe per subset, and one collect returns all N>=(S). The old
-        per-subset loop ran 2^k - 1 serial scan+collect jobs. Blocked
-        comparisons add the block key to the joint grouping (pairs only
-        exist within a block)."""
-        a, b = self._ab
-        blk = self.blocking_a is not None
-        k = self.k_exact
-        if k == 0:
+        """Exact-pattern histogram over ALL pairs of the universe, computed
+        WITHOUT pair materialization: for every non-empty subset S of exact
+        variables, N>=(S) = pairs agreeing on at least S (the universe's
+        exact_cube_counts: ONE Spark job, one CUBE pass per side instead of
+        2^k - 1 serial scan+collect jobs), then Moebius inversion gives
+        pairs agreeing on exactly the subset e."""
+        if self.k_exact == 0:
             return {}
-        vs = [f"v{j}" for j in range(k)]
-        cube_cols = (["__block"] if blk else []) + vs
-
-        def side_cube(df: DataFrame, cols: list[str], cnt: str) -> DataFrame:
-            f = df.select(
-                *(["__block"] if blk else []),
-                *[F.col(c).cast("string").alias(v) for c, v in zip(cols, vs)],
-            )
-            if blk:
-                f = f.where(F.col("__block").isNotNull())
-            g = f.cube(*cube_cols).agg(
-                F.count(F.lit(1)).alias(cnt), F.grouping_id().alias("gid")
-            )
-            # keep only combinations where __block is NOT aggregated out
-            # (grouping_id bit order: first cube column = most significant,
-            # so the block bit is bit k and the v_j bits are k-1 .. 0,
-            # matching the subset-mask convention); drop groups whose
-            # in-subset value is a real NULL (null never agrees)
-            if blk:
-                g = g.where(F.col("gid") < F.lit(1 << k))
-            for j, v in enumerate(vs):
-                in_subset = F.shiftright(F.col("gid"), k - 1 - j).bitwiseAND(F.lit(1)) == 0
-                g = g.where(~in_subset | F.col(v).isNotNull())
-            return g
-
-        ga = side_cube(a, self.vars_exact_a, "na")
-        gb = side_cube(b, self.vars_exact_b, "nb")
-        cond = ga["gid"] == gb["gid"]
-        for v in cube_cols:
-            # null-safe: aggregated-out columns are NULL on both sides
-            cond = cond & ga[v].eqNullSafe(gb[v])
-        joint = (
-            ga.join(gb, cond)
-            .groupBy(ga["gid"])
-            .agg(F.sum(ga["na"] * gb["nb"]).alias("t"))
-            .collect()
-        )
-        full = (1 << k) - 1
-        n_ge = {full ^ int(r["gid"]): int(r["t"]) for r in joint if int(r["gid"]) != full}
-        for t in range(1, 1 << k):
-            n_ge.setdefault(t, 0)  # subsets with no joint non-null values
-        exact_counts: dict[int, int] = {}
-        for e in range(1, 2**k):
-            total = 0
-            for t in range(e, 2**k):
-                if (t & e) == e:  # t is a superset of e
-                    total += (-1) ** (bin(t).count("1") - bin(e).count("1")) * n_ge[t]
-            exact_counts[e] = total
-        return exact_counts
+        # gid == full (every variable aggregated out) is the empty subset
+        full = (1 << self.k_exact) - 1
+        cube = self._u.exact_cube_counts()
+        exact = _moebius({full ^ g: n for g, n in cube.items() if g != full}, self.k_exact)
+        return {e: c for e, c in exact.items() if e}
 
     def matched_pairs(self, pids: list[int]) -> DataFrame:
         """(id_a, id_b, pattern_id) restricted to the given pattern ids —
@@ -946,132 +987,94 @@ class Comparison:
 
     def counts(self) -> np.ndarray:
         """Full pattern histogram incl. the complement row
-        (comparison.py:732-748)."""
+        (comparison.py:732-748; the universe supplies the total)."""
         if self.patterns is None:
             raise RuntimeError("fit() first")
-        if self._counts is None and self._sparse is not None:
-            # the exact-value CUBE job reads only the raw a/b frames — it is
-            # independent of the sparse materialization, so submit it from a
-            # thread and let it run CONCURRENTLY with the (much larger)
-            # histogram job instead of serially after it
-            from concurrent.futures import ThreadPoolExecutor
-
-            if self._parts is not None:
-                # analytic-singles engine: the big job shrinks to the
-                # multi-agreement frame; the single-agreement histogram is
-                # reconstructed from the value-level joint counts minus the
-                # multi frame's marginals (any pair with a second fuzzy
-                # agreement is in the multi frame, so every remaining pair
-                # at (var, level) has zeros elsewhere)
-                st = strides(self.k_fuzzy, self.k_exact)
-
-                def m_job():
-                    return {
-                        int(r["pattern_id"]): int(r["cnt"])
-                        for r in pattern_counts(self._ensure_multi()).collect()
-                    }
-
-                # submit the (dominant) multi job FIRST: driver-side plan
-                # compilation is effectively serialized across threads, so
-                # whatever compiles first starts executing first — the cube
-                # jobs then compile while the cluster is already busy
-                with ThreadPoolExecutor(3) as ex:
-                    fut_m = ex.submit(m_job)
-                    fut_exact = ex.submit(self._exact_joint_counts)
-                    fut_fuzzy = ex.submit(self._fuzzy_joint_counts)
-                    m_hist = fut_m.result()
-                    fuzzy_joint = fut_fuzzy.result()
-                    exact_joint = fut_exact.result()
-                observed = dict(m_hist)
-                ek = 1 << self.k_exact
-                m_marg: dict[tuple[int, int, int], int] = {}
-                for q, c in m_hist.items():
-                    e = q % ek
-                    for i in range(self.k_fuzzy):
-                        lvl = (q // st[i]) % 3
-                        if lvl:
-                            key = (i, lvl, e)
-                            m_marg[key] = m_marg.get(key, 0) + c
-                for (i, lvl, e), n in fuzzy_joint.items():
-                    c = n - m_marg.get((i, lvl, e), 0)
-                    if c < 0:
-                        # invariant: every multi-frame pair at (var, level,
-                        # exact) is also in the value-level joint count — a
-                        # negative remainder means the two engines disagree
-                        # and the histogram would be silently corrupted
-                        raise RuntimeError(
-                            "analytic-singles invariant violated at "
-                            f"(var={i}, level={lvl}, exact={e}): joint {n} < "
-                            f"multi marginal {m_marg.get((i, lvl, e), 0)}"
-                        )
-                    if c:
-                        pid = lvl * st[i] + e
-                        observed[pid] = observed.get(pid, 0) + c
-            else:
-                with ThreadPoolExecutor(1) as ex:
-                    fut_exact = ex.submit(self._exact_joint_counts)
-                    observed = {
-                        int(r["pattern_id"]): int(r["cnt"])
-                        for r in pattern_counts(self._ensure_sparse()).collect()
-                    }
-                    exact_joint = fut_exact.result()
-            # exact-only patterns: analytical count = (pairs whose exact
-            # agreement vector is exactly e, any fuzzy) minus (sparse pairs
-            # whose exact bits are e) — no pair materialization
-            sparse_by_e: dict[int, int] = {}
-            for pid, c in observed.items():
-                e = pid % (2**self.k_exact)
-                sparse_by_e[e] = sparse_by_e.get(e, 0) + c
-            for e, total in exact_joint.items():
-                observed[e] = total - sparse_by_e.get(e, 0)
-            if self.blocking_a is None:
-                # positional row ids ship the exact totals for free; natural
-                # keys pay the two count jobs once
-                total_a = self._n_a if self._n_a is not None else self.df_a.count()
-                total_b = self._n_b if self._n_b is not None else self.df_b.count()
-                self._counts = counts_with_complement(
-                    observed, self.k_fuzzy, self.k_exact, total_a, total_b
-                )
-            else:
-                self._counts = self._blocked_complement(observed)
         if self._counts is None:
-            observed = {
-                int(r["pattern_id"]): int(r["cnt"])
-                for r in pattern_counts(self.patterns).collect()
-            }
-            if self.blocking_a is None:
-                total_a = self._n_a if self._n_a is not None else self.df_a.count()
-                total_b = self._n_b if self._n_b is not None else self.df_b.count()
-                self._counts = counts_with_complement(
-                    observed, self.k_fuzzy, self.k_exact, total_a, total_b
-                )
-            else:
-                self._counts = self._blocked_complement(observed)
+            sparse = self._sparse is not None
+            observed = self._sparse_counts() if sparse else _histogram(self.patterns)
+            self._counts = self._u.complement(observed, self.k_fuzzy, self.k_exact)
         return self._counts
 
-    def _blocked_complement(self, observed: dict[int, int]) -> np.ndarray:
-        """Blocked pair universe: sum over blocks |A_b| * |B_b| (the
-        reference's blocking sums per-block Counts, usage.rst)."""
-        from .patterns import n_patterns
-
-        ca = self.df_a.groupBy("__block").count().withColumnsRenamed({"count": "na"})
-        cb = self.df_b.groupBy("__block").count().withColumnsRenamed({"count": "nb"})
-        row = ca.join(cb, "__block").select(
-            F.sum(F.col("na") * F.col("nb")).alias("t")
-        ).collect()[0]
-        total = int(row["t"] or 0)
-        counts = np.zeros(n_patterns(self.k_fuzzy, self.k_exact), dtype=np.int64)
+    def _sparse_counts(self) -> dict[int, int]:
+        """Observed histogram of the sparse-exact engine, exact-only
+        patterns included."""
+        # the exact-value CUBE job reads only the raw a/b frames — it is
+        # independent of the sparse materialization, so submit it from a
+        # thread and let it run CONCURRENTLY with the (much larger)
+        # histogram job instead of serially after it
+        if self._parts is not None:
+            observed, exact_joint = self._analytic_counts()
+        else:
+            with ThreadPoolExecutor(1) as ex:
+                fut_exact = ex.submit(self._exact_joint_counts)
+                observed = _histogram(self._ensure_sparse())
+                exact_joint = fut_exact.result()
+        # exact-only patterns: analytical count = (pairs whose exact
+        # agreement vector is exactly e, any fuzzy) minus (sparse pairs
+        # whose exact bits are e) — no pair materialization
+        sparse_by_e: dict[int, int] = {}
         for pid, c in observed.items():
-            if pid != 0:
-                counts[pid] = c
-        counts[0] = total - counts[1:].sum()
-        return counts
+            e = pid % (2**self.k_exact)
+            sparse_by_e[e] = sparse_by_e.get(e, 0) + c
+        for e, total in exact_joint.items():
+            observed[e] = total - sparse_by_e.get(e, 0)
+        return observed
+
+    def _analytic_counts(self) -> tuple[dict[int, int], dict[int, int]]:
+        """(observed fuzzy-bearing histogram, exact joint counts) under the
+        analytic-singles engine: the big job shrinks to the multi-agreement
+        frame; the single-agreement histogram is reconstructed from the
+        value-level joint counts minus the multi frame's marginals (any
+        pair with a second fuzzy agreement is in the multi frame, so every
+        remaining pair at (var, level) has zeros elsewhere)."""
+        st = strides(self.k_fuzzy, self.k_exact)
+        # submit the (dominant) multi job FIRST: driver-side plan
+        # compilation is effectively serialized across threads, so
+        # whatever compiles first starts executing first — the cube
+        # jobs then compile while the cluster is already busy
+        with ThreadPoolExecutor(3) as ex:
+            fut_m = ex.submit(lambda: _histogram(self._ensure_multi()))
+            fut_exact = ex.submit(self._exact_joint_counts)
+            fut_fuzzy = ex.submit(self._fuzzy_joint_counts)
+            m_hist = fut_m.result()
+            fuzzy_joint = fut_fuzzy.result()
+            exact_joint = fut_exact.result()
+        observed = dict(m_hist)
+        ek = 1 << self.k_exact
+        m_marg: dict[tuple[int, int, int], int] = {}
+        for q, c in m_hist.items():
+            e = q % ek
+            for i in range(self.k_fuzzy):
+                lvl = (q // st[i]) % 3
+                if lvl:
+                    key = (i, lvl, e)
+                    m_marg[key] = m_marg.get(key, 0) + c
+        for (i, lvl, e), n in fuzzy_joint.items():
+            c = n - m_marg.get((i, lvl, e), 0)
+            if c < 0:
+                # invariant: every multi-frame pair at (var, level,
+                # exact) is also in the value-level joint count — a
+                # negative remainder means the two engines disagree
+                # and the histogram would be silently corrupted
+                raise RuntimeError(
+                    "analytic-singles invariant violated at "
+                    f"(var={i}, level={lvl}, exact={e}): joint {n} < "
+                    f"multi marginal {m_marg.get((i, lvl, e), 0)}"
+                )
+            if c:
+                pid = lvl * st[i] + e
+                observed[pid] = observed.get(pid, 0) + c
+        return observed, exact_joint
 
 
-class Deduplication:
+class Deduplication(Comparison):
     """Within-table agreement patterns (reference Deduplication,
-    deduplication.py:716). Pair universe = strict lower triangle; the counts
-    complement row includes the diagonal (deduplication.py:825)."""
+    deduplication.py:716): the Comparison engine over the strict lower
+    triangle of one table. Exact-only pattern counts come from
+    sum(c*(c-1)/2) over value frequencies instead of a self-join that
+    materializes O(n^2/|values|) rows; the counts complement row includes
+    the diagonal (deduplication.py:825)."""
 
     def __init__(
         self,
@@ -1084,212 +1087,11 @@ class Deduplication:
         for c in vars_fuzzy + vars_exact:
             if c not in df.columns:
                 raise ValueError(f"column {c} not in df")
-        self.df, self._n = _with_row_id(df, id_col)
         self.id_col = id_col
         self.vars_fuzzy = vars_fuzzy
         self.vars_exact = vars_exact
-        self.k_fuzzy = len(vars_fuzzy)
-        self.k_exact = len(vars_exact)
-        self.patterns: DataFrame | None = None
-        self._counts: np.ndarray | None = None
-        self._sparse: DataFrame | None = None
-        self._sparse_materialized = False
-        self._pack_bits = None
-        self._d: DataFrame | None = None
-        # analytic-singles engine state (see Comparison._analytic)
-        self._parts: list[tuple[DataFrame, DataFrame]] | None = None
-        self._multi: DataFrame | None = None
-        self._multi_materialized = False
-
-    def _analytic(self) -> bool:
-        """OFF until the triangular analytic counts path exists: fit() used
-        to persist every matched value-pair frame and set self._parts on
-        big dedups, but no Deduplication code consumes them (counts() still
-        materializes the full sparse frame) — default-path memory and a
-        persist job with zero benefit (round-5 ADVICE). Re-enable alongside
-        a triangular _fuzzy_joint_counts/_ensure_multi implementation."""
-        return False
-
-    def _big(self) -> bool:
-        if getattr(self, "_big_cached", None) is None:
-            if self._n is None:
-                # natural-key path: count once and backfill so counts()'s
-                # complement reuses it (see Comparison._big for the safety
-                # argument — the packed-key gate requires id_col is None)
-                self._n = self.df.count()
-            self._big_cached = self._n * (self._n - 1) // 2 >= _SPILL_PAIR_SPACE
-        return self._big_cached
-
-    def fit(
-        self,
-        p: float = 0.1,
-        lower_thr: float = 0.88,
-        upper_thr: float = 0.94,
-        candidates=None,
-        exact_sparse: bool = True,
-    ) -> "Deduplication":
-        """``exact_sparse``: same sparse-exact engine as Comparison.fit, with
-        the triangular pair universe — exact-only pattern counts come from
-        sum(c*(c-1)/2) over value frequencies instead of a self-join that
-        materializes O(n^2/|values|) rows."""
-        if self.patterns is not None:
-            raise RuntimeError("already fitted")
-        d = self.df.select(F.col(_ROW_ID).alias("id"), *self.vars_fuzzy, *self.vars_exact)
-        self._d = d
-        # one aggregation job for every variable's distinct count (see
-        # Comparison.fit) — the dedup candidate universe is vals x vals
-        sizes_d = None
-        if self.k_fuzzy and candidates is None:
-            sizes_d = _batched_distinct_counts(d, self.vars_fuzzy)
-        sparse_path = exact_sparse and self.k_fuzzy >= 1 and 1 <= self.k_exact <= 8
-        fuzzy_frames = []
-        for i, c in enumerate(self.vars_fuzzy):
-            matched, rows = fuzzy_value_parts_dedup(
-                d, c, "id", p, lower_thr, upper_thr, candidates,
-                sizes=(sizes_d[i], sizes_d[i]) if sizes_d else None,
-            )
-            fuzzy_frames.append(join_back_dedup(matched, rows, "id"))
-        self._parts = None  # no dedup analytic engine yet (see _analytic)
-        # same 2^k CUBE-expansion guard as Comparison.fit
-        if sparse_path:
-            self._fit_sparse(d, fuzzy_frames)
-            return self
-        frames = list(fuzzy_frames)
-        for c in self.vars_exact:
-            frames.append(exact_levels_dedup(d, c, "id"))
-        # shared materialization for counts+transform: parquet spill when
-        # big, persist() when small (see _materialize_pairs)
-        self.patterns = _materialize_pairs(
-            assemble_patterns(frames, self.k_fuzzy, self.k_exact), self._big()
-        )
-        return self
-
-    def _fit_sparse(self, d: DataFrame, fuzzy_frames) -> None:
-        st = strides(self.k_fuzzy, self.k_exact)
-        pack = self.id_col is None and _pack_ok(self._n)
-        self._pack_bits = _single_long_bits(
-            self._n, self._n, st, self.k_fuzzy, self.k_exact
-        ) if pack else None
-        sparse = _sparse_fuzzy_union(
-            fuzzy_frames, st, self.k_fuzzy, pack,
-            prepartition=self._big(), pack_bits=self._pack_bits and self._pack_bits[0],
-        )
-        exact_expr = F.lit(0).cast("long")
-        for idx, c in enumerate(self.vars_exact):
-            s = st[self.k_fuzzy + idx]
-            va = d.select(F.col("id").alias("id_a"), F.col(c).cast("string").alias(f"__ea{idx}"))
-            vb = d.select(F.col("id").alias("id_b"), F.col(c).cast("string").alias(f"__eb{idx}"))
-            sparse = sparse.join(va, "id_a").join(vb, "id_b")
-            exact_expr = exact_expr + F.when(
-                F.col(f"__ea{idx}") == F.col(f"__eb{idx}"), F.lit(s).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        sparse = sparse.select(
-            "id_a", "id_b", (F.col("__fz") + exact_expr).alias("pattern_id")
-        )
-        # lazy; first consumer materializes via _ensure_sparse (see
-        # Comparison._fit_sparse for the persist-vs-checkpoint rationale)
-        self._sparse = sparse
-        self.patterns = self._sparse.unionByName(self._exact_only_patterns())
-
-    def _ensure_sparse(self) -> DataFrame:
-        if not self._sparse_materialized:
-            self._sparse = _materialize_pairs(
-                self._sparse, self._big(),
-                pack_bits=self._pack_bits and self._pack_bits[1],
-            )
-            self._sparse_materialized = True
-            self.patterns = self._sparse.unionByName(self._exact_only_patterns())
-        return self._sparse
-
-    def _exact_only_patterns(self) -> DataFrame:
-        st = strides(self.k_fuzzy, self.k_exact)
-        frames = [
-            exact_levels_dedup(self._d, c, "id").select(
-                "id_a", "id_b", (F.col("level") * F.lit(st[self.k_fuzzy + i])).alias("contrib")
-            )
-            for i, c in enumerate(self.vars_exact)
-        ]
-        u = frames[0]
-        for f in frames[1:]:
-            u = u.unionByName(f)
-        allex = u.groupBy("id_a", "id_b").agg(
-            F.sum("contrib").cast("long").alias("pattern_id")
-        )
-        return allex.join(
-            self._sparse.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-        )
-
-    def _exact_joint_counts(self) -> dict[int, int]:
-        """Triangular analogue of Comparison._exact_joint_counts:
-        N>=(S) = sum over joint non-null values of c*(c-1)/2. ONE Spark job:
-        a single CUBE pass aggregates every subset's value histogram, a tiny
-        second aggregation by grouping id sums c*(c-1) (exact longs, halved
-        driver-side — a double division would lose precision past 2^53
-        pairs), one collect. The old loop ran 2^k - 1 serial jobs."""
-        k = self.k_exact
-        if k == 0:
-            return {}
-        vs = [f"v{j}" for j in range(k)]
-        f = self._d.select(
-            *[F.col(c).cast("string").alias(v) for c, v in zip(self.vars_exact, vs)]
-        )
-        g = f.cube(*vs).agg(F.count(F.lit(1)).alias("c"), F.grouping_id().alias("gid"))
-        for j, v in enumerate(vs):
-            in_subset = F.shiftright(F.col("gid"), k - 1 - j).bitwiseAND(F.lit(1)) == 0
-            g = g.where(~in_subset | F.col(v).isNotNull())
-        rows = (
-            g.groupBy("gid")
-            .agg(F.coalesce(F.sum(F.col("c") * (F.col("c") - F.lit(1))), F.lit(0)).alias("t"))
-            .collect()
-        )
-        full = (1 << k) - 1
-        n_ge = {full ^ int(r["gid"]): int(r["t"]) // 2 for r in rows if int(r["gid"]) != full}
-        for t in range(1, 1 << k):
-            n_ge.setdefault(t, 0)
-        exact_counts: dict[int, int] = {}
-        for e in range(1, 2**k):
-            total = 0
-            for t in range(e, 2**k):
-                if (t & e) == e:
-                    total += (-1) ** (bin(t).count("1") - bin(e).count("1")) * n_ge[t]
-            exact_counts[e] = total
-        return exact_counts
-
-    def counts(self) -> np.ndarray:
-        if self.patterns is None:
-            raise RuntimeError("fit() first")
-        if self._counts is None and self._sparse is not None:
-            # overlap the (sparse-independent) exact CUBE job with the
-            # histogram job — see Comparison.counts()
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(1) as ex:
-                fut_exact = ex.submit(self._exact_joint_counts)
-                observed = {
-                    int(r["pattern_id"]): int(r["cnt"])
-                    for r in pattern_counts(self._ensure_sparse()).collect()
-                }
-                exact_joint = fut_exact.result()
-            sparse_by_e: dict[int, int] = {}
-            for pid, c in observed.items():
-                e = pid % (2**self.k_exact)
-                sparse_by_e[e] = sparse_by_e.get(e, 0) + c
-            for e, total in exact_joint.items():
-                observed[e] = total - sparse_by_e.get(e, 0)
-            self._counts = counts_with_complement(
-                observed, self.k_fuzzy, self.k_exact,
-                self._n if self._n is not None else self.df.count(), None,
-            )
-        if self._counts is None:
-            observed = {
-                int(r["pattern_id"]): int(r["cnt"])
-                for r in pattern_counts(self.patterns).collect()
-            }
-            self._counts = counts_with_complement(
-                observed, self.k_fuzzy, self.k_exact,
-                self._n if self._n is not None else self.df.count(), None,
-            )
-        return self._counts
+        self._start(_Triangle(df, vars_fuzzy, vars_exact, id_col))
+        self.df = self._u.df
 
 
 class Linkage:
@@ -1361,10 +1163,7 @@ class Linkage:
                 .coalesce(1)
                 .localCheckpoint(eager=True)
             )
-        if self._comparison is not None and hasattr(self._comparison, "matched_pairs"):
-            base = self._comparison.matched_pairs(admitted)
-        else:
-            base = self.patterns.where(F.col("pattern_id").isin(admitted))
+        base = self._comparison.matched_pairs(admitted)
         # join keys get throwaway names: a post-join rename of id_a would
         # case-insensitively hit a user column suffixed to id_A (a table with
         # an 'id' column) and produce two Index_A columns

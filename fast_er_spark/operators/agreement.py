@@ -333,30 +333,23 @@ def scored_value_pairs(
             >= F.lit(mask_coef - 1e-9) * la.cast("double") * lb.cast("double")
         ).drop("__ma", "__mb")
     if use_jvm:
-        from ..functions.jvm_sketch import jw_level_jvm, jw_level_jvm_bin
+        from ..functions.jvm_sketch import jw_level_jvm_bin
 
-        if os.environ.get("FAST_ER_JW_BIN", "1") != "0":
-            # score BINARY columns: Spark's string->binary cast is the
-            # UTF-8 bytes (exactly what the kernel hashes), and BinaryType
-            # crosses the Java-UDF bridge as byte[] with no conversion —
-            # the String form pays a UTF-16 decode in the bridge plus a
-            # UTF-8 re-encode in the kernel, two transcodes + two
-            # allocations per scored pair (~1.3e9 pairs at 100k x 100k).
-            # FAST_ER_JW_BIN=0 keeps the String kernel for A/B.
-            return (
-                cand.withColumn(
-                    "level",
-                    jw_level_jvm_bin(
-                        F.col("val_a").cast("binary"),
-                        F.col("val_b").cast("binary"),
-                        p, lower, upper,
-                    ),
-                )
-                .where(F.col("level") > 0)
-                .select("val_a", "val_b", "level")
-            )
+        # score BINARY columns: Spark's string->binary cast is the
+        # UTF-8 bytes (exactly what the kernel hashes), and BinaryType
+        # crosses the Java-UDF bridge as byte[] with no conversion —
+        # a String signature pays a UTF-16 decode in the bridge plus a
+        # UTF-8 re-encode in the kernel, two transcodes + two
+        # allocations per scored pair (~1.3e9 pairs at 100k x 100k).
         return (
-            cand.withColumn("level", jw_level_jvm("val_a", "val_b", p, lower, upper))
+            cand.withColumn(
+                "level",
+                jw_level_jvm_bin(
+                    F.col("val_a").cast("binary"),
+                    F.col("val_b").cast("binary"),
+                    p, lower, upper,
+                ),
+            )
             .where(F.col("level") > 0)
             .select("val_a", "val_b", "level")
         )

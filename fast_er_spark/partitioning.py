@@ -14,8 +14,6 @@ cost anything.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 __all__ = ["ensure_min_parallelism"]
@@ -36,13 +34,7 @@ def ensure_min_parallelism(
     predicate is the expensive per-row work: Catalyst pushes predicates
     below a bare repartition, landing the work back in the undersized scan
     stage; the checkpoint is an optimizer barrier that pins the filter above
-    the spread (a handful of small-input rows is all it ever materializes).
-
-    ``FAST_ER_MIN_PARALLELISM=0`` disables the guard everywhere (A/B escape
-    hatch; also the right setting for a deployment whose inputs are always
-    well-split)."""
-    if os.environ.get("FAST_ER_MIN_PARALLELISM", "1") == "0":
-        return df
+    the spread (a handful of small-input rows is all it ever materializes)."""
     if min_parts is None:
         min_parts = df.sparkSession.sparkContext.defaultParallelism
     try:

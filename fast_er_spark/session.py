@@ -12,6 +12,19 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
 
+# local mode = one JVM for driver + all executor threads: size the heap for
+# N concurrent tasks' sort/join buffers or they spill — measured local[32]
+# SLOWER than local[8] at 8g (per-task execution memory 4x smaller). 48g
+# suits the 128 GiB bench box; smaller hosts get half their physical
+# memory, so the JVM is never sized past what the kernel can back
+_MAX_DRIVER_MB = 48 * 1024
+
+
+def _default_driver_memory() -> str:
+    """``min(48g, physical memory / 2)`` as a Spark memory string."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{min(_MAX_DRIVER_MB, phys_mb // 2)}m"
+
 
 def get_spark(
     app_name: str = "fast-er-spark",
@@ -26,16 +39,15 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", os.environ.get("FAST_ER_AQE", "true"))
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # local mode = one JVM for driver + all executor threads: size the
-        # heap for N concurrent tasks' sort/join buffers or they spill —
-        # measured local[32] SLOWER than local[8] at 8g (per-task execution
-        # memory 4x smaller). 48g default on the 128 GiB sandbox.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # scan parallelism: the default 128 MB split makes a ~500 MB stage
         # table read back as ~4 tasks, starving per-row kernel stages (JVM
@@ -49,12 +61,8 @@ def get_spark(
         # pattern-assembly partial agg sees ~500k mostly-unique keys/task,
         # 88% falling through to the slow map) but LOST ~5-10 s on the 100k
         # workload: 232 tasks x 1M-slot map init + page churn exceeds what
-        # the fast path saves when keys barely repeat. Env knob kept for
-        # future A/Bs.
-        .config(
-            "spark.sql.codegen.aggregate.fastHashMap.capacityBit",
-            os.environ.get("FAST_ER_AGG_CAPACITY_BIT", "16"),
-        )
+        # the fast path saves when keys barely repeat.
+        .config("spark.sql.codegen.aggregate.fastHashMap.capacityBit", "16")
         # UI off by default (saves a jetty server per test session); profiling
         # scripts export SPARK_UI_ENABLED=true to read the stage REST API
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))

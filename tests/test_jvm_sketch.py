@@ -115,7 +115,6 @@ def test_jw_level_jvm_parity_with_scalar_reference(spark, jvm):
     1-char window quirk, NUL-bearing, long strings."""
     import random
 
-    from fast_er_spark.functions.jvm_sketch import jw_level_jvm
     from fast_er_spark.functions.jw import discretize, jaro_winkler_bytes
 
     rng = random.Random(31)
@@ -141,10 +140,9 @@ def test_jw_level_jvm_parity_with_scalar_reference(spark, jvm):
     from pyspark.sql import functions as F
 
     got = {
-        r["i"]: (r["lvl"], r["lvl_bin"])
+        r["i"]: r["lvl_bin"]
         for r in df.select(
             "i",
-            jw_level_jvm("a", "b", 0.1, 0.88, 0.94).alias("lvl"),
             jw_level_jvm_bin(
                 F.col("a").cast("binary"), F.col("b").cast("binary"),
                 0.1, 0.88, 0.94,
@@ -155,7 +153,7 @@ def test_jw_level_jvm_parity_with_scalar_reference(spark, jvm):
         want = discretize(
             jaro_winkler_bytes(a.encode("utf-8"), b.encode("utf-8"), 0.1), 0.88, 0.94
         )
-        assert got[i] == (want, want), (a, b, got[i], want)
+        assert got[i] == want, (a, b, got[i], want)
 
 
 def test_substring_anchors_jvm_alignment_invariant(spark, jvm):

@@ -374,7 +374,7 @@ def test_transform_ksi_createdataframe_fallback(spark, monkeypatch):
 
 
 def test_natural_key_row_counts_cached(spark, monkeypatch):
-    """On the natural-key path _big() backfills _n_a/_n_b/_n so the
+    """On the natural-key path _big() backfills the universe's n_a/n_b/n so the
     counts() complement reuses them: each side pays exactly ONE
     DataFrame.count() per fit+counts (it used to pay two — one in the
     size gate, one in the complement)."""
@@ -392,7 +392,7 @@ def test_natural_key_row_counts_cached(spark, monkeypatch):
     monkeypatch.setattr(DataFrame, "count", lambda self: calls.append(1) or orig(self))
     c1 = comp.fit().counts()
     monkeypatch.setattr(DataFrame, "count", orig)
-    assert comp._n_a == len(rows_a) and comp._n_b == len(rows_b)
+    assert comp._u.n_a == len(rows_a) and comp._u.n_b == len(rows_b)
     assert len(calls) == 2  # one per side, gate + complement share it
     # cached totals must produce the same complement as a fresh fit
     comp2 = Comparison(
@@ -405,4 +405,4 @@ def test_natural_key_row_counts_cached(spark, monkeypatch):
     monkeypatch.setattr(DataFrame, "count", lambda self: calls.append(1) or orig(self))
     dd.fit().counts()
     monkeypatch.setattr(DataFrame, "count", orig)
-    assert dd._n == len(rows_a) and len(calls) == 1
+    assert dd._u.n == len(rows_a) and len(calls) == 1
