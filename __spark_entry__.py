@@ -101,51 +101,38 @@ def q_minhash_lsh_dedup(spark, sf_dir):
     family, and verification fixes precision exactly, so the result equals
     the brute-force oracle regardless of the signature scheme — the query
     uses the compiled executor-JVM fused OPH+shingle kernel (ONE
-    tokenization pass feeds both candidate generation and verification)
-    when a JDK is present and the Arrow kperm kernel otherwise."""
-    from fast_er_spark.functions.jvm_sketch import jvm_available
+    tokenization pass feeds both candidate generation and verification)."""
     from fast_er_spark.operators.lsh import lsh_candidate_pairs
     from fast_er_spark.operators.verify import verify_pairs_jaccard
 
     docs = _t(spark, sf_dir, "documents")
-    if jvm_available(spark):
-        ss = _fused_sketch_frame(docs, "doc_id", "text", num_perm=128, n=NGRAM, seed=42)
-        cand = lsh_candidate_pairs(
-            docs, "doc_id", "text", num_perm=128, bands=32, rows_per_band=4,
-            n=NGRAM, seed=42, presigned=ss.select("id", "minhash"),
-        )
-        pairs = verify_pairs_jaccard(
-            cand, docs, "doc_id", "text", n=NGRAM, threshold=0.8,
-            shingles=ss.select("id", "sh"),
-        )
-    else:
-        cand = lsh_candidate_pairs(
-            docs, "doc_id", "text", num_perm=128, bands=32, rows_per_band=4, n=NGRAM,
-            seed=42, scheme="kperm",
-        )
-        pairs = verify_pairs_jaccard(cand, docs, "doc_id", "text", n=NGRAM, threshold=0.8)
+    ss = _fused_sketch_frame(docs, "doc_id", "text", num_perm=128, n=NGRAM, seed=42)
+    cand = lsh_candidate_pairs(
+        docs, "doc_id", "text", num_perm=128, bands=32, rows_per_band=4,
+        n=NGRAM, seed=42, presigned=ss.select("id", "minhash"),
+    )
+    pairs = verify_pairs_jaccard(
+        cand, docs, "doc_id", "text", n=NGRAM, threshold=0.8,
+        shingles=ss.select("id", "sh"),
+    )
     return pairs.select("id_a", "id_b", "inter_size", "union_size")
 
 
 def q_token_jaccard_pairs(spark, sf_dir):
     """Brute-force-by-content n-gram Jaccard pairs: shingle explode +
     self-equi-join on shingle + count — no LSH, the exact path. Shingle
-    hashes come from the executor-JVM kernel when a JDK is present (the
-    output is hash-family-independent: counts of equal-shingle pairs), the
-    Arrow pandas hasher otherwise."""
+    hashes come from the executor-JVM kernel (the output is
+    hash-family-independent: counts of equal-shingle pairs)."""
     from fast_er_spark.functions.jvm_sketch import ensure_jvm_udfs, shingle_hashes_jvm
-    from fast_er_spark.operators.verify import shingle_hashes
     from fast_er_spark.partitioning import ensure_min_parallelism
 
     # single-file scans plan one task; spread the shingle kernel + explode
     # across the cores (no-op at corpus scale — see partitioning.py)
     docs = ensure_min_parallelism(_t(spark, sf_dir, "documents"))
-    sh_col = (
-        shingle_hashes_jvm("text", NGRAM)
-        if ensure_jvm_udfs(spark)
-        else shingle_hashes("text", NGRAM)
+    ensure_jvm_udfs(spark)
+    sh = docs.select(
+        F.col("doc_id").alias("id"), F.explode(shingle_hashes_jvm("text", NGRAM)).alias("g")
     )
-    sh = docs.select(F.col("doc_id").alias("id"), F.explode(sh_col).alias("g"))
     # df-cap stays a count WINDOW (measured A/B this round, strict
     # alternation with steal filtering: window 1.67 s vs hot-key
     # anti-join 2.08-2.52 s at sf0.1 — the anti-join's extra checkpoint +
@@ -336,14 +323,12 @@ def q_linkage_transform(spark, sf_dir):
 
 # ------------------------------------------------------- text analysis ops
 def q_tokenstats(spark, sf_dir):
-    """token/distinct-token counts via the one-pass text_stats kernel when a
-    JDK is present (jvm/TextUdfs.java), else the expression fallback —
-    values identical, oracle green either way."""
-    from fast_er_spark.functions.jvm_sketch import ensure_jvm_udfs
+    """token/distinct-token counts via the one-pass text_stats kernel
+    (jvm/TextUdfs.java)."""
     from fast_er_spark.functions.text import text_stats
 
     docs = _t(spark, sf_dir, "documents")
-    st = text_stats(F.col("text"), jvm=ensure_jvm_udfs(spark))
+    st = text_stats(F.col("text"))
     return docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         st[0].alias("n_tokens"),
@@ -352,11 +337,10 @@ def q_tokenstats(spark, sf_dir):
 
 
 def q_quality_scores(spark, sf_dir):
-    from fast_er_spark.functions.jvm_sketch import ensure_jvm_udfs
     from fast_er_spark.functions.text import quality_score_from_stats, text_stats
 
     docs = _t(spark, sf_dir, "documents")
-    st = text_stats(F.col("text"), jvm=ensure_jvm_udfs(spark))
+    st = text_stats(F.col("text"))
     return docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         quality_score_from_stats(st).alias("quality"),
@@ -386,13 +370,12 @@ def q_quality_gopher(spark, sf_dir):
 
 
 def q_doc_fingerprint(spark, sf_dir):
-    from fast_er_spark.functions.jvm_sketch import ensure_jvm_udfs
     from fast_er_spark.functions.text import rolling_fingerprint
 
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        rolling_fingerprint(F.col("text"), jvm=ensure_jvm_udfs(spark)).alias("fp"),
+        rolling_fingerprint(F.col("text")).alias("fp"),
     )
 
 
@@ -405,7 +388,7 @@ _LANG_MARKERS = {
 }
 
 
-def _lang_score_cols(spark, text_col):
+def _lang_score_cols(text_col):
     """Aliased per-language marker-count Columns (``s_<lang>``) — project
     these FIRST, then apply ``_lang_pred_from_scores`` over the aliased
     columns: inlining the kernel call into the argmax chain duplicates the
@@ -413,13 +396,12 @@ def _lang_score_cols(spark, text_col):
     alone measured ~0.5 s per query build. Shared by q_lang_id and
     q_curation_pipeline (the composition computes the route inline instead
     of re-scanning documents and joining on doc_id)."""
-    from fast_er_spark.functions.jvm_sketch import ensure_jvm_udfs
     from fast_er_spark.functions.text import lang_marker_counts
 
     langs = list(_LANG_MARKERS)
-    # both engines lowercase internally (F.lower in the expression path,
-    # Locale.ROOT toLowerCase in the kernel)
-    cnts = lang_marker_counts(text_col, _LANG_MARKERS, jvm=ensure_jvm_udfs(spark))
+    # the kernel lowercases internally (Locale.ROOT toLowerCase), like the
+    # F.lower of the DuckDB twin
+    cnts = lang_marker_counts(text_col, _LANG_MARKERS)
     return [cnts[i].alias(f"s_{lg}") for i, lg in enumerate(langs)]
 
 
@@ -436,13 +418,12 @@ def _lang_pred_from_scores():
 
 def q_lang_id(spark, sf_dir):
     """Marker-token language-ID heuristic; argmax with fixed priority order.
-    JVM path: ALL languages counted in one tokenization pass
-    (jvm/TextUdfs.java::MarkerCounts) vs one interpreted F.filter pass per
-    language on the expression fallback — identical counts either way."""
+    ALL languages are counted in one tokenization pass
+    (jvm/TextUdfs.java::MarkerCounts)."""
     docs = _t(spark, sf_dir, "documents")
     scored = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        *_lang_score_cols(spark, F.col("text")),
+        *_lang_score_cols(F.col("text")),
     )
     return scored.select("doc_id", _lang_pred_from_scores().alias("pred_lang"))
 
@@ -450,18 +431,16 @@ def q_lang_id(spark, sf_dir):
 def q_lang_id_ngram(spark, sf_dir):
     """Statistical language-ID: Cavnar-Trenkle character-n-gram rank
     profiles (top-300 1..3-grams, out-of-place distance) over 9 languages —
-    the production-grade upgrade over marker-token counting. JVM kernel
-    when a JDK is present, identical-algorithm Arrow fallback otherwise.
-    Rows-only: the rank-profile pipeline is not expressible as a DuckDB
-    one-liner; parity + accuracy are pytest-gated
+    the production-grade upgrade over marker-token counting, one compiled
+    pass per doc. Rows-only: the rank-profile pipeline is not expressible
+    as a DuckDB one-liner; parity + accuracy are pytest-gated
     (tests/test_sketch_functions.py)."""
-    from fast_er_spark.functions.jvm_sketch import ensure_jvm_udfs
     from fast_er_spark.functions.text import lang_id_ngram
 
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        lang_id_ngram(F.col("text"), jvm=ensure_jvm_udfs(spark)).alias("pred_lang"),
+        lang_id_ngram(F.col("text")).alias("pred_lang"),
     )
 
 
@@ -791,7 +770,6 @@ def q_curation_pipeline(spark, sf_dir):
     lang_id, minhash_lsh_dedup, cc_clusters); the composition is oracled
     end-to-end too."""
     from fast_er_spark.functions.text import gopher_stats
-    from fast_er_spark.functions.jvm_sketch import jvm_available
     from fast_er_spark.operators.components import connected_components
     from fast_er_spark.operators.lsh import lsh_candidate_pairs
     from fast_er_spark.operators.verify import verify_pairs_jaccard
@@ -816,31 +794,24 @@ def q_curation_pipeline(spark, sf_dir):
         # re-scanning documents and equi-joining the routes back on doc_id
         # (one scan + one broadcast join removed; values identical). Two
         # projections on purpose: see _lang_score_cols.
-        .select("doc_id", "text", *_lang_score_cols(spark, F.col("text")))
+        .select("doc_id", "text", *_lang_score_cols(F.col("text")))
         .select("doc_id", "text", _lang_pred_from_scores().alias("pred_lang"))
         # three consumers (LSH, verify, lang join-backs + CC nodes): without
         # materialization the gopher/lang gates recompute per consumer
         .localCheckpoint(eager=False)
     )
-    if jvm_available(spark):
-        # spread=False: kept is already 32-way from the barrier repartition,
-        # and the guard's partition probe would execute the AQE upstream
-        ss = _fused_sketch_frame(kept, "doc_id", "text", num_perm=128, n=NGRAM,
-                                 seed=42, spread=False)
-        cand = lsh_candidate_pairs(
-            kept, "doc_id", "text", num_perm=128, bands=32, rows_per_band=4,
-            n=NGRAM, seed=42, presigned=ss.select("id", "minhash"),
-        )
-        pairs = verify_pairs_jaccard(
-            cand, kept, "doc_id", "text", n=NGRAM, threshold=0.8,
-            shingles=ss.select("id", "sh"),
-        )
-    else:
-        cand = lsh_candidate_pairs(
-            kept, "doc_id", "text", num_perm=128, bands=32, rows_per_band=4,
-            n=NGRAM, seed=42, scheme="kperm",
-        )
-        pairs = verify_pairs_jaccard(cand, kept, "doc_id", "text", n=NGRAM, threshold=0.8)
+    # spread=False: kept is already 32-way from the barrier repartition,
+    # and the guard's partition probe would execute the AQE upstream
+    ss = _fused_sketch_frame(kept, "doc_id", "text", num_perm=128, n=NGRAM,
+                             seed=42, spread=False)
+    cand = lsh_candidate_pairs(
+        kept, "doc_id", "text", num_perm=128, bands=32, rows_per_band=4,
+        n=NGRAM, seed=42, presigned=ss.select("id", "minhash"),
+    )
+    pairs = verify_pairs_jaccard(
+        cand, kept, "doc_id", "text", n=NGRAM, threshold=0.8,
+        shingles=ss.select("id", "sh"),
+    )
     la = kept.select(F.col("doc_id").alias("id_a"), F.col("pred_lang").alias("la"))
     lb = kept.select(F.col("doc_id").alias("id_b"), F.col("pred_lang").alias("lb"))
     edges = (

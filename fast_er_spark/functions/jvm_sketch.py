@@ -9,9 +9,9 @@ loads session-added jars into both the driver's and the executors'
 classloaders, so the same path works under local, local-cluster, and
 spark-submit deployments (the jar travels like any --jars artifact).
 
-Everything degrades cleanly: no javac / compile failure / registration
-failure => ``jvm_available() is False`` and callers fall back to the Python
-kernels, so no environment can break the import path.
+These kernels are the only runtime path: the driver needs JDK 17
+(``javac`` + ``jar``), and ``ensure_jvm_udfs`` raises when it cannot build
+or register them. Executors only need the jar, which Spark ships to them.
 """
 
 from __future__ import annotations
@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = [
-    "jvm_available",
     "ensure_jvm_udfs",
     "oph_signature_jvm",
     "sig_and_shingles_jvm",
@@ -87,111 +86,81 @@ def _src_digest() -> str:
     return h.hexdigest()[:16]
 
 
-def _build_jar() -> str | None:
+def _build_jar() -> str:
     """Compile the Java kernels once per SOURCE VERSION (not per process):
     the jar is cached under ~/.cache/fast_er_jvm/<sha256(sources)>/ and
     reused by every later process — javac cost (~3-4 s) otherwise lands in
     every cold run (measured in the reference-workload fit phase). The
     cache write is atomic (temp file + rename), so concurrent first runs
-    race benignly."""
+    race benignly. Raises RuntimeError when the driver has no JDK or the
+    sources do not compile."""
     global _jar_path
     if _jar_path and os.path.exists(_jar_path):
         return _jar_path
-    if shutil.which("javac") is None or shutil.which("jar") is None:
-        return None
-    try:
-        cache_dir = os.path.join(
-            os.path.expanduser("~"), ".cache", "fast_er_jvm", _src_digest()
+    missing = [t for t in ("javac", "jar") if shutil.which(t) is None]
+    if missing:
+        raise RuntimeError(
+            "fast_er_spark compiles its JVM kernels on the driver and needs "
+            f"JDK 17 there; not on PATH: {', '.join(missing)}"
         )
-        cached = os.path.join(cache_dir, "fast_er_udfs.jar")
-        if os.path.exists(cached):
-            _jar_path = cached
-            return cached
+    cache_dir = os.path.join(os.path.expanduser("~"), ".cache", "fast_er_jvm", _src_digest())
+    cached = os.path.join(cache_dir, "fast_er_udfs.jar")
+    if not os.path.exists(cached):
         out = tempfile.mkdtemp(prefix="fast_er_jvm_")
-        subprocess.run(
-            # explicit -encoding: sources are UTF-8; a C/POSIX-locale javac
-            # otherwise defaults to US-ASCII and rejects the comments
-            ["javac", "-encoding", "utf8", "-cp", _spark_jars_cp(), "-d", out, *_SRCS],
-            check=True, capture_output=True, timeout=120,
-        )
+        # explicit -encoding: sources are UTF-8; a C/POSIX-locale javac
+        # otherwise defaults to US-ASCII and rejects the comments
+        _run(["javac", "-encoding", "utf8", "-cp", _spark_jars_cp(), "-d", out, *_SRCS], 120)
         jar = os.path.join(out, "fast_er_udfs.jar")
-        classes = [f for f in os.listdir(out) if f.endswith(".class")]
         cmd = ["jar", "cf", jar]
-        for c in classes:
-            cmd += ["-C", out, c]
-        subprocess.run(cmd, check=True, capture_output=True, timeout=60)
+        for c in os.listdir(out):
+            if c.endswith(".class"):
+                cmd += ["-C", out, c]
+        _run(cmd, 60)
         try:
             os.makedirs(cache_dir, exist_ok=True)
             tmp = cached + f".tmp{os.getpid()}"
             shutil.copyfile(jar, tmp)
             os.replace(tmp, cached)
-            _jar_path = cached
-            return cached
-        except Exception:
-            _jar_path = jar  # cache write failed; session still works
-            return jar
-    except Exception:
-        return None
+        except OSError:
+            cached = jar  # cache write failed; session still works
+    _jar_path = cached
+    return cached
+
+
+def _run(cmd: list[str], timeout: int) -> None:
+    r = subprocess.run(cmd, capture_output=True, text=True, timeout=timeout)
+    if r.returncode:
+        raise RuntimeError(
+            f"{cmd[0]} failed building the fast_er_spark JVM kernels "
+            f"(exit {r.returncode}):\n{r.stderr.strip()}"
+        )
 
 
 def ensure_jvm_udfs(spark: SparkSession) -> bool:
-    """Compile + ADD JAR + register the Java UDF on this session (idempotent).
-    Returns False (no raise) when the JVM path is unavailable."""
-    try:
-        if spark in _registered:
-            return True
-    except TypeError:
-        pass  # un-weakref-able session: fall through and re-register (idempotent)
-    jar = _build_jar()
-    if jar is None:
-        return False
-    try:
-        spark.sql(f"ADD JAR '{jar}'")
-        spark.udf.registerJavaFunction(
-            _UDF_NAME, "FastErUdfs", T.ArrayType(T.LongType())
-        )
-        spark.udf.registerJavaFunction(_JW_BIN_UDF_NAME, "JwUdfs$Bin", T.IntegerType())
-        spark.udf.registerJavaFunction(
-            _CHAR_MASK_UDF_NAME, "JwUdfs$CharMask", T.LongType()
-        )
-        spark.udf.registerJavaFunction(
-            _SHINGLE_UDF_NAME, "FastErUdfs$ShingleHashes", T.ArrayType(T.LongType())
-        )
-        spark.udf.registerJavaFunction(
-            _SIG_SH_UDF_NAME,
-            "FastErUdfs$SigAndShingles",
-            T.ArrayType(T.ArrayType(T.LongType())),
-        )
-        spark.udf.registerJavaFunction(
-            _INTER_UNION_UDF_NAME, "FastErUdfs$SortedInterUnion", T.LongType()
-        )
-        spark.udf.registerJavaFunction(
-            _ANCHOR_UDF_NAME, "FastErUdfs$SubstringAnchors", T.ArrayType(T.LongType())
-        )
-        spark.udf.registerJavaFunction(_LCS_UDF_NAME, "LcsUdfs", T.IntegerType())
-        spark.udf.registerJavaFunction(
-            _TEXT_STATS_UDF_NAME, "TextUdfs", T.ArrayType(T.LongType())
-        )
-        spark.udf.registerJavaFunction(
-            _ROLLING_FP_UDF_NAME, "TextUdfs$RollingFp", T.LongType()
-        )
-        spark.udf.registerJavaFunction(
-            _MARKER_COUNTS_UDF_NAME, "TextUdfs$MarkerCounts", T.ArrayType(T.LongType())
-        )
-        spark.udf.registerJavaFunction(
-            _NGRAM_LANG_UDF_NAME, "TextUdfs$NgramLangId", T.StringType()
-        )
-        try:
-            _registered.add(spark)
-        except TypeError:
-            pass
+    """Compile + ADD JAR + register the Java UDFs on this session
+    (idempotent). Returns True; raises RuntimeError when the kernels cannot
+    be built (see _build_jar)."""
+    if spark in _registered:
         return True
-    except Exception:
-        return False
-
-
-def jvm_available(spark: SparkSession) -> bool:
-    return ensure_jvm_udfs(spark)
+    jar = _build_jar()
+    spark.sql(f"ADD JAR '{jar}'")
+    for name, cls, rtype in (
+        (_UDF_NAME, "FastErUdfs", T.ArrayType(T.LongType())),
+        (_JW_BIN_UDF_NAME, "JwUdfs$Bin", T.IntegerType()),
+        (_CHAR_MASK_UDF_NAME, "JwUdfs$CharMask", T.LongType()),
+        (_SHINGLE_UDF_NAME, "FastErUdfs$ShingleHashes", T.ArrayType(T.LongType())),
+        (_SIG_SH_UDF_NAME, "FastErUdfs$SigAndShingles", T.ArrayType(T.ArrayType(T.LongType()))),
+        (_INTER_UNION_UDF_NAME, "FastErUdfs$SortedInterUnion", T.LongType()),
+        (_ANCHOR_UDF_NAME, "FastErUdfs$SubstringAnchors", T.ArrayType(T.LongType())),
+        (_LCS_UDF_NAME, "LcsUdfs", T.IntegerType()),
+        (_TEXT_STATS_UDF_NAME, "TextUdfs", T.ArrayType(T.LongType())),
+        (_ROLLING_FP_UDF_NAME, "TextUdfs$RollingFp", T.LongType()),
+        (_MARKER_COUNTS_UDF_NAME, "TextUdfs$MarkerCounts", T.ArrayType(T.LongType())),
+        (_NGRAM_LANG_UDF_NAME, "TextUdfs$NgramLangId", T.StringType()),
+    ):
+        spark.udf.registerJavaFunction(name, cls, rtype)
+    _registered.add(spark)
+    return True
 
 
 def oph_signature_jvm(
@@ -270,8 +239,8 @@ def substring_anchors_jvm(
 
 def lcs_len_jvm(a_col, b_col, cap: int = 0) -> Column:
     """Exact longest-common-substring length in the executor JVM
-    (jvm/LcsUdfs.java — algorithm-identical to operators.substring.lcs_len,
-    so spans match the Python path exactly; cap<=0 = uncapped). The caller
+    (jvm/LcsUdfs.java — algorithm-identical to oracle/kernels.py::lcs_len,
+    so spans match the Python reference exactly; cap<=0 = uncapped). The caller
     must have run ensure_jvm_udfs(spark) first."""
     a = F.col(a_col) if isinstance(a_col, str) else a_col
     b = F.col(b_col) if isinstance(b_col, str) else b_col
@@ -281,8 +250,8 @@ def lcs_len_jvm(a_col, b_col, cap: int = 0) -> Column:
 def text_stats_jvm(text_col) -> Column:
     """[token_count, distinct_token_count, n_codepoints, n_kept_codepoints]
     as array<long>, one JIT-compiled pass per doc (jvm/TextUdfs.java) —
-    exact value parity with the functions.text expression stack, so the
-    DuckDB oracle twins hold on either engine. Null text -> null. The
+    exact value parity with the expression twin in oracle/kernels.py, so
+    the DuckDB oracle twins hold. Null text -> null. The
     caller must have run ensure_jvm_udfs(spark) first."""
     col = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.call_udf(_TEXT_STATS_UDF_NAME, col)
@@ -290,8 +259,8 @@ def text_stats_jvm(text_col) -> Column:
 
 def rolling_fp_jvm(text_col) -> Column:
     """Rolling polynomial fingerprint (acc*31 + codepoint mod 1e9+7) — the
-    compiled twin of functions.text.rolling_fingerprint's interpreted
-    per-character F.aggregate (~8.4k docs/s at sf0.1; VERDICT r3 wrong #2).
+    compiled twin of the interpreted per-character F.aggregate in
+    oracle/kernels.py (~8.4k docs/s at sf0.1; VERDICT r3 wrong #2).
     The caller must have run ensure_jvm_udfs(spark) first."""
     col = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.call_udf(_ROLLING_FP_UDF_NAME, col)

@@ -32,7 +32,6 @@ __all__ = [
     "jw_batch",
     "discretize",
     "char_mask_bytes",
-    "char_mask_batch",
 ]
 
 
@@ -315,19 +314,6 @@ def char_mask_bytes(s: bytes) -> int:
     if m >= 1 << 63:
         m -= 1 << 64
     return m
-
-
-def char_mask_batch(vals: pd.Series) -> pd.Series:
-    """char_mask_bytes over a string Series (nulls -> 0). Runs on DISTINCT
-    values only (tens of k rows), so the per-element Python loop is off the
-    hot path by construction."""
-    out = np.zeros(len(vals), dtype=np.int64)
-    v = vals.to_numpy(dtype=object)
-    for i, x in enumerate(v):
-        if x is None or (isinstance(x, float) and pd.isna(x)):
-            continue
-        out[i] = char_mask_bytes(str(x).encode("utf-8"))
-    return pd.Series(out)
 
 
 def discretize(score: float, lower: float = 0.88, upper: float = 0.94) -> int:

@@ -1,16 +1,25 @@
-"""Text-analysis Column expressions — all JVM-side Spark built-ins.
+"""Text-analysis Columns — no Python UDFs.
 
-Everything here stays inside whole-stage codegen (no Python UDFs): token
-counting, quality scoring, language-ID scoring, and a rolling-hash document
-fingerprint via ``F.aggregate``. Each has an exact ANSI-SQL twin used by the
-driver's DuckDB oracle (see __spark_entry__.oracle_sql).
+Token counting, quality scoring and the Gopher rules are Spark built-in
+expressions. ``text_stats``, ``rolling_fingerprint``, ``lang_marker_counts``
+and ``lang_id_ngram`` run compiled one-pass kernels (jvm/TextUdfs.java) and
+register them on the active session; their expression and Python twins live
+in oracle/kernels.py. Each oracled query has an exact ANSI-SQL twin used by
+the driver's DuckDB oracle (see __spark_entry__.oracle_sql).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+
+from .jvm_sketch import (
+    ensure_jvm_udfs,
+    marker_counts_jvm,
+    ngram_lang_id_jvm,
+    rolling_fp_jvm,
+    text_stats_jvm,
+)
 
 __all__ = [
     "gopher_stats",
@@ -86,48 +95,22 @@ def lang_marker_score(col: Column, markers: list[str]) -> Column:
     return F.size(F.filter(tokens(F.lower(col)), lambda t: t.isin(markers)))
 
 
-def rolling_fingerprint(col: Column, jvm: bool = False) -> Column:
+def rolling_fingerprint(col: Column) -> Column:
     """Polynomial rolling hash over the text's code points:
-    acc = (acc * 31 + codepoint) mod 1e9+7.
-    DuckDB twin: list_reduce over string_split_regex (see oracle_sql).
-
-    ``jvm=True`` (requires a prior ensure_jvm_udfs(spark)) runs the
-    compiled one-pass kernel (jvm/TextUdfs.java::RollingFp); the default is
-    the pure-expression form — F.aggregate over a per-CHARACTER array,
-    which Catalyst interprets (~8.4k docs/s at sf0.1; use the JVM path on
-    any hot path). Values are identical: F.split(col, "") yields one
-    element per code point and F.ascii returns the code point."""
-    if jvm:
-        from .jvm_sketch import rolling_fp_jvm
-
-        return rolling_fp_jvm(col)
-    chars = F.filter(F.split(col, ""), lambda c: c != F.lit(""))
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(FP_BASE) + F.ascii(c)) % F.lit(FP_MOD),
-    )
+    acc = (acc * 31 + codepoint) mod 1e9+7, one compiled pass per doc
+    (jvm/TextUdfs.java::RollingFp). DuckDB twin: list_reduce over
+    string_split_regex (see oracle_sql)."""
+    ensure_jvm_udfs(SparkSession.active())
+    return rolling_fp_jvm(col)
 
 
-def text_stats(col: Column, jvm: bool = False) -> Column:
+def text_stats(col: Column) -> Column:
     """array<long> [token_count, distinct_token_count, n_chars, n_kept]
     where n_kept counts characters surviving regexp_replace(col,
     "[^0-9A-Za-z\\s]", "") — the four inputs of every text-quality ratio,
-    in ONE pass on the JVM path (vs one interpreted HOF pass per stat as
-    expressions). Exact value parity between the engines; null -> null."""
-    if jvm:
-        from .jvm_sketch import text_stats_jvm
-
-        return text_stats_jvm(col)
-    return F.when(
-        col.isNotNull(),
-        F.array(
-            token_count(col).cast("long"),
-            distinct_token_count(col).cast("long"),
-            F.length(col).cast("long"),
-            F.length(F.regexp_replace(col, r"[^0-9A-Za-z\s]", "")).cast("long"),
-        ),
-    )
+    in ONE compiled pass (jvm/TextUdfs.java); null -> null."""
+    ensure_jvm_udfs(SparkSession.active())
+    return text_stats_jvm(col)
 
 
 def quality_score_from_stats(stats: Column) -> Column:
@@ -623,13 +606,10 @@ def ngram_profile_spec(profiles: dict) -> str:
     return "\x03".join(lg + "\x02" + "\x01".join(ngs) for lg, ngs in profiles.items())
 
 
-def _rank_lookup(profiles: dict) -> dict:
-    """{lang: {ngram: rank}} — built ONCE and reused per document (building
-    these dicts per call dominated the Arrow fallback's per-row cost)."""
-    return {lg: {g: r for r, g in enumerate(ngs)} for lg, ngs in profiles.items()}
-
-
-def _predict_from_ranks(text: str | None, ranks: dict, k: int) -> str | None:
+def predict_lang_ngram_py(text: str | None, profiles: dict, k: int = _NGRAM_K) -> str | None:
+    """Pure-Python twin of the JVM kernel (identical algorithm + tie
+    rules for BMP text): blank/None -> None; ties -> first language in
+    profile insertion order."""
     if text is None:
         return None
     counts = _ngram_counts(text)
@@ -637,39 +617,20 @@ def _predict_from_ranks(text: str | None, ranks: dict, k: int) -> str | None:
         return None
     doc = _rank_profile(counts, k)
     best, best_d = None, None
-    for lg, rank in ranks.items():
+    for lg, ngs in profiles.items():
+        rank = {g: r for r, g in enumerate(ngs)}
         d = sum(abs(r - rank[g]) if g in rank else k for r, g in enumerate(doc))
         if best_d is None or d < best_d:
             best, best_d = lg, d
     return best
 
 
-def predict_lang_ngram_py(text: str | None, profiles: dict, k: int = _NGRAM_K) -> str | None:
-    """Pure-Python twin of the JVM kernel (identical algorithm + tie
-    rules for BMP text): blank/None -> None; ties -> first language in
-    profile insertion order. For batch use, hoist _rank_lookup(profiles)
-    and call _predict_from_ranks (the pandas_udf fallback does)."""
-    return _predict_from_ranks(text, _rank_lookup(profiles), k)
-
-
-def lang_id_ngram(col: Column, profiles: dict | None = None, jvm: bool = False) -> Column:
+def lang_id_ngram(col: Column, profiles: dict | None = None) -> Column:
     """Predicted language code per document via Cavnar-Trenkle rank
     profiles — the statistical upgrade over marker-token counting
-    (lang_marker_counts). JVM path: one compiled pass per doc; fallback:
-    Arrow pandas_udf running the identical Python twin."""
-    profiles = profiles or ngram_lang_profiles()
-    if jvm:
-        from .jvm_sketch import ngram_lang_id_jvm
-
-        return ngram_lang_id_jvm(col, ngram_profile_spec(profiles))
-
-    ranks = _rank_lookup(profiles)
-
-    @F.pandas_udf("string")
-    def pred(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: _predict_from_ranks(t, ranks, _NGRAM_K))
-
-    return pred(col)
+    (lang_marker_counts). One compiled pass per doc."""
+    ensure_jvm_udfs(SparkSession.active())
+    return ngram_lang_id_jvm(col, ngram_profile_spec(profiles or ngram_lang_profiles()))
 
 
 def gopher_stats(
@@ -747,8 +708,8 @@ def marker_spec(markers: dict) -> str:
     """Serialize {lang: [marker, ...]} for the JVM marker-counts kernel
     (insertion order preserved — counts come back in this order).
 
-    Markers are DEDUPED per language (the expression path's isin has set
-    semantics; a duplicated word must not double-count on the JVM path)
+    Markers are DEDUPED per language (the expression twin's isin has set
+    semantics; a duplicated word must not double-count in the kernel)
     and validated against the spec delimiters — an unescapable ':' ',' '|'
     or control separator inside a marker would silently corrupt the parsed
     word lists."""
@@ -764,17 +725,9 @@ def marker_spec(markers: dict) -> str:
     )
 
 
-def lang_marker_counts(col: Column, markers: dict, jvm: bool = False) -> Column:
+def lang_marker_counts(col: Column, markers: dict) -> Column:
     """array<long> of marker-token counts, one per language in ``markers``
-    insertion order. JVM path: ONE tokenization pass for all languages
-    (jvm/TextUdfs.java::MarkerCounts); expression path: one interpreted
-    F.filter pass per language (the round-3 lang_id cost)."""
-    if jvm:
-        from .jvm_sketch import marker_counts_jvm
-
-        return marker_counts_jvm(col, marker_spec(markers))
-    # null text -> NULL (not an array of nulls), matching the JVM kernel
-    return F.when(
-        col.isNotNull(),
-        F.array(*[lang_marker_score(col, mk).cast("long") for mk in markers.values()]),
-    )
+    insertion order, in ONE tokenization pass for all languages
+    (jvm/TextUdfs.java::MarkerCounts); null text -> null."""
+    ensure_jvm_udfs(SparkSession.active())
+    return marker_counts_jvm(col, marker_spec(markers))

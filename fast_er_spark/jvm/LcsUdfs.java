@@ -2,7 +2,7 @@
  * Exact longest-common-substring length (suffix automaton of the shorter
  * string, O(|a| + |b|)), computed inside the executor JVM.
  *
- * Algorithm mirrors operators/substring.py::lcs_len exactly - same
+ * Algorithm mirrors oracle/kernels.py::lcs_len exactly - same
  * automaton construction, same cap short-circuit (the verifier only needs
  * span >= min_span, and cur_len grows by 1, so the short-circuit returns
  * exactly cap) - so the two engines produce identical span lengths. Both

@@ -1,6 +1,7 @@
 /**
  * JVM text-analysis kernels: one-pass replacements for the interpreted
- * higher-order-function Column expressions in functions/text.py.
+ * higher-order-function Column expressions kept as test twins in
+ * oracle/kernels.py.
  *
  * The expression versions (F.aggregate over per-CHARACTER arrays for the
  * rolling fingerprint, repeated F.filter passes over token arrays for
@@ -16,7 +17,7 @@
  *   code point; F.length counts code points.
  * - tokenization is Java regex \s+ = ASCII whitespace only ([ \t\n\x0B\f\r]),
  *   NOT the Python str.split set used by the sketch kernels (FastErUdfs) —
- *   the text.py expressions are defined via F.split(col, r"\s+").
+ *   the expression twins are defined via F.split(col, r"\s+").
  * - lowercasing for marker matching follows F.lower (UTF8String.toLowerCase,
  *   locale-independent) = String.toLowerCase(Locale.ROOT) for this data.
  */
@@ -113,7 +114,7 @@ public class TextUdfs implements UDF1<String, ArrayList<Long>> {
 
     /**
      * Polynomial rolling hash acc = (acc * 31 + codePoint) mod 1e9+7 over
-     * every code point — exactly functions/text.py::rolling_fingerprint
+     * every code point — exactly oracle/kernels.py::rolling_fingerprint
      * (F.aggregate over F.split(col, "") with F.ascii, which the probe
      * shows yields code points). Empty -> 0 (the expression folds an empty
      * filtered array to the 0 seed); null -> null.

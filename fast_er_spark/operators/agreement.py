@@ -29,12 +29,10 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.jw import jw_batch
+from ..functions.jvm_sketch import char_mask_jvm, ensure_jvm_udfs, jw_level_jvm_bin
 from ..patterns import strides
 
 __all__ = [
@@ -48,35 +46,6 @@ __all__ = [
     "assemble_patterns",
     "pattern_counts",
 ]
-
-
-def _jw_levels_udf(p: float, lower: float, upper: float):
-    @F.pandas_udf(T.IntegerType())
-    def jw_level(a: pd.Series, b: pd.Series) -> pd.Series:
-        s = jw_batch(a, b, p)
-        return pd.Series(((s >= lower).astype(int) + (s >= upper).astype(int)))
-
-    # jw_level IS deterministic, but the marker stops Catalyst substituting
-    # the UDF expression into both the level>0 Filter and the output Project
-    # — which evaluates the whole JW batch TWICE (two stacked
-    # ArrowEvalPython stages, verified in the formatted plan)
-    return jw_level.asNondeterministic()
-
-
-def _char_mask_udf():
-    """Arrow-batched char_mask_bytes for the no-JDK fallback; only ever
-    evaluated on the DISTINCT value frames (pre-cross), so the Python hop
-    is tens of k rows, not the pair space."""
-    from ..functions.jw import char_mask_batch
-
-    @F.pandas_udf(T.LongType())
-    def cm(v: pd.Series) -> pd.Series:
-        return char_mask_batch(v)
-
-    def mask(c):
-        return cm(c)
-
-    return mask
 
 
 def char_lsh_value_candidates(
@@ -133,14 +102,11 @@ def char_lsh_value_candidates(
 # overhead (signatures, banding, hot buckets) costs more than it saves —
 # especially on high-baseline-similarity value sets where LSH prunes little.
 AUTO_LSH_PAIRS_PER_CORE = 32_000_000
-# JW UDF stage sizing: pairs/partition keeps tasks ~1-2 s on one core
-# without fanning a small cross into hundreds of tiny scheduled stages.
-# The Python Arrow kernel scores ~0.25-0.4M pairs/s/core; the compiled JVM
-# kernel is ~10x that, so its tasks carry proportionally more pairs or the
-# stage drowns in per-task scheduling overhead (measured: a 5.6e8-pair
-# cross at 250k pairs/task = 2240 tasks x ~50 ms overhead per fuzzy var).
-PAIRS_PER_PARTITION = 250_000
-PAIRS_PER_PARTITION_JVM = 3_000_000
+# JW kernel stage sizing: pairs/partition keeps tasks ~1-2 s on one core
+# without fanning a small cross into hundreds of tiny scheduled stages
+# (measured: a 5.6e8-pair cross at 250k pairs/task = 2240 tasks x ~50 ms
+# of scheduling overhead per fuzzy var).
+PAIRS_PER_PARTITION = 3_000_000
 # Below this implied pair count the char-multiset mask prefilter is skipped
 # even when enabled: the JVM kernel clears ~1e8 pairs/s on 32 cores, so at
 # <3e7 pairs the whole unpruned pair space costs less than the mask's fixed
@@ -156,9 +122,8 @@ def default_value_candidates(
     vals_b: DataFrame,
     triangular: bool = False,
     pair_budget: int | None = None,
-    pairs_per_partition: int = PAIRS_PER_PARTITION,
     sizes: tuple | None = None,
-    mask_col=None,
+    mask: bool = False,
 ) -> DataFrame:
     """Adaptive candidate frame (val_a, val_b) for fuzzy scoring.
 
@@ -198,17 +163,17 @@ def default_value_candidates(
             # double its level contribution in assemble_patterns
         )
     else:
-        n_part = max(1, -(-(na * nb) // pairs_per_partition))
-        # mask_col (scored_value_pairs): the 64-bit char-multiset sketch is
+        n_part = max(1, -(-(na * nb) // PAIRS_PER_PARTITION))
+        # mask (scored_value_pairs): the 64-bit char-multiset sketch is
         # computed ONCE per distinct value here, pre-cross, and rides the
         # cross join as one long per side — the bound filter above the
         # cross then rejects most pairs before the JW kernel ever runs
         mask_min = int(
             os.environ.get("FAST_ER_JW_MASK_MIN_PAIRS", MASK_MIN_PAIRS)
         )
-        if mask_col is not None and na * nb >= mask_min:
-            vals_a = vals_a.withColumn("__ma", mask_col(F.col("val_a")))
-            vals_b = vals_b.withColumn("__mb", mask_col(F.col("val_b")))
+        if mask and na * nb >= mask_min:
+            vals_a = vals_a.withColumn("__ma", char_mask_jvm(F.col("val_a").cast("binary")))
+            vals_b = vals_b.withColumn("__mb", char_mask_jvm(F.col("val_b").cast("binary")))
         # broadcast whichever side is SMALLER: the budget bounds na*nb, not
         # the sides individually, so a 10 x 1e8 shape stays under budget
         # while a fixed-side broadcast would ship 1e8 strings (past Spark's
@@ -229,7 +194,6 @@ def scored_value_pairs(
     upper: float,
     candidates: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
     triangular: bool = False,
-    engine: str = "auto",
     sizes: tuple | None = None,
 ) -> DataFrame:
     """(val_a, val_b, level) for level > 0, over distinct value frames.
@@ -239,18 +203,11 @@ def scored_value_pairs(
     cross product under the per-core pair budget, char-LSH
     pruning above it.
 
-    ``engine``: 'auto' scores with the byte-exact executor-JVM kernel
-    (jvm/JwUdfs.java — float-op-order identical to the Python kernels, so
-    levels can never differ) when a JDK is present, else the Arrow pandas
-    path; 'python' forces the pandas path; 'jvm' requires the JVM path.
+    Levels come from the byte-exact executor-JVM kernel (jvm/JwUdfs.java —
+    float-op-order identical to functions.jw.jaro_winkler_bytes, so levels
+    can never differ from the Python reference).
     """
-    use_jvm = False
-    if engine in ("auto", "jvm"):
-        from ..functions.jvm_sketch import ensure_jvm_udfs
-
-        use_jvm = ensure_jvm_udfs(vals_a.sparkSession)
-        if engine == "jvm" and not use_jvm:
-            raise RuntimeError("no JDK available for engine='jvm'")
+    ensure_jvm_udfs(vals_a.sparkSession)
     # char-multiset bound filter (sound, never drops a level>0 pair):
     # the greedy matcher's match count m <= |multiset byte intersection|
     # <= bit_count(mask_a & mask_b) (collisions only overcount), and
@@ -271,24 +228,8 @@ def scored_value_pairs(
         and candidates is None
         and os.environ.get("FAST_ER_JW_MASK", "1") != "0"
     )
-    mask_fn = None
-    if use_mask:
-        if use_jvm:
-            from ..functions.jvm_sketch import char_mask_jvm
-
-            def mask_fn(c):
-                return char_mask_jvm(c.cast("binary"))
-        else:
-            mask_fn = _char_mask_udf()
     if candidates is None:
-        cand = default_value_candidates(
-            vals_a, vals_b, triangular,
-            pairs_per_partition=(
-                PAIRS_PER_PARTITION_JVM if use_jvm else PAIRS_PER_PARTITION
-            ),
-            sizes=sizes,
-            mask_col=mask_fn,
-        )
+        cand = default_value_candidates(vals_a, vals_b, triangular, sizes=sizes, mask=use_mask)
     else:
         cand = candidates(vals_a, vals_b)
         if triangular:
@@ -332,30 +273,19 @@ def scored_value_pairs(
             bound.cast("double") * (la + lb).cast("double")
             >= F.lit(mask_coef - 1e-9) * la.cast("double") * lb.cast("double")
         ).drop("__ma", "__mb")
-    if use_jvm:
-        from ..functions.jvm_sketch import jw_level_jvm_bin
-
-        # score BINARY columns: Spark's string->binary cast is the
-        # UTF-8 bytes (exactly what the kernel hashes), and BinaryType
-        # crosses the Java-UDF bridge as byte[] with no conversion —
-        # a String signature pays a UTF-16 decode in the bridge plus a
-        # UTF-8 re-encode in the kernel, two transcodes + two
-        # allocations per scored pair (~1.3e9 pairs at 100k x 100k).
-        return (
-            cand.withColumn(
-                "level",
-                jw_level_jvm_bin(
-                    F.col("val_a").cast("binary"),
-                    F.col("val_b").cast("binary"),
-                    p, lower, upper,
-                ),
-            )
-            .where(F.col("level") > 0)
-            .select("val_a", "val_b", "level")
-        )
-    lvl = _jw_levels_udf(p, lower, upper)
+    # score BINARY columns: Spark's string->binary cast is the UTF-8 bytes
+    # (exactly what the kernel hashes), and BinaryType crosses the Java-UDF
+    # bridge as byte[] with no conversion — a String signature pays a UTF-16
+    # decode in the bridge plus a UTF-8 re-encode in the kernel, two
+    # transcodes + two allocations per scored pair (~1.3e9 pairs at
+    # 100k x 100k).
     return (
-        cand.withColumn("level", lvl(F.col("val_a"), F.col("val_b")))
+        cand.withColumn(
+            "level",
+            jw_level_jvm_bin(
+                F.col("val_a").cast("binary"), F.col("val_b").cast("binary"), p, lower, upper
+            ),
+        )
         .where(F.col("level") > 0)
         .select("val_a", "val_b", "level")
     )

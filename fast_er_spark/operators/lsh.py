@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.jvm_sketch import ensure_jvm_udfs, oph_signature_jvm, sig_and_shingles_jvm
 from ..functions.minhash import minhash_batch, oph_signature_batch
 
 __all__ = [
@@ -62,10 +63,8 @@ def fused_sketch_frame(
     LSH signature and the verify-stage shingle hashes, halving the dominant
     map-side cost of the sketch-then-verify path. Values are bit-identical
     to the split kernels (parity-tested). The caller owns materialization
-    (checkpoint it or write it to a stage table before fanning out);
-    requires ensure_jvm_udfs(spark) to have succeeded."""
-    from ..functions.jvm_sketch import sig_and_shingles_jvm
-
+    (checkpoint it or write it to a stage table before fanning out)."""
+    ensure_jvm_udfs(df.sparkSession)
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")).where(
         F.col("__t").isNotNull() & (F.length(F.trim(F.col("__t"))) > 0)
     )
@@ -91,21 +90,15 @@ def with_minhash_signature(
       (Arrow pandas_udf) — O(shingles) instead of O(K * shingles) per doc.
     - ``scheme='oph_jvm'``: the same OPH algorithm compiled INSIDE the
       executor JVM (functions/jvm_sketch.py): no Arrow transfer, no Python
-      worker — the fastest signature path where a JDK is present
-      (word mode only; falls back to 'oph' when javac is unavailable).
+      worker — the fastest signature path (word mode only).
 
     Every scheme keeps E[slot match] = Jaccard; the THREE families produce
     mutually incompatible signatures — never mix them in one index."""
     if scheme == "oph_jvm":
-        from ..functions.jvm_sketch import ensure_jvm_udfs, oph_signature_jvm
-
         if mode != "word":
             raise ValueError("oph_jvm supports word mode only")
-        if ensure_jvm_udfs(df.sparkSession):
-            return df.withColumn(
-                out_col, oph_signature_jvm(text_col, num_perm, n, seed)
-            )
-        scheme = "oph"  # no JDK in this environment
+        ensure_jvm_udfs(df.sparkSession)
+        return df.withColumn(out_col, oph_signature_jvm(text_col, num_perm, n, seed))
     batch = {"kperm": minhash_batch, "oph": oph_signature_batch}[scheme]
 
     @F.pandas_udf(T.ArrayType(T.LongType()))

@@ -2,8 +2,9 @@
 stand-in for a distributed suffix array, SURVEY.md §7 step 5).
 
 Anchor selection is CONTENT-DEFINED (winnowing-style): every position's
-``anchor_len``-char substring is hashed (JVM xxhash64) and a position is an
-anchor iff ``hash % density == 0``. Selection depends only on the bytes, so a
+``anchor_len``-char window is hashed (a rolling hash in the executor JVM,
+jvm/FastErUdfs.java::SubstringAnchors) and a position is an anchor iff
+``hash % density == 0``. Selection depends only on the characters, so a
 verbatim span copied between documents selects the SAME anchor positions in
 both — alignment-invariant, unlike fixed-stride sampling (a copied span at an
 arbitrary offset would never line up with the other doc's stride grid).
@@ -12,25 +13,22 @@ Expected anchor rate is 1/density per position; a shared span of s chars is
 missed with probability (1 - 1/density)^(s - anchor_len + 1) — at the default
 (32, 8) a 150-char copied span is missed with p < 2e-7.
 
-Docs sharing an anchor become containment-edge candidates via one equi-join.
-All JVM-side (sequence/transform/filter/xxhash64); no Python. This catches
-the duplication mode MinHash misses: a long verbatim block embedded in
-otherwise-different pages (whole-doc Jaccard low).
-
-Scale note: the per-row transient array is ~8 bytes x doc length (one hash
-per position). For multi-MB pages move the rolling hash into mapInPandas;
-for web-page text columns this JVM form wins (stays in codegen).
+Docs sharing an anchor become containment-edge candidates via one equi-join;
+candidates are then verified with an exact longest-common-substring check
+(jvm/LcsUdfs.java). No Python on either path. This catches the duplication
+mode MinHash misses: a long verbatim block embedded in otherwise-different
+pages (whole-doc Jaccard low).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-__all__ = ["doc_anchors", "anchor_pairs", "lcs_len", "verify_anchor_pairs"]
+from ..functions.jvm_sketch import ensure_jvm_udfs, lcs_len_jvm, substring_anchors_jvm
+
+__all__ = ["doc_anchors", "anchor_pairs", "verify_anchor_pairs"]
 
 
 def doc_anchors(
@@ -40,57 +38,34 @@ def doc_anchors(
     anchor_len: int = 32,
     density: int = 8,
     selector: str = "hash",
-    engine: str = "auto",
 ) -> DataFrame:
-    """(id, anchor) — distinct content-selected anchors (fixed-width
-    substrings, or their hashes on the JVM path).
+    """(id, anchor) — distinct content-selected anchors.
 
-    ``selector='hash'``: winnowing selection, position kept iff
-    hash(window) % density == 0 (pipeline default). With ``engine='auto'``
-    and a JDK present this runs as a true O(n) ROLLING hash in the executor
-    JVM (functions/jvm_sketch.py) emitting anchor HASHES — ~10x the
-    interpreted per-position substring+xxhash64 expression; anchors only
-    join against anchors from the same function and candidates are
-    LCS-verified downstream, so the family switch is internal.
-    ``engine='python'`` forces the declarative expression path.
+    ``selector='hash'`` (pipeline default): winnowing selection, position
+    kept iff hash(window) % density == 0, as a true O(n) ROLLING hash in the
+    executor JVM (functions/jvm_sketch.py) emitting anchor HASHES; anchors
+    only join against anchors from the same function and candidates are
+    LCS-verified downstream.
     ``selector='token_initial'``: position kept iff it starts a whitespace
     token whose first letter is in a..e — equally content-defined
     (alignment-invariant) and expressible in ANSI SQL, used by the
-    DuckDB-oracled driver query.
+    DuckDB-oracled driver query; emits the fixed-width substrings.
     """
     text = F.col(text_col)
-    if selector == "hash" and engine in ("auto", "jvm"):
-        from ..functions.jvm_sketch import ensure_jvm_udfs, substring_anchors_jvm
-
-        if ensure_jvm_udfs(df.sparkSession):
-            return df.select(
-                F.col(id_col).alias("id"),
-                F.explode(
-                    substring_anchors_jvm(text, anchor_len, density)
-                ).alias("anchor"),
-            )
-        if engine == "jvm":
-            raise RuntimeError("no JDK available for engine='jvm'")
-    positions = F.sequence(F.lit(1), F.greatest(F.length(text) - F.lit(anchor_len - 1), F.lit(1)))
     if selector == "hash":
-        hashed = F.transform(
-            positions,
-            lambda p: F.struct(
-                p.alias("p"), F.xxhash64(F.substring(text, p, anchor_len)).alias("h")
-            ),
+        ensure_jvm_udfs(df.sparkSession)
+        return df.select(
+            F.col(id_col).alias("id"),
+            F.explode(substring_anchors_jvm(text, anchor_len, density)).alias("anchor"),
         )
-        selected = F.transform(
-            F.filter(hashed, lambda s: F.pmod(s["h"], F.lit(density)) == 0),
-            lambda s: s["p"],
-        )
-    elif selector == "token_initial":
-        selected = F.filter(
-            positions,
-            lambda p: ((p == 1) | (F.substring(text, p - 1, 1) == " "))
-            & F.substring(text, p, 1).between("a", "e"),
-        )
-    else:
+    if selector != "token_initial":
         raise ValueError("selector must be 'hash' or 'token_initial'")
+    positions = F.sequence(F.lit(1), F.greatest(F.length(text) - F.lit(anchor_len - 1), F.lit(1)))
+    selected = F.filter(
+        positions,
+        lambda p: ((p == 1) | (F.substring(text, p - 1, 1) == " "))
+        & F.substring(text, p, 1).between("a", "e"),
+    )
     anchors = F.array_distinct(
         F.transform(selected, lambda p: F.substring(text, p, anchor_len))
     )
@@ -108,7 +83,6 @@ def anchor_pairs(
     density: int = 8,
     max_anchor_freq: int = 1000,
     selector: str = "hash",
-    engine: str = "auto",
 ) -> DataFrame:
     """(id_a, id_b) candidate containment pairs, id_a > id_b.
 
@@ -122,7 +96,7 @@ def anchor_pairs(
     # scan would pin it to one core (measured 2.56 s -> 1.09 s at sf0.1 from
     # this guard alone; no-op once the scan outnumbers the cores)
     df = ensure_min_parallelism(df)
-    anchors = doc_anchors(df, id_col, text_col, anchor_len, density, selector, engine)
+    anchors = doc_anchors(df, id_col, text_col, anchor_len, density, selector)
     # frequency + min holder in one shuffle (window over the anchor key)
     w = Window.partitionBy("anchor")
     anchors = anchors.withColumn("afreq", F.count(F.lit(1)).over(w)).withColumn(
@@ -146,70 +120,12 @@ def anchor_pairs(
     return clique.select("id_a", "id_b").unionByName(star).dropDuplicates(["id_a", "id_b"])
 
 
-def lcs_len(a: str, b: str, cap: int | None = None) -> int:
-    """Longest common substring length via a suffix automaton of the shorter
-    string — O(|a| + |b|), so verification stays in the same cost class as
-    the candidate's Jaccard check (linear in page size). ``cap`` short-
-    circuits as soon as a span of that length is found (the verifier only
-    needs span >= min_span, not the exact maximum)."""
-    if not a or not b:
-        return 0
-    if len(a) > len(b):
-        a, b = b, a
-    nxt: list[dict] = [{}]
-    link = [-1]
-    ln = [0]
-    last = 0
-    for ch in a:
-        cur = len(ln)
-        nxt.append({})
-        link.append(0)
-        ln.append(ln[last] + 1)
-        p = last
-        while p != -1 and ch not in nxt[p]:
-            nxt[p][ch] = cur
-            p = link[p]
-        if p != -1:
-            q = nxt[p][ch]
-            if ln[p] + 1 == ln[q]:
-                link[cur] = q
-            else:
-                clone = len(ln)
-                nxt.append(dict(nxt[q]))
-                link.append(link[q])
-                ln.append(ln[p] + 1)
-                while p != -1 and nxt[p].get(ch) == q:
-                    nxt[p][ch] = clone
-                    p = link[p]
-                link[q] = clone
-                link[cur] = clone
-        last = cur
-    best = cur_len = 0
-    v = 0
-    for ch in b:
-        while v and ch not in nxt[v]:
-            v = link[v]
-            cur_len = ln[v]
-        if ch in nxt[v]:
-            v = nxt[v][ch]
-            cur_len += 1
-            if cur_len > best:
-                best = cur_len
-                if cap is not None and best >= cap:
-                    return best
-        else:
-            v = 0
-            cur_len = 0
-    return best
-
-
 def verify_anchor_pairs(
     pairs: DataFrame,
     docs: DataFrame,
     id_col: str,
     text_col: str,
     min_span: int = 96,
-    engine: str = "auto",
 ) -> DataFrame:
     """Keep anchor-candidate pairs whose texts REALLY share a span of at
     least ``min_span`` chars (exact longest-common-substring check).
@@ -217,36 +133,15 @@ def verify_anchor_pairs(
     Anchor collision is candidate evidence only: one shared 32-char
     boilerplate sentence below the frequency cap would otherwise merge two
     unrelated pages into one cluster (round-1 VERDICT 'What's wrong' #5).
-    Verification is per-candidate (Arrow-batched, linear in page size) —
-    the same sketch-then-verify contract as the Jaccard path.
+    Verification is per-candidate and linear in page size (a suffix
+    automaton compiled in the executor JVM, jvm/LcsUdfs.java) — the same
+    sketch-then-verify contract as the Jaccard path.
 
     Returns (id_a, id_b, span_len) with span_len capped at min_span (the
     automaton short-circuits once the threshold is reached).
-    ``engine='auto'`` runs the algorithm-identical compiled automaton in the
-    executor JVM when a JDK is present (measured ~8 ms/pair Python vs
-    sub-millisecond compiled); 'python' forces the Arrow pandas path.
     """
-    span_col = None
-    if engine in ("auto", "jvm"):
-        from ..functions.jvm_sketch import ensure_jvm_udfs, lcs_len_jvm
-
-        if ensure_jvm_udfs(docs.sparkSession):
-            span_col = lcs_len_jvm(F.col("t_a"), F.col("t_b"), cap=min_span)
-        elif engine == "jvm":
-            raise RuntimeError("no JDK available for engine='jvm'")
-    if span_col is None:
-
-        @F.pandas_udf(T.IntegerType())
-        def span(a: pd.Series, b: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    0 if x is None or y is None else lcs_len(x, y, cap=min_span)
-                    for x, y in zip(a, b)
-                ]
-            )
-
-        span_col = span(F.col("t_a"), F.col("t_b"))
-
+    ensure_jvm_udfs(docs.sparkSession)
+    span_col = lcs_len_jvm(F.col("t_a"), F.col("t_b"), cap=min_span)
     t = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
     a = t.select(F.col("id").alias("id_a"), F.col("t").alias("t_a"))
     b = t.select(F.col("id").alias("id_b"), F.col("t").alias("t_b"))

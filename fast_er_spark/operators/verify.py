@@ -2,9 +2,9 @@
 
 After LSH proposes candidates, each pair is verified with the EXACT measure
 (n-gram Jaccard, or Jaro-Winkler for short linkage fields). Shingle-Jaccard
-verification runs entirely JVM-side: shingle arrays are built with
-F.transform over a token sequence and compared with
-array_intersect/array_union — no Python in the verify hot path at all.
+verification runs entirely JVM-side: sorted shingle hashes come from the
+compiled kernel (functions/jvm_sketch.py) and are compared with one merge
+scan per pair — no Python in the verify hot path at all.
 
 This mirrors the sketch-then-verify contract of BASELINE.json north_rule:
 LSH fixes RECALL (tuned bands), verification fixes PRECISION (exact measure),
@@ -14,18 +14,16 @@ holds.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.jvm_sketch import ensure_jvm_udfs, shingle_hashes_jvm, sorted_inter_union_jvm
 from ..functions.jw import jw_batch
-from ..functions.shingles import hash_shingles_batch
 
 __all__ = [
     "shingle_array",
-    "shingle_hashes",
     "jaccard_columns",
     "verify_pairs_jaccard",
     "verify_pairs_jw",
@@ -51,25 +49,6 @@ def shingle_array(col: Column, n: int = 3) -> Column:
     )
 
 
-def shingle_hashes(text_col: str, n: int = 3, mode: str = "word", seed: int = 42) -> Column:
-    """Distinct shingle hashes as array<long> via the vectorized batch
-    hasher (functions.shingles.hash_shingles_batch).
-
-    Why a pandas UDF and not shingle_array + transform(xxhash64): Spark's
-    higher-order array functions execute INTERPRETED (outside whole-stage
-    codegen) — measured 16s to build 48k docs' shingle arrays JVM-side vs
-    <1s for the Arrow-batched numpy path. The UDF is the fast path here.
-    """
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sh(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [h.view(np.int64).tolist() for h in hash_shingles_batch(texts, n, mode, seed)]
-        )
-
-    return sh(F.col(text_col))
-
-
 def jaccard_columns(sh_a: Column, sh_b: Column) -> tuple[Column, Column]:
     """(intersection_size, union_size) of two shingle arrays."""
     inter = F.size(F.array_intersect(sh_a, sh_b))
@@ -85,7 +64,6 @@ def verify_pairs_jaccard(
     n: int = 3,
     threshold: float = 0.8,
     hashed: bool = True,
-    engine: str = "auto",
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Keep candidate pairs with exact shingle-Jaccard >= threshold.
@@ -97,14 +75,10 @@ def verify_pairs_jaccard(
     threshold test uses integer arithmetic (inter * 10^6 >= thr * 10^6 *
     union) so it is float-representation independent.
 
-    ``hashed=True`` (default) intersects 64-bit shingle hashes instead of
-    shingle strings — less shuffle and a vectorized build path; a
+    ``hashed=True`` (default) intersects 64-bit shingle hashes computed in
+    the executor JVM (functions/jvm_sketch.py) instead of shingle strings —
+    less shuffle, and the sorted arrays take the merge-scan size kernel; a
     cross-shingle hash collision (2^-64 per pair) is the only divergence.
-    ``engine='auto'`` computes the hashes in the executor JVM when a JDK is
-    present (functions/jvm_sketch.py — no Arrow transfer; the hash family
-    differs from the Python path but both sides of every pair use the same
-    one, and intersection/union sizes are family-independent);
-    'python' forces the Arrow pandas hasher.
 
     ``shingles``: a precomputed (id, sh) frame (e.g. from the fused
     signature+shingle kernel — jvm_sketch.py::sig_and_shingles_jvm — which
@@ -116,32 +90,14 @@ def verify_pairs_jaccard(
     The doc->shingles frame is checkpointed once: it feeds BOTH join sides,
     and without materialization Spark recomputes it per side (measured 2x).
     """
+    ensure_jvm_udfs(docs.sparkSession)
     if shingles is not None:
-        from ..functions.jvm_sketch import ensure_jvm_udfs
-
-        sh = shingles.select("id", "sh")
-        return _verify_join(
-            pairs, sh, threshold, merge_scan=ensure_jvm_udfs(docs.sparkSession)
-        )
-    jvm_hashes = False
-    if hashed:
-        sh_col = None
-        if engine in ("auto", "jvm"):
-            from ..functions.jvm_sketch import ensure_jvm_udfs, shingle_hashes_jvm
-
-            if ensure_jvm_udfs(docs.sparkSession):
-                sh_col = shingle_hashes_jvm(text_col, n)
-                jvm_hashes = True
-            elif engine == "jvm":
-                raise RuntimeError("no JDK available for engine='jvm'")
-        if sh_col is None:
-            sh_col = shingle_hashes(text_col, n)
-    else:
-        sh_col = shingle_array(F.col(text_col), n)
+        return _verify_join(pairs, shingles.select("id", "sh"), threshold, merge_scan=True)
+    sh_col = shingle_hashes_jvm(text_col, n) if hashed else shingle_array(F.col(text_col), n)
     sh = docs.select(F.col(id_col).alias("id"), sh_col.alias("sh")).localCheckpoint(
         eager=False
     )
-    return _verify_join(pairs, sh, threshold, merge_scan=jvm_hashes)
+    return _verify_join(pairs, sh, threshold, merge_scan=hashed)
 
 
 def _verify_join(
@@ -160,44 +116,17 @@ def _verify_join(
     a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     thr_num = int(round(threshold * 1_000_000))
+    j = pairs.join(a, "id_a").join(b, "id_b")
     if merge_scan:
-        from ..functions.jvm_sketch import sorted_inter_union_jvm
-
         iu = sorted_inter_union_jvm(F.col("sh_a"), F.col("sh_b"))
-        return (
-            pairs.join(a, "id_a")
-            .join(b, "id_b")
-            .withColumn("__iu", iu)
-            .where(F.col("__iu") >= 0)
-            .withColumn("inter_size", F.shiftrightunsigned(F.col("__iu"), 32))
-            .withColumn(
-                "union_size", F.col("__iu").bitwiseAND(F.lit((1 << 32) - 1))
-            )
-            .where(
-                (F.col("union_size") > 0)
-                & (
-                    F.col("inter_size") * 1_000_000
-                    >= F.lit(thr_num) * F.col("union_size")
-                )
-            )
-            .withColumn(
-                "jaccard", F.round(F.col("inter_size") / F.col("union_size"), 6)
-            )
-            .select(
-                "id_a",
-                "id_b",
-                *[c for c in pairs.columns if c not in ("id_a", "id_b")],
-                "inter_size",
-                "union_size",
-                "jaccard",
-            )
-        )
-    inter, union = jaccard_columns(F.col("sh_a"), F.col("sh_b"))
+        j = j.withColumn("__iu", iu).where(F.col("__iu") >= 0)
+        inter = F.shiftrightunsigned(F.col("__iu"), 32)
+        union = F.col("__iu").bitwiseAND(F.lit((1 << 32) - 1))
+    else:
+        inter, union = (c.cast("long") for c in jaccard_columns(F.col("sh_a"), F.col("sh_b")))
     return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("inter_size", inter.cast("long"))
-        .withColumn("union_size", union.cast("long"))
+        j.withColumn("inter_size", inter)
+        .withColumn("union_size", union)
         .where(
             (F.col("union_size") > 0)
             & (F.col("inter_size") * 1_000_000 >= F.lit(thr_num) * F.col("union_size"))

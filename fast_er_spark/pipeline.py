@@ -22,7 +22,7 @@ from __future__ import annotations
 import hashlib
 import json
 import time
-from dataclasses import asdict, dataclass, field, replace
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,14 +47,14 @@ class DedupConfig:
     bands: int = 32
     rows_per_band: int = 4
     ngram: int = 3
+    # word shingles only: verification (verify_pairs_jaccard) always
+    # shingles words, so another mode would sketch one set and verify another
     mode: str = "word"
-    # 'auto' resolves to 'oph_jvm' (the compiled executor-JVM kernel, ~6x
-    # the Python signature stage, PERF.md round 3) when a JDK is present,
-    # else 'oph' (one-permutation hashing + rotation densification, ~2x
-    # 'kperm'); the signature UDF is the dominant corpus-scale cost.
-    # Signature families are mutually incompatible — a resumed run must use
-    # the same resolved scheme (the resolved value enters fingerprint()).
-    sketch: str = "auto"
+    # 'oph_jvm' is the compiled executor-JVM kernel (~6x the Python
+    # signature stage, PERF.md round 3); 'oph' and 'kperm' are the Arrow
+    # kernels. Signature families are mutually incompatible, and the value
+    # enters fingerprint(), so a resumed run never mixes them.
+    sketch: str = "oph_jvm"
     threshold: float = 0.8
     seed: int = 42
     max_bucket_size: int = 2000
@@ -71,6 +71,13 @@ class DedupConfig:
     # within identical-text groups, expensive stages shrink by the exact-dup
     # fraction (30-50% on web corpora)
     pregroup_exact: bool = False
+
+    def __post_init__(self):
+        if self.mode != "word":
+            raise ValueError(
+                f"DedupConfig(mode={self.mode!r}): only mode='word' is supported — "
+                "verification compares word shingles, so the LSH sketch must too"
+            )
 
     def fingerprint(self) -> str:
         return hashlib.sha256(json.dumps(asdict(self), sort_keys=True).encode()).hexdigest()[:16]
@@ -106,16 +113,6 @@ class DedupPipeline:
     ):
         self.spark = spark
         self.config = config or DedupConfig()
-        if self.config.sketch == "auto":
-            # resolve BEFORE fingerprinting: signature families are mutually
-            # incompatible, so a resume must bind to the resolved scheme
-            # (an 'auto' fingerprint would silently mix families when the
-            # same workdir is reused from a JDK-less machine)
-            from .functions.jvm_sketch import jvm_available
-
-            self.config = replace(
-                self.config, sketch="oph_jvm" if jvm_available(spark) else "oph"
-            )
         self.catalog = StageCatalog(spark, workdir, iceberg_catalog)
         self.fp = self.config.fingerprint()
         self.results: list[StageResult] = []

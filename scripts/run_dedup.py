@@ -50,10 +50,10 @@ def main() -> None:
     ap.add_argument("--substring-min-span", type=int, default=96,
                     help="exact shared-span (LCS) a substring candidate must "
                          "prove before it may merge clusters; 0 disables")
-    ap.add_argument("--sketch", choices=["auto", "oph", "oph_jvm", "kperm"],
-                    default="auto",
-                    help="MinHash family: one-permutation hashing (2x "
-                         "throughput) or classic k-perm")
+    ap.add_argument("--sketch", choices=["oph_jvm", "oph", "kperm"],
+                    default="oph_jvm",
+                    help="MinHash family: compiled JVM one-permutation hashing, "
+                         "Arrow one-permutation hashing, or classic k-perm")
     ap.add_argument("--pregroup-exact", action="store_true",
                     help="collapse byte-identical texts before the sketch path")
     ap.add_argument("--no-resume", action="store_true")

@@ -1,65 +1,91 @@
-"""JVM OPH signature kernel: registration, determinism, unbiased Jaccard
-estimation, and the same >=0.99 recall gate as the Python families through
-the identical band/verify path. All tests skip cleanly where no JDK is
-present (the kernel itself falls back to the Python 'oph' scheme there)."""
+"""JVM kernels: build/registration errors, determinism, unbiased Jaccard
+estimation, parity with the expression and Python twins in
+oracle/kernels.py, and the same >=0.99 recall gate as the Python families
+through the identical band/verify path. The kernels are the only runtime
+path, so these tests run wherever the suite does (JDK 17 required)."""
+
+import weakref
 
 import numpy as np
 import pytest
 
+from oracle import kernels
 from oracle.reference import jaccard_dup_pairs, shingle_set
 
 
-@pytest.fixture(scope="module")
-def jvm(spark):
-    from fast_er_spark.functions.jvm_sketch import ensure_jvm_udfs
-
-    if not ensure_jvm_udfs(spark):
-        pytest.skip("no JDK (javac/jar) in this environment")
-    return True
-
-
-def test_python_fallback_when_no_jdk(spark, monkeypatch):
-    """Every engine='auto' surface must silently run the Python path when
-    the jar cannot be built (JDK-less driver) — simulated by forcing the
-    builder to fail."""
+def test_ensure_jvm_udfs_raises_without_javac(spark, monkeypatch):
+    """A driver without a JDK must fail loudly, naming the missing tool."""
     import fast_er_spark.functions.jvm_sketch as js
 
-    monkeypatch.setattr(js, "_build_jar", lambda: None)
-    monkeypatch.setattr(js, "_registered", set())
-    assert js.ensure_jvm_udfs(spark) is False
+    monkeypatch.setattr(js, "_jar_path", None)
+    monkeypatch.setattr(js, "_registered", weakref.WeakSet())
+    monkeypatch.setattr(js.shutil, "which", lambda name: None)
+    with pytest.raises(RuntimeError, match="javac"):
+        js.ensure_jvm_udfs(spark)
 
+
+def test_ensure_jvm_udfs_surfaces_javac_errors(spark, monkeypatch, tmp_path):
+    """Sources that do not compile must raise with javac's own diagnostics
+    in the message, and must leave nothing in the jar cache."""
+    import fast_er_spark.functions.jvm_sketch as js
+
+    bad = tmp_path / "Broken.java"
+    bad.write_text("public class Broken { int x = ; }\n")
+    home = tmp_path / "home"
+    monkeypatch.setenv("HOME", str(home))
+    monkeypatch.setattr(js, "_SRCS", [str(bad)])
+    monkeypatch.setattr(js, "_jar_path", None)
+    monkeypatch.setattr(js, "_registered", weakref.WeakSet())
+    with pytest.raises(RuntimeError, match="javac failed") as err:
+        js.ensure_jvm_udfs(spark)
+    msg = str(err.value)
+    assert "Broken.java" in msg and "error:" in msg, msg
+    assert not (home / ".cache" / "fast_er_jvm").exists()
+
+
+def test_text_builders_register_their_kernels(spark, monkeypatch):
+    """text_stats, rolling_fingerprint, lang_marker_counts and lang_id_ngram
+    register the kernels on the active session themselves: with the
+    session's kernel functions dropped and the registration memo emptied,
+    all four still evaluate."""
     from pyspark.sql import functions as F
 
-    from fast_er_spark.operators.agreement import scored_value_pairs
-    from fast_er_spark.operators.substring import anchor_pairs, verify_anchor_pairs
-    from fast_er_spark.operators.verify import verify_pairs_jaccard
-
-    va = spark.createDataFrame([("martha",), ("marhta",)], "val_a string")
-    vb = va.select(F.col("val_a").alias("val_b"))
-    got = {
-        (r["val_a"], r["val_b"], r["level"])
-        for r in scored_value_pairs(va, vb, 0.1, 0.88, 0.94, triangular=True).collect()
-    }
-    assert got == {("marhta", "martha", 2)}
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g h i j"), (2, "a b c d e f g h i x")],
-        "doc_id long, text string",
+    import fast_er_spark.functions.jvm_sketch as js
+    from fast_er_spark.functions.text import (
+        lang_id_ngram,
+        lang_marker_counts,
+        rolling_fingerprint,
+        text_stats,
     )
-    pairs = spark.createDataFrame([(2, 1)], "id_a long, id_b long")
-    v = verify_pairs_jaccard(pairs, docs, "doc_id", "text", n=3, threshold=0.5).collect()
-    assert len(v) == 1
 
-    span_docs = spark.createDataFrame(
-        [(1, "xx " + "q w e r t y " * 20), (2, "q w e r t y " * 20 + " zz")],
-        "id long, text string",
-    )
-    ap = anchor_pairs(span_docs, "id", "text", engine="auto")
-    out = verify_anchor_pairs(ap, span_docs, "id", "text", min_span=50).collect()
-    assert {(r["id_a"], r["id_b"]) for r in out} == {(2, 1)}
+    names = [
+        js._TEXT_STATS_UDF_NAME, js._ROLLING_FP_UDF_NAME,
+        js._MARKER_COUNTS_UDF_NAME, js._NGRAM_LANG_UDF_NAME,
+    ]
+    monkeypatch.setattr(js, "_registered", weakref.WeakSet())
+    try:
+        for name in names:
+            spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
+            assert not spark.catalog.functionExists(name)
+        df = spark.createDataFrame([(0, "the cat of der Hund")], "i long, t string")
+        t = F.col("t")
+        row = df.select(
+            text_stats(t).alias("st"),
+            rolling_fingerprint(t).alias("fp"),
+            lang_marker_counts(t, {"en": ["the", "of"], "de": ["der"]}).alias("mk"),
+            lang_id_ngram(t).alias("lg"),
+        ).first()
+        assert row["st"] == [5, 5, 19, 19] and row["mk"] == [2, 1]
+        assert row["fp"] is not None and row["lg"] is not None
+        assert spark in js._registered
+        assert all(spark.catalog.functionExists(name) for name in names)
+    finally:
+        monkeypatch.undo()
+        js._registered.discard(spark)
+        js.ensure_jvm_udfs(spark)
 
 
-def test_determinism_and_null_contract(spark, jvm):
+def test_determinism_and_null_contract(spark):
     from pyspark.sql import functions as F
 
     from fast_er_spark.functions.jvm_sketch import oph_signature_jvm
@@ -76,7 +102,7 @@ def test_determinism_and_null_contract(spark, jvm):
     assert len(r1[1]) == 32 and len(r1[4]) == 32  # short doc: whole-doc shingle
 
 
-def test_estimator_unbiased_vs_true_jaccard(spark, jvm):
+def test_estimator_unbiased_vs_true_jaccard(spark):
     """E[slot match] = Jaccard must hold for the JVM hash family too."""
     from pyspark.sql import functions as F
 
@@ -109,7 +135,7 @@ def test_estimator_unbiased_vs_true_jaccard(spark, jvm):
     assert errs.std() < 0.08, errs.std()
 
 
-def test_jw_level_jvm_parity_with_scalar_reference(spark, jvm):
+def test_jw_level_jvm_parity_with_scalar_reference(spark):
     """The JVM banded JW level must agree with the Python scalar reference
     kernel on every pair — ASCII, unicode (per-UTF-8-byte semantics), empty,
     1-char window quirk, NUL-bearing, long strings."""
@@ -156,11 +182,11 @@ def test_jw_level_jvm_parity_with_scalar_reference(spark, jvm):
         assert got[i] == want, (a, b, got[i], want)
 
 
-def test_substring_anchors_jvm_alignment_invariant(spark, jvm):
+def test_substring_anchors_jvm_alignment_invariant(spark):
     """The rolling-hash anchors must be content-defined: a span copied to a
     DIFFERENT OFFSET in another document selects the same anchors, so the
     docs share anchor hashes; and the containment pair must surface through
-    anchor_pairs with the JVM engine."""
+    anchor_pairs."""
     from fast_er_spark.operators.substring import anchor_pairs
 
     rng = np.random.default_rng(17)
@@ -176,20 +202,19 @@ def test_substring_anchors_jvm_alignment_invariant(spark, jvm):
     df = spark.createDataFrame(docs, "id long, text string")
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in anchor_pairs(df, "id", "text", engine="jvm").collect()
+        for r in anchor_pairs(df, "id", "text").collect()
     }
     assert (41, 40) in pairs
 
 
-def test_lcs_len_jvm_parity(spark, jvm):
+def test_lcs_len_jvm_parity(spark):
     """The compiled suffix automaton must return exactly the Python
-    lcs_len on random pairs, with and without the cap short-circuit."""
+    oracle lcs_len on random pairs, with and without the cap short-circuit."""
     import random
 
     from pyspark.sql import functions as F
 
     from fast_er_spark.functions.jvm_sketch import lcs_len_jvm
-    from fast_er_spark.operators.substring import lcs_len
 
     rng = random.Random(7)
     cases = [("", ""), ("abc", ""), ("abcdef", "xxabcdyy"), ("aaaa", "aa")]
@@ -211,11 +236,11 @@ def test_lcs_len_jvm_parity(spark, jvm):
             for r in df.select("i", lcs_len_jvm("a", "b", cap=cap).alias("s")).collect()
         }
         for i, (a, b) in enumerate(cases):
-            want = lcs_len(a, b, cap=cap if cap > 0 else None)
+            want = kernels.lcs_len(a, b, cap=cap if cap > 0 else None)
             assert got[i] == want, (a, b, cap, got[i], want)
 
 
-def test_jvm_tokenizer_matches_python_whitespace_set(spark, jvm):
+def test_jvm_tokenizer_matches_python_whitespace_set(spark):
     """Java Character.isWhitespace excludes U+0085/U+00A0/U+2007/U+202F,
     all of which Python str.split() treats as separators; the kernels use a
     Python-parity whitespace helper so shingle SETS (hence every
@@ -240,11 +265,10 @@ def test_jvm_tokenizer_matches_python_whitespace_set(spark, jvm):
         assert got[i] == want, (t, got[i], want)
 
 
-def test_lcs_len_jvm_astral_code_points(spark, jvm):
+def test_lcs_len_jvm_astral_code_points(spark):
     """LCS must count CODE POINTS like Python len(), not UTF-16 units: a
     shared span of n astral chars is n, not 2n."""
     from fast_er_spark.functions.jvm_sketch import lcs_len_jvm
-    from fast_er_spark.operators.substring import lcs_len
 
     emoji_run = "\U0001F600\U0001F601\U0001F602\U0001F603"  # 4 code points
     cases = [
@@ -260,10 +284,10 @@ def test_lcs_len_jvm_astral_code_points(spark, jvm):
         for r in df.select("i", lcs_len_jvm("a", "b", cap=0).alias("s")).collect()
     }
     for i, (a, b) in enumerate(cases):
-        assert got[i] == lcs_len(a, b, cap=None), (a, b, got[i])
+        assert got[i] == kernels.lcs_len(a, b, cap=None), (a, b, got[i])
 
 
-def test_oph_jvm_lsh_verified_pairs_recall(spark, jvm):
+def test_oph_jvm_lsh_verified_pairs_recall(spark):
     """The JVM scheme must clear the same recall gate as kperm/oph through
     the identical band/verify path (verification is family-agnostic)."""
     from fixtures.synth import pages
@@ -288,10 +312,10 @@ def test_oph_jvm_lsh_verified_pairs_recall(spark, jvm):
     assert recall >= 0.99, f"recall {recall:.4f} ({len(want) - len(got)} missed)"
 
 
-def test_text_kernels_match_expressions(spark, jvm):
+def test_text_kernels_match_expressions(spark):
     """The compiled text kernels (TextUdfs) must return EXACTLY the values
-    of the Column-expression paths they replace — that identity is what
-    keeps the DuckDB oracle twins green on either engine. Cases cover
+    of the Column-expression twins in oracle/kernels.py — that identity is
+    what keeps the DuckDB oracle twins green. Cases cover
     multi-space runs, tabs/newlines, punctuation, non-ASCII (code-point
     counting), astral chars, repeated tokens, and empty text."""
     from pyspark.sql import functions as F
@@ -320,14 +344,14 @@ def test_text_kernels_match_expressions(spark, jvm):
     t = F.col("t")
     rows = df.select(
         "i",
-        text_stats(t, jvm=False).alias("st_e"),
-        text_stats(t, jvm=True).alias("st_j"),
-        rolling_fingerprint(t, jvm=False).alias("fp_e"),
-        rolling_fingerprint(t, jvm=True).alias("fp_j"),
+        kernels.text_stats(t).alias("st_e"),
+        text_stats(t).alias("st_j"),
+        kernels.rolling_fingerprint(t).alias("fp_e"),
+        rolling_fingerprint(t).alias("fp_j"),
         quality_score(t).alias("q_e"),
-        quality_score_from_stats(text_stats(t, jvm=True)).alias("q_j"),
-        lang_marker_counts(t, markers, jvm=False).alias("mk_e"),
-        lang_marker_counts(t, markers, jvm=True).alias("mk_j"),
+        quality_score_from_stats(text_stats(t)).alias("q_j"),
+        kernels.lang_marker_counts(t, markers).alias("mk_e"),
+        lang_marker_counts(t, markers).alias("mk_j"),
     ).collect()
     for r in rows:
         assert r["st_e"] == r["st_j"], (texts[r["i"]], r["st_e"], r["st_j"])
@@ -336,10 +360,10 @@ def test_text_kernels_match_expressions(spark, jvm):
         assert r["mk_e"] == r["mk_j"], (texts[r["i"]], r["mk_e"], r["mk_j"])
 
 
-def test_text_kernels_randomized_parity(spark, jvm):
+def test_text_kernels_randomized_parity(spark):
     """Seeded fuzz over adversarial character classes (ASCII, punctuation,
     every Python-whitespace code point, Latin-1/CJK/Cyrillic letters,
-    combining marks): the JVM text kernels must equal the expression paths
+    combining marks): the JVM text kernels must equal the expression twins
     on every generated string. One batched comparison, 300 strings."""
     import random
 
@@ -378,21 +402,21 @@ def test_text_kernels_randomized_parity(spark, jvm):
     t = F.col("t")
     rows = df.select(
         "i",
-        text_stats(t, jvm=False).alias("se"),
-        text_stats(t, jvm=True).alias("sj"),
-        rolling_fingerprint(t, jvm=False).alias("fe"),
-        rolling_fingerprint(t, jvm=True).alias("fj"),
+        kernels.text_stats(t).alias("se"),
+        text_stats(t).alias("sj"),
+        kernels.rolling_fingerprint(t).alias("fe"),
+        rolling_fingerprint(t).alias("fj"),
     ).collect()
     for r in rows:
         assert r["se"] == r["sj"], (repr(texts[r["i"]]), r["se"], r["sj"])
         assert r["fe"] == r["fj"], (repr(texts[r["i"]]), r["fe"], r["fj"])
 
 
-def test_char_mask_jvm_python_parity(spark, jvm):
+def test_char_mask_jvm_python_parity(spark):
     """jvm/JwUdfs.java::charMask and functions/jw.py::char_mask_bytes must
     produce the identical signed 64-bit sketch for arbitrary (incl.
-    multi-byte and NUL-bearing) text — the cross/candidate plan may compute
-    masks with either engine."""
+    multi-byte and NUL-bearing) text — the Python form is the reference
+    the mask filter's soundness proof (tests/test_jw.py) runs on."""
     import random
 
     from pyspark.sql import functions as F
@@ -419,12 +443,13 @@ def test_char_mask_jvm_python_parity(spark, jvm):
         assert got[i] == char_mask_bytes(v.encode("utf-8")), repr(v)
 
 
-def test_scored_value_pairs_mask_filter_invariant(spark, jvm, monkeypatch):
+def test_scored_value_pairs_mask_filter_invariant(spark, monkeypatch):
     """The char-mask prefilter must not change scored_value_pairs output —
-    identical (val_a, val_b, level) sets with the filter on and off, on both
-    the JVM and the Python engines."""
+    identical (val_a, val_b, level) sets with the filter on and off, equal
+    to the scalar Python reference levels over the full cross product."""
     import random
 
+    from fast_er_spark.functions.jw import discretize, jaro_winkler_bytes
     from fast_er_spark.operators.agreement import scored_value_pairs
 
     rng = random.Random(21)
@@ -436,24 +461,30 @@ def test_scored_value_pairs_mask_filter_invariant(spark, jvm, monkeypatch):
     va = spark.createDataFrame([(v,) for v in names[:250]], "val_a string")
     vb = spark.createDataFrame([(v,) for v in names[60:]], "val_b string")
 
-    def run(engine):
-        return {
-            tuple(r)
-            for r in scored_value_pairs(va, vb, 0.1, 0.88, 0.94, engine=engine).collect()
-        }
+    def run():
+        return {tuple(r) for r in scored_value_pairs(va, vb, 0.1, 0.88, 0.94).collect()}
+
+    want = set()
+    for a in names[:250]:
+        for b in names[60:]:
+            lvl = discretize(
+                jaro_winkler_bytes(a.encode("utf-8"), b.encode("utf-8"), 0.1), 0.88, 0.94
+            )
+            if lvl:
+                want.add((a, b, lvl))
 
     monkeypatch.setenv("FAST_ER_JW_MASK", "1")
     # force past the small-pair volume gate (MASK_MIN_PAIRS) so the filter
     # actually runs on this ~62k-pair fixture
     monkeypatch.setenv("FAST_ER_JW_MASK_MIN_PAIRS", "0")
-    on_jvm, on_py = run("jvm"), run("python")
+    on = run()
     monkeypatch.setenv("FAST_ER_JW_MASK", "0")
-    off = run("jvm")
-    assert on_jvm == off and on_py == off
+    off = run()
+    assert on == off and want == off
     assert off  # non-degenerate fixture
 
 
-def test_char_mask_volume_gate(spark, jvm, monkeypatch):
+def test_char_mask_volume_gate(spark, monkeypatch):
     """The mask prefilter only enters the plan when the implied pair count
     clears MASK_MIN_PAIRS: at small volumes its fixed plan overhead exceeds
     the whole unpruned kernel cost (measured +0.35 s on the sf0.1 supplier
@@ -469,15 +500,15 @@ def test_char_mask_volume_gate(spark, jvm, monkeypatch):
     monkeypatch.setenv("FAST_ER_JW_MASK", "1")
     monkeypatch.delenv("FAST_ER_JW_MASK_MIN_PAIRS", raising=False)
     # 1,600 implied pairs < MASK_MIN_PAIRS: gate skips the mask
-    gated = scored_value_pairs(va, vb, 0.1, 0.88, 0.94, engine="jvm")
+    gated = scored_value_pairs(va, vb, 0.1, 0.88, 0.94)
     assert "__ma" not in plan(gated)
     # forcing the threshold to 0 re-enables it on the same frames
     monkeypatch.setenv("FAST_ER_JW_MASK_MIN_PAIRS", "0")
-    forced = scored_value_pairs(va, vb, 0.1, 0.88, 0.94, engine="jvm")
+    forced = scored_value_pairs(va, vb, 0.1, 0.88, 0.94)
     assert "__ma" in plan(forced)
 
 
-def test_fused_sig_and_shingles_parity(spark, jvm):
+def test_fused_sig_and_shingles_parity(spark):
     """The fused one-tokenization kernel must be BIT-identical to the split
     kernels on both outputs: [0] == oph_signature_jvm, [1] ==
     shingle_hashes_jvm — including short docs (< n tokens), unicode
@@ -517,7 +548,7 @@ def test_fused_sig_and_shingles_parity(spark, jvm):
         assert r["ss"][1] == r["sh"], f"shingles mismatch id={r['id']}"
 
 
-def test_sorted_inter_union_jvm_parity(spark, jvm):
+def test_sorted_inter_union_jvm_parity(spark):
     """The merge-scan size kernel must equal array_intersect/array_union
     sizes on sorted-distinct arrays (incl. empty and disjoint), and map a
     null side to -1."""
@@ -552,7 +583,7 @@ def test_sorted_inter_union_jvm_parity(spark, jvm):
         assert r["iu"] & 0xFFFFFFFF == r["union"], r
 
 
-def test_verify_merge_scan_matches_expression_path(spark, jvm):
+def test_verify_merge_scan_matches_expression_path(spark):
     """verify_pairs_jaccard's merge-scan branch must emit exactly the
     expression branch's rows and sizes on the same candidates."""
     from fixtures.synth import pages

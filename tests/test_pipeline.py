@@ -371,6 +371,22 @@ def test_boilerplate_sentence_does_not_merge_clusters(spark, tmp_path):
     assert got[2] == got[3], got   # containment: span = len(root) >= 96 -> merge
 
 
+def test_dedup_config_rejects_char_mode():
+    """Verification shingles words whatever the mode, so a char-mode config
+    would sketch one shingle set and verify another: it must be refused at
+    construction, before any stage runs. The default config keeps the
+    fingerprint of the resolved word-mode, oph_jvm default, so existing
+    stage tables still resume."""
+    from fast_er_spark.pipeline import DedupConfig
+
+    with pytest.raises(ValueError, match="mode='word'"):
+        DedupConfig(mode="char")
+    with pytest.raises(ValueError, match="word shingles"):
+        DedupConfig(mode="char", sketch="oph")
+    assert DedupConfig().sketch == "oph_jvm"
+    assert DedupConfig().fingerprint() == "c4f1e8bec72c1bb4"
+
+
 def test_streaming_near_dup_lsh(spark, corpus, tmp_path):
     """Stateful streaming LSH (applyInPandasWithState): near-dup candidates
     must cover >=99% of true Jaccard>=0.8 pairs across micro-batches (state

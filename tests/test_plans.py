@@ -67,14 +67,8 @@ def test_events_hourly_partial_aggregation(spark):
 
 
 def test_fuzzy_jw_single_python_stage_and_sized_partitions(spark):
-    """With a JDK present the JW level is a compiled JVM expression — ZERO
-    Python stages in the plan. Without one, the Arrow UDF must run EXACTLY
-    once per candidate pair (Catalyst used to split it into filter + project
-    ArrowEvalPython stages = 2x the work). Partitioning must stay explicit,
-    not AQE-coalesced."""
-    from fast_er_spark.functions.jvm_sketch import jvm_available
-
+    """The JW level is a compiled JVM expression — ZERO Python stages in
+    the plan. Partitioning must stay explicit, not AQE-coalesced."""
     df = entry_mod.q_fuzzy_jw_supplier(spark, SF_DIR)
     stats = plan_stats(df)
-    expected_py = 0 if jvm_available(spark) else 1
-    assert stats["python_udfs"] == expected_py, stats
+    assert stats["python_udfs"] == 0, stats

@@ -196,16 +196,14 @@ def test_ngram_lang_id_accuracy_python():
 
 
 def test_ngram_lang_id_engines_agree(spark):
-    """The JVM kernel and the Arrow fallback must return identical
-    predictions — including on NBSP-separated and accented text."""
+    """The JVM kernel and the Arrow Python twin (oracle/kernels.py) must
+    return identical predictions — including on NBSP-separated and accented
+    text."""
     from pyspark.sql import functions as F
 
-    from fast_er_spark.functions.jvm_sketch import ensure_jvm_udfs
     from fast_er_spark.functions.text import lang_id_ngram
+    from oracle import kernels
 
-    if not ensure_jvm_udfs(spark):
-        import pytest
-        pytest.skip("no JDK")
     texts = list(HELD_OUT_SENTENCES.values()) + list(HELD_OUT_SENTENCES_2.values()) + [
         "the cat sat on the mat and looked at the dog",
         "das wetter ist heute wirklich sehr schön geworden",
@@ -221,8 +219,8 @@ def test_ngram_lang_id_engines_agree(spark):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
     rows = df.select(
         "i",
-        lang_id_ngram(F.col("t"), jvm=True).alias("j"),
-        lang_id_ngram(F.col("t"), jvm=False).alias("p"),
+        lang_id_ngram(F.col("t")).alias("j"),
+        kernels.lang_id_ngram(F.col("t")).alias("p"),
     ).collect()
     for r in rows:
         assert r["j"] == r["p"], (texts[r["i"]], r["j"], r["p"])
@@ -255,28 +253,26 @@ def test_gopher_crlf_and_null_parity(spark):
 
 
 def test_marker_spec_validation_and_dedup(spark):
-    """Delimiters inside markers must raise (silent JVM-path corruption
-    otherwise) and duplicated markers must not double-count on the JVM
-    path."""
+    """Delimiters inside markers must raise (silent kernel-side corruption
+    otherwise) and duplicated markers must not double-count in the kernel
+    (its expression twin has set semantics)."""
     import pytest
 
     from pyspark.sql import functions as F
 
-    from fast_er_spark.functions.jvm_sketch import ensure_jvm_udfs
     from fast_er_spark.functions.text import lang_marker_counts, marker_spec
+    from oracle import kernels
 
     for bad in ({"en": ["can't,stop"]}, {"en": ["a:b"]}, {"e|n": ["ok"]}):
         with pytest.raises(ValueError, match="delimiter"):
             marker_spec(bad)
 
-    if not ensure_jvm_udfs(spark):
-        pytest.skip("no JDK")
     dup_markers = {"en": ["the", "the", "of"], "de": ["der"]}
     df = spark.createDataFrame([(0, "the cat of der"), (1, None)], "i long, t string")
     rows = df.select(
         "i",
-        lang_marker_counts(F.col("t"), dup_markers, jvm=True).alias("j"),
-        lang_marker_counts(F.col("t"), dup_markers, jvm=False).alias("p"),
+        lang_marker_counts(F.col("t"), dup_markers).alias("j"),
+        kernels.lang_marker_counts(F.col("t"), dup_markers).alias("p"),
     ).collect()
     got = {r["i"]: (r["j"], r["p"]) for r in rows}
     assert got[0][0] == got[0][1] == [2, 1], got[0]  # 'the' once per token
