@@ -57,10 +57,14 @@ class StageCatalog:
 
     def append(self, df: DataFrame, name: str) -> None:
         if self.iceberg:
-            try:
-                df.writeTo(self._table(name)).append()
-            except Exception:
-                df.writeTo(self._table(name)).createOrReplace()
+            # branch on existence, never on a failed append: a commit
+            # conflict or schema drift on an existing table must raise, not
+            # replace every earlier row with this one
+            writer = df.writeTo(self._table(name))
+            if self.exists(name):
+                writer.append()
+            else:
+                writer.create()
         else:
             df.write.mode("append").parquet(self._path(name))
 

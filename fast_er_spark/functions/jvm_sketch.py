@@ -1,10 +1,11 @@
 """Runtime-compiled JVM sketch kernel (see jvm/FastErUdfs.java).
 
-The Python signature UDF is the dedup pipeline's dominant corpus-scale cost
-(PERF.md): text crosses JVM -> Arrow -> Python per batch. This module
-compiles the Java OPH kernel with the platform ``javac`` (JDK 17 ships in
-the Spark image), serves it to the session via ``ADD JAR`` +
-``registerJavaFunction``, and exposes a drop-in signature column. Spark
+A Python signature UDF was the dedup pipeline's dominant corpus-scale cost
+(PERF.md): text crossed JVM -> Arrow -> Python per batch. This module
+compiles the Java OPH kernel (word mode's only signature path) with the
+platform ``javac`` (JDK 17 ships in the Spark image), serves it to the
+session via ``ADD JAR`` + ``registerJavaFunction``, and exposes a drop-in
+signature column. Spark
 loads session-added jars into both the driver's and the executors'
 classloaders, so the same path works under local, local-cluster, and
 spark-submit deployments (the jar travels like any --jars artifact).
@@ -166,11 +167,11 @@ def ensure_jvm_udfs(spark: SparkSession) -> bool:
 def oph_signature_jvm(
     text_col, num_perm: int = 128, n: int = 3, seed: int = 42
 ) -> Column:
-    """JVM OPH signature column (array<long>, null for blank docs).
-
-    Same ALGORITHM as functions.minhash.oph_signature_batch but a different
-    hash family — never mix JVM and Python signatures in one index. The
-    caller must have run ensure_jvm_udfs(spark) first.
+    """JVM OPH signature column (array<long>, null for blank docs): the
+    word-mode signature kernel of operators/lsh.py. A different hash family
+    from the char-mode k-permutation kernel (functions.minhash.minhash_batch)
+    — never mix the two in one index. The caller must have run
+    ensure_jvm_udfs(spark) first.
     """
     if num_perm < 2 or num_perm & (num_perm - 1):
         raise ValueError("num_perm must be a power of two >= 2 for OPH")

@@ -104,74 +104,3 @@ def jaccard_estimate(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
     sig_b = np.asarray(sig_b)
     return float((sig_a == sig_b).mean())
 
-
-_EMPTY = ~np.uint64(0)
-
-
-def oph_signature_batch(
-    texts: pd.Series,
-    num_perm: int = 128,
-    n: int = 3,
-    mode: str = "word",
-    seed: int = 42,
-) -> pd.Series:
-    """One-permutation hashing (OPH) with rotation densification — the
-    production-scale MinHash: each shingle is hashed ONCE and assigned to
-    bucket ``h >> (64-log2 K)``; signature slot k is the min hash landing in
-    bucket k; empty slots borrow from the nearest non-empty slot to the
-    right (circular), offset by distance so borrowed slots only collide when
-    the donors match at the same distance. O(T) work per batch instead of
-    k-perm's O(K*T) — ~K-fold fewer multiply-adds — with the same
-    E[slot match] = Jaccard property (Shrivastava & Li, "Improved
-    Densification of One Permutation Hashing"; public algorithm, re-derived
-    here). ``num_perm`` must be a power of two.
-
-    Compatible consumer-side with minhash_batch signatures (array<long> of
-    length num_perm) but a DIFFERENT hash family — never mix the two in one
-    index. A genuine minimum hash equal to 2^64-1 is indistinguishable from
-    the _EMPTY sentinel and would be overwritten by densification —
-    probability 2^-64 per slot, negligible by design.
-    """
-    K = num_perm
-    if K < 2 or K & (K - 1):
-        # K=1 would shift a uint64 by 64 (undefined in numpy) and a 1-slot
-        # signature carries no Jaccard information anyway
-        raise ValueError("num_perm must be a power of two >= 2 for OPH")
-    shift = np.uint64(64 - K.bit_length() + 1)
-    bases = hash_shingles_batch(texts, n, mode, seed)
-    R = len(bases)
-    sizes = np.array([b.size for b in bases], dtype=np.int64)
-    nonempty = np.flatnonzero(sizes > 0)
-    sig = np.full((R, K), _EMPTY, dtype=np.uint64)
-    if len(nonempty):
-        flat = np.concatenate([bases[i] for i in nonempty]).astype(np.uint64)
-        doc = np.repeat(np.arange(len(nonempty), dtype=np.int64), sizes[nonempty])
-        key = doc * K + (flat >> shift).astype(np.int64)
-        order = np.argsort(key, kind="stable")
-        key_s, val_s = key[order], flat[order]
-        starts = np.flatnonzero(np.r_[True, key_s[1:] != key_s[:-1]])
-        mins = np.minimum.reduceat(val_s, starts)
-        packed = np.full(len(nonempty) * K, _EMPTY, dtype=np.uint64)
-        packed[key_s[starts]] = mins
-        sig[nonempty] = packed.reshape(len(nonempty), K)
-
-    # rotation densification: two right-to-left passes give every slot its
-    # circularly-next non-empty donor and the distance to it
-    fill_val = np.full(R, _EMPTY, dtype=np.uint64)
-    fill_dist = np.zeros(R, dtype=np.uint64)
-    dense = sig.copy()
-    odd = np.uint64(0x9E3779B97F4A7C15) | np.uint64(1)
-    for _ in range(2):
-        for k in range(K - 1, -1, -1):
-            col = sig[:, k]
-            has = col != _EMPTY
-            fill_val = np.where(has, col, fill_val)
-            fill_dist = np.where(has, np.uint64(0), fill_dist + np.uint64(1))
-            need = (dense[:, k] == _EMPTY) & (fill_val != _EMPTY)
-            with np.errstate(over="ignore"):
-                dense[need, k] = fill_val[need] + fill_dist[need] * odd
-    # fully-empty docs: unique sentinel per row (collides with nothing)
-    empty_rows = np.flatnonzero(sizes == 0)
-    for i in empty_rows:
-        dense[i, :] = np.uint64(0xDEAD0000_00000000) + np.uint64(i)
-    return pd.Series(list(dense.view(np.int64)))

@@ -1,23 +1,23 @@
 /**
  * JVM-side sketch kernels for fast_er_spark.
  *
- * The Arrow-batched Python signature UDF is the dominant corpus-scale cost
- * of the dedup pipeline (PERF.md): every document's text crosses the
- * JVM->Arrow->Python boundary and is tokenized/hashed in (vectorized but
+ * An Arrow-batched Python signature UDF was the dominant corpus-scale cost
+ * of the dedup pipeline (PERF.md): every document's text crossed the
+ * JVM->Arrow->Python boundary and was tokenized/hashed in (vectorized but
  * still interpreter-bound) numpy. This class keeps the whole
  * tokenize -> shingle-hash -> one-permutation-MinHash pipeline inside the
  * executor JVM: no Arrow transfer, no Python worker, JIT-compiled loops.
  *
- * Algorithm parity: same ALGORITHM as functions/minhash.py::
- * oph_signature_batch (one-permutation hashing with rotation densification,
- * Shrivastava & Li; public algorithm) but a DIFFERENT hash family (FNV-1a
- * over UTF-8 bytes + splitmix64 finalizer vs Python's seeded blake2b).
- * Signatures from the two families are mutually incompatible - never mix
- * them in one LSH index. E[slot match] = Jaccard holds for both; the
- * verify stage is family-agnostic, so recall contracts are unchanged.
+ * Algorithm: one-permutation hashing with rotation densification
+ * (Shrivastava & Li; public algorithm) over FNV-1a-of-UTF-8 token hashes
+ * with a splitmix64 finalizer. It is the word-mode signature kernel; char
+ * mode signs with the k-permutation family of functions/minhash.py, whose
+ * signatures are incompatible with these - never mix them in one LSH
+ * index. E[slot match] = Jaccard holds for both, and the verify stage is
+ * family-agnostic.
  *
  * Empty/blank documents return null. The candidate generator filters blank
- * text before signing, AND band_buckets (operators/lsh.py) drops
+ * text before signing, AND band_hash_array (operators/lsh.py) drops
  * null-signature rows — xxhash64 over a null slice would otherwise hash
  * every null signature to the same constant bucket per band, pairing all
  * blank docs with each other.
@@ -218,7 +218,7 @@ public class FastErUdfs implements UDF4<String, Integer, Integer, Long, ArrayLis
      * value: same token hashes, same bucket mins, same densification),
      * [1] = sorted distinct shingle hashes (exactly ShingleHashes' value).
      * Blank/None text -> null (ophSignature's contract; the caller filters
-     * blank docs and band_buckets drops null signatures).
+     * blank docs and band_hash_array drops null signatures).
      */
     public static class SigAndShingles
             implements org.apache.spark.sql.api.java.UDF4<String, Integer, Integer, Long, ArrayList<ArrayList<Long>>> {

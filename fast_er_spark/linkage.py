@@ -62,15 +62,16 @@ _ROW_ID = "__row_id"
 def _with_row_id(df: DataFrame, order_col: str | None) -> tuple[DataFrame, int | None]:
     """(frame with a stable long row id, total row count or None).
 
-    The count is known FOR FREE on the positional path (the offset scan
-    sums partition sizes) and None on the natural-key path — callers use it
-    to gate the packed-pair-key optimization, whose encoding is only sound
-    for ids < 2^31. Stable long row id rules: if the table has a natural unique long key, pass it
-    as order_col (the scale path — zero extra work). Otherwise positional ids
-    (partition-major, row order within partition — the same ids zipWithIndex
-    assigns, which reproduce the reference's pandas positional index,
-    comparison.py:626, for any source with a stable partition order) are
-    assigned ENTIRELY JVM-side:
+    The count is known FOR FREE on the positional path (the offset scan sums
+    partition sizes) and None on the natural-key path — callers use it to
+    size the single-long pair encodings (_single_long_bits), which are only
+    sound for ids below the proven bound. Stable long row id rules: if the
+    table has a natural unique long key, pass it as order_col (the scale
+    path — zero extra work). Otherwise positional ids (partition-major, row
+    order within partition — the same ids zipWithIndex assigns, which
+    reproduce the reference's pandas positional index, comparison.py:626,
+    for any source with a stable partition order) are assigned ENTIRELY
+    JVM-side:
 
     - ``monotonically_increasing_id()`` encodes (partition index << 33) |
       (row position within partition); a localCheckpoint (lazy — the sizes
@@ -139,16 +140,6 @@ def _with_row_id(df: DataFrame, order_col: str | None) -> tuple[DataFrame, int |
         .drop("__pid", "__off", "__mid")
     )
     return out, acc
-
-
-# the packed (id_a << 32 | id_b) key only has 32 bits per side; positional
-# ids are bounded by the row count, so packing is gated on BOTH counts
-# being known and under this limit (natural keys: unknown -> never packed)
-_PACK_MAX_ID = 1 << 31
-
-
-def _pack_ok(*totals: int | None) -> bool:
-    return all(t is not None and t < _PACK_MAX_ID for t in totals)
 
 
 def _single_long_bits(n_a, n_b, st, k_fuzzy: int, k_exact: int):
@@ -272,7 +263,6 @@ def _sparse_fuzzy_union(
     fuzzy_frames,
     st,
     k_fuzzy: int,
-    pack: bool,
     prepartition: bool = False,
     pack_bits: tuple[int, int, int] | None = None,
     multi_only: bool = False,
@@ -292,8 +282,8 @@ def _sparse_fuzzy_union(
     the plan). Contributions of a pair's edges occupy disjoint stride
     slots (one variable each; duplicate same-variable edges impossible),
     so summing the masked low bits reassembles the fuzzy pattern exactly
-    as the unpacked path does. Fallback ``pack=True`` (ids < 2^31 but the
-    single-long layout doesn't fit) keeps the two-field packed key.
+    as the unpacked path does. Without ``pack_bits`` (natural keys, or ids
+    too wide for one long) the shuffle carries plain (id_a, id_b, contrib).
 
     ``multi_only=True`` (the analytic-singles engine): also count each
     pair's edges and keep only pairs with >= 2 agreeing fuzzy variables
@@ -315,15 +305,6 @@ def _sparse_fuzzy_union(
             )
             for f, s in zip(fuzzy_frames, st[:k_fuzzy])
         ]
-    elif pack:
-        key = F.shiftleft(F.col("id_a"), 32).bitwiseOR(F.col("id_b"))
-        contribs = [
-            f.select(
-                key.alias("__k"),
-                (F.col("level") * F.lit(s)).cast("int").alias("contrib"),
-            )
-            for f, s in zip(fuzzy_frames, st[:k_fuzzy])
-        ]
     else:
         contribs = [
             f.select("id_a", "id_b", (F.col("level") * F.lit(s)).alias("contrib"))
@@ -341,8 +322,8 @@ def _sparse_fuzzy_union(
     # numbered repartition pins the session partition count onto what may
     # be a tiny edge set, and small fits pay pure scheduling overhead for
     # it (fs_pattern_counts +80% at sf0.1 before the gate — the round-1
-    # small-input lesson again). FAST_ER_PREPARTITION=0 force-disables.
-    if prepartition and os.environ.get("FAST_ER_PREPARTITION", "1") != "0":
+    # small-input lesson again).
+    if prepartition:
         # exactly the session partition count: over-partitioning this
         # exchange (16x, PERF.md round 5) measured 4-7 s SLOWER end to end
         # at 100k x 100k — more reduce buckets inflate the map-side shuffle
@@ -351,7 +332,7 @@ def _sparse_fuzzy_union(
         if pack_bits is not None:
             u = u.repartition(sp, F.shiftrightunsigned(F.col("__e"), pack_bits[2]))
         else:
-            u = u.repartition(sp, *(["__k"] if pack else ["id_a", "id_b"]))
+            u = u.repartition(sp, "id_a", "id_b")
     multi = [F.count(F.lit(1)).alias("__n")] if multi_only else []
     if pack_bits is not None:
         ba, bb, bc = pack_bits
@@ -362,12 +343,6 @@ def _sparse_fuzzy_union(
         ids = (
             F.shiftrightunsigned(F.col("__k"), bb).alias("id_a"),
             F.col("__k").bitwiseAND(F.lit((1 << bb) - 1)).alias("id_b"),
-        )
-    elif pack:
-        g = u.groupBy("__k").agg(F.sum("contrib").cast("long").alias("__fz"), *multi)
-        ids = (
-            F.shiftrightunsigned(F.col("__k"), 32).cast("long").alias("id_a"),
-            F.col("__k").bitwiseAND(F.lit((1 << 32) - 1)).cast("long").alias("id_b"),
         )
     else:
         g = u.groupBy("id_a", "id_b").agg(F.sum("contrib").cast("long").alias("__fz"), *multi)
@@ -748,15 +723,14 @@ class Comparison:
     def _fit_sparse(self, fuzzy_frames) -> None:
         st = strides(self.k_fuzzy, self.k_exact)
         bounds = self._u.id_bounds()
-        pack = bounds is not None and _pack_ok(*bounds)
         self._pack_bits = (
-            _single_long_bits(*bounds, st, self.k_fuzzy, self.k_exact) if pack else None
+            _single_long_bits(*bounds, st, self.k_fuzzy, self.k_exact) if bounds else None
         )
 
         def union(multi_only: bool = False) -> DataFrame:
             return self._attach_exact(
                 _sparse_fuzzy_union(
-                    fuzzy_frames, st, self.k_fuzzy, pack,
+                    fuzzy_frames, st, self.k_fuzzy,
                     prepartition=self._big(),
                     pack_bits=self._pack_bits and self._pack_bits[0],
                     multi_only=multi_only,

@@ -26,7 +26,6 @@ band are rare).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -168,10 +167,7 @@ def default_value_candidates(
         # computed ONCE per distinct value here, pre-cross, and rides the
         # cross join as one long per side — the bound filter above the
         # cross then rejects most pairs before the JW kernel ever runs
-        mask_min = int(
-            os.environ.get("FAST_ER_JW_MASK_MIN_PAIRS", MASK_MIN_PAIRS)
-        )
-        if mask and na * nb >= mask_min:
+        if mask and na * nb >= MASK_MIN_PAIRS:
             vals_a = vals_a.withColumn("__ma", char_mask_jvm(F.col("val_a").cast("binary")))
             vals_b = vals_b.withColumn("__mb", char_mask_jvm(F.col("val_b").cast("binary")))
         # broadcast whichever side is SMALLER: the budget bounds na*nb, not
@@ -217,17 +213,12 @@ def scored_value_pairs(
     # At the defaults (p=0.1, lower=0.88): random name pairs share <1 mask
     # bit while the bound demands ~0.7*len matches, so the overwhelming
     # majority of cross-product candidates never reach the kernel.
-    # FAST_ER_JW_MASK=0 disables (A/B escape hatch); below MASK_MIN_PAIRS
-    # implied pairs default_value_candidates skips it anyway (fixed plan
-    # overhead exceeds the whole unpruned kernel cost there).
+    # Below MASK_MIN_PAIRS implied pairs default_value_candidates skips it
+    # (fixed plan overhead exceeds the whole unpruned kernel cost there).
     mask_coef = 0.0
     if 4 * p < 1:
         mask_coef = 3 * ((lower - 4 * p) / (1 - 4 * p)) - 1
-    use_mask = (
-        mask_coef > 0
-        and candidates is None
-        and os.environ.get("FAST_ER_JW_MASK", "1") != "0"
-    )
+    use_mask = mask_coef > 0 and candidates is None
     if candidates is None:
         cand = default_value_candidates(vals_a, vals_b, triangular, sizes=sizes, mask=use_mask)
     else:

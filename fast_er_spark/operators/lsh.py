@@ -2,14 +2,16 @@
 
 The scale replacement for the reference's all-pairs GPU loop
 (comparison.py:133-186): instead of scoring |A|x|B| pairs, documents are
-shingled, MinHash-signed (vectorized pandas_udf, functions/minhash.py), and
-banded — two docs become a candidate pair iff some band of their signatures
-collides. Banding, bucketing and the within-bucket self-join are plain
-DataFrame ops (NOT pyspark.ml MinHashLSH) so partitioning and skew handling
-stay explicit, per BASELINE.json north_rule:
+shingled, MinHash-signed and banded — two docs become a candidate pair iff
+some band of their signatures collides. Banding, bucketing and the
+within-bucket self-join are plain DataFrame ops (NOT pyspark.ml MinHashLSH)
+so partitioning and skew handling stay explicit, per BASELINE.json
+north_rule:
 
-- band hashes are computed JVM-side (xxhash64 over a signature slice) — the
-  only Python is the Arrow-batched signature UDF;
+- word shingles are signed by the compiled JVM OPH kernel
+  (functions/jvm_sketch.py); char shingles by the Arrow-batched k-permutation
+  UDF (functions/minhash.py), the only Python on this path;
+- band hashes are computed JVM-side (xxhash64 over a signature slice);
 - ONE shuffle keyed on (band, band_hash) gathers bucket members (hash agg,
   no sort); pairs are emitted by a JVM array expression — no self-join;
 - hot buckets (Zipf-skewed duplicate clusters) are capped: buckets larger
@@ -39,11 +41,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.jvm_sketch import ensure_jvm_udfs, oph_signature_jvm, sig_and_shingles_jvm
-from ..functions.minhash import minhash_batch, oph_signature_batch
+from ..functions.minhash import minhash_batch
 
 __all__ = [
     "with_minhash_signature",
     "fused_sketch_frame",
+    "band_hash_array",
     "band_buckets",
     "bucket_member_pairs",
     "lsh_candidate_pairs",
@@ -81,52 +84,45 @@ def with_minhash_signature(
     mode: str = "word",
     seed: int = 42,
     out_col: str = "minhash",
-    scheme: str = "kperm",
 ) -> DataFrame:
-    """Add an ArrayType(LongType) MinHash signature column.
+    """Add an ArrayType(LongType) MinHash signature column; the shingle
+    ``mode`` picks the kernel.
 
-    - ``scheme='kperm'``: classic K-permutation family (Arrow pandas_udf).
-    - ``scheme='oph'``: one-permutation hashing with rotation densification
-      (Arrow pandas_udf) — O(shingles) instead of O(K * shingles) per doc.
-    - ``scheme='oph_jvm'``: the same OPH algorithm compiled INSIDE the
-      executor JVM (functions/jvm_sketch.py): no Arrow transfer, no Python
-      worker — the fastest signature path (word mode only).
+    - ``mode='word'``: one-permutation hashing compiled inside the executor
+      JVM (jvm_sketch.oph_signature_jvm): no Arrow transfer, no Python
+      worker. ``num_perm`` must be a power of two; blank text signs NULL.
+    - ``mode='char'``: the classic K-permutation family (Arrow pandas_udf,
+      minhash.minhash_batch), whose recall on short values the char-LSH
+      value candidates are tuned for (agreement.py).
 
-    Every scheme keeps E[slot match] = Jaccard; the THREE families produce
-    mutually incompatible signatures — never mix them in one index."""
-    if scheme == "oph_jvm":
-        if mode != "word":
-            raise ValueError("oph_jvm supports word mode only")
+    Both keep E[slot match] = Jaccard, but the two families are mutually
+    incompatible — never mix modes in one index."""
+    if mode == "word":
         ensure_jvm_udfs(df.sparkSession)
         return df.withColumn(out_col, oph_signature_jvm(text_col, num_perm, n, seed))
-    batch = {"kperm": minhash_batch, "oph": oph_signature_batch}[scheme]
+    if mode != "char":
+        raise ValueError(f"mode must be 'word' or 'char', got {mode!r}")
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig(texts: pd.Series) -> pd.Series:
-        return batch(texts, num_perm=num_perm, n=n, mode=mode, seed=seed)
+        return minhash_batch(texts, num_perm=num_perm, n=n, mode=mode, seed=seed)
 
     return df.withColumn(out_col, sig(F.col(text_col)))
 
 
-def band_buckets(
-    df: DataFrame,
-    id_col: str,
-    sig_col: str = "minhash",
-    bands: int = 32,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """(id, band, bucket) — one row per (doc, band); bucket = xxhash64 of the
-    signature slice, computed JVM-side (no UDF).
+def band_hash_array(sig_col: str = "minhash", bands: int = 32, rows_per_band: int = 4):
+    """array<long> of the ``bands`` band hashes of ``sig_col`` — xxhash64 of
+    (band index, signature slice), computed JVM-side (no UDF) — or NULL for
+    a NULL signature, so ``posexplode`` of it emits no buckets.
 
-    Rows with a NULL signature emit no buckets: xxhash64 IGNORES a null
-    slice argument, so otherwise every null-signature row would hash to
-    the same constant bucket per band and all such rows (e.g. blank docs
-    under the JVM OPH kernel, FastErUdfs.java) would pair with each other.
-    The guard is a WHEN inside the explode input (posexplode of a null
-    array emits no rows), NOT a .where() on the signature column — a
-    filter referencing a UDF column splits the plan into filter+project
-    stages that each evaluate the signature UDF (measured: 2 ArrowEvalPython
-    stages, 2x the dominant corpus-scale cost)."""
+    The null guard matters: xxhash64 IGNORES a null slice argument, so
+    otherwise every null-signature row (blank docs under the JVM OPH kernel,
+    FastErUdfs.java) would hash to the same constant bucket per band and all
+    such rows would pair with each other. It is a WHEN inside the explode
+    input, NOT a .where() on the signature column — a filter referencing a
+    UDF column splits the plan into filter+project stages that each evaluate
+    the signature UDF (measured: 2 ArrowEvalPython stages, 2x the dominant
+    corpus-scale cost)."""
     # ONE parsed SQL string, not `bands` Column objects: each Column op is a
     # py4j round trip, and 32 xxhash64(slice(...)) built per invocation
     # measured ~0.3 s of pure driver-side construction per query — the
@@ -140,11 +136,21 @@ def band_buckets(
         )
         + ")"
     )
+    return F.when(F.col(sig_col).isNotNull(), band_hashes)
+
+
+def band_buckets(
+    df: DataFrame,
+    id_col: str,
+    sig_col: str = "minhash",
+    bands: int = 32,
+    rows_per_band: int = 4,
+) -> DataFrame:
+    """(id, band, bucket) — one row per (doc, band) with a non-NULL
+    signature; bucket = band_hash_array's hash of the signature slice."""
     return df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(
-            F.when(F.col(sig_col).isNotNull(), band_hashes)
-        ).alias("band", "bucket"),
+        F.posexplode(band_hash_array(sig_col, bands, rows_per_band)).alias("band", "bucket"),
     )
 
 
@@ -161,7 +167,6 @@ def lsh_candidate_pairs(
     max_bucket_size: int = 2000,
     num_partitions: int | None = None,
     star_pivots: int = 3,
-    scheme: str = "kperm",
     mark_star: bool = False,
     presigned: DataFrame | None = None,
 ) -> DataFrame:
@@ -178,7 +183,7 @@ def lsh_candidate_pairs(
     ``presigned``: an (id, minhash) frame with signatures already computed
     (e.g. the fused signature+shingle kernel, jvm_sketch.py::
     sig_and_shingles_jvm, which shares one tokenization pass with the
-    verify stage). When given, ``df``/``text_col``/``scheme`` are ignored
+    verify stage). When given, ``df``/``text_col``/``mode`` are ignored
     for signing; the signatures MUST come from one family at this
     num_perm."""
     if bands * rows_per_band > num_perm:
@@ -191,7 +196,7 @@ def lsh_candidate_pairs(
         base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")).where(
             F.col("__text").isNotNull() & (F.length(F.trim(F.col("__text"))) > 0)
         )
-        signed = with_minhash_signature(base, "__text", num_perm, n, mode, seed, scheme=scheme)
+        signed = with_minhash_signature(base, "__text", num_perm, n, mode, seed)
     ex = band_buckets(signed, "id", "minhash", bands, rows_per_band)
     if num_partitions:
         ex = ex.repartition(num_partitions, "band", "bucket")

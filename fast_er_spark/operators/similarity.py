@@ -47,50 +47,9 @@ def _norm(a):
 # once per PAIR; per row it runs once on the same array with the same
 # operation order, so the cosine is bit-identical (same doubles divided)
 # while 2 of the 3 per-pair interpreter folds disappear. The dot fold stays
-# per-pair by necessity, and stays an EXPRESSION on purpose — the Arrow
-# fold-exact variant measured slower at every dim tested (_seq_cos_udf).
-
-
-def _seq_cos_udf():
-    """Arrow-batched cosine with SEQUENTIAL-FOLD-IDENTICAL semantics —
-    a MEASURED NEGATIVE RESULT, kept as evidence (scripts/bench_rerank.py,
-    PERF.md round 5): 0.71x the expression fold at 2M pairs x dim 64 and
-    0.36x at 400k x dim 512, with 0/2000 bit mismatches. The float fold
-    CAN be replayed exactly in Arrow (loop over dim, vectorized over the
-    batch), but shipping both full vectors per pair through Arrow plus
-    3*dim numpy kernel launches per batch costs more than the interpreter
-    it replaces — unlike the near-dup verify path (PERF.md round 4), whose
-    win came from per-VECTOR work and a single einsum. lsh_topk/ivf_topk
-    therefore deliberately keep the `_dot/_norm` expression re-rank.
-
-    Mechanics (if ever revisited): accumulate dot += a[j]*b[j],
-    na += a[j]^2, nb += b[j]^2 left-to-right in float64 — bit-identical to
-    aggregate()'s running sum — then dot/(sqrt(na)*sqrt(nb)) exactly as
-    the expression divides. Null vector -> null."""
-
-    @F.pandas_udf(T.DoubleType())
-    def seq_cos(qa: pd.Series, qb: pd.Series) -> pd.Series:
-        mask = qa.isna() | qb.isna()
-        out = np.full(len(qa), np.nan)
-        if (~mask).any():
-            a = np.stack(qa[~mask].to_numpy()).astype(np.float64, copy=False)
-            b = np.stack(qb[~mask].to_numpy()).astype(np.float64, copy=False)
-            dot = np.zeros(a.shape[0])
-            na = np.zeros(a.shape[0])
-            nb = np.zeros(a.shape[0])
-            for j in range(a.shape[1]):
-                x, y = a[:, j], b[:, j]
-                dot = dot + x * y
-                na = na + x * x
-                nb = nb + y * y
-            out[~mask.to_numpy()] = dot / (np.sqrt(na) * np.sqrt(nb))
-        res = pd.Series(out)
-        res[mask] = None
-        return res
-
-    # nondeterministic marker: stops Catalyst cloning the UDF into both a
-    # Filter and a Project (two ArrowEvalPython stages — round-2 finding)
-    return seq_cos.asNondeterministic()
+# per-pair by necessity, and stays an EXPRESSION on purpose — an Arrow
+# fold-exact variant measured slower at every dim tested (PERF.md round 5
+# #5: 0.71x at 2M pairs x dim 64, 0.36x at 400k x dim 512).
 
 
 def cosine_topk(
@@ -434,7 +393,7 @@ def lsh_topk(
         cand = pairs if cand is None else cand.unionByName(pairs)
     cand = cand.dropDuplicates(["qid", "vid"])
     # expression re-rank KEPT on purpose: the Arrow fold-exact variant
-    # measured SLOWER at every dim tested (see _seq_cos_udf docstring);
+    # measured SLOWER at every dim tested (PERF.md round 5 #5);
     # norms ride the join sides (see module note — bit-identical cos)
     scored = (
         cand.join(q, "qid")
@@ -544,7 +503,7 @@ def ivf_topk(
     ).withColumn("cn", _norm(F.col("cv"))).withColumn(
         "cell", F.explode(assign_cells(F.col("cv")))
     )
-    # expression re-rank KEPT on purpose (see _seq_cos_udf: the Arrow
+    # expression re-rank KEPT on purpose (PERF.md round 5 #5: the Arrow
     # fold-exact variant measured slower at every dim tested); dedup AFTER
     # scoring so the dedup shuffle carries one 8-byte cos, not two vectors;
     # norms ride the join sides (see module note — bit-identical cos)

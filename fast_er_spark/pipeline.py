@@ -46,15 +46,9 @@ class DedupConfig:
     num_perm: int = 128
     bands: int = 32
     rows_per_band: int = 4
+    # word shingles, signed by the compiled JVM OPH kernel: verification
+    # (verify_pairs_jaccard) always shingles words, so the sketch must too
     ngram: int = 3
-    # word shingles only: verification (verify_pairs_jaccard) always
-    # shingles words, so another mode would sketch one set and verify another
-    mode: str = "word"
-    # 'oph_jvm' is the compiled executor-JVM kernel (~6x the Python
-    # signature stage, PERF.md round 3); 'oph' and 'kperm' are the Arrow
-    # kernels. Signature families are mutually incompatible, and the value
-    # enters fingerprint(), so a resumed run never mixes them.
-    sketch: str = "oph_jvm"
     threshold: float = 0.8
     seed: int = 42
     max_bucket_size: int = 2000
@@ -72,15 +66,11 @@ class DedupConfig:
     # fraction (30-50% on web corpora)
     pregroup_exact: bool = False
 
-    def __post_init__(self):
-        if self.mode != "word":
-            raise ValueError(
-                f"DedupConfig(mode={self.mode!r}): only mode='word' is supported — "
-                "verification compares word shingles, so the LSH sketch must too"
-            )
-
     def fingerprint(self) -> str:
-        return hashlib.sha256(json.dumps(asdict(self), sort_keys=True).encode()).hexdigest()[:16]
+        # the retired mode/sketch fields stay in the hash at the values every
+        # run used, so stage tables written before their removal still resume
+        fields = {**asdict(self), "mode": "word", "sketch": "oph_jvm"}
+        return hashlib.sha256(json.dumps(fields, sort_keys=True).encode()).hexdigest()[:16]
 
 
 @dataclass
@@ -243,9 +233,9 @@ class DedupPipeline:
             lambda: lsh_candidate_pairs(
                 sketch_docs, "id", "text",
                 num_perm=c.num_perm, bands=c.bands, rows_per_band=c.rows_per_band,
-                n=c.ngram, mode=c.mode, seed=c.seed,
+                n=c.ngram, seed=c.seed,
                 max_bucket_size=c.max_bucket_size, num_partitions=c.num_partitions,
-                scheme=c.sketch, mark_star=True,
+                mark_star=True,
             ),
             resume,
         )

@@ -63,8 +63,8 @@ def get_spark(
         # workload: 232 tasks x 1M-slot map init + page churn exceeds what
         # the fast path saves when keys barely repeat.
         .config("spark.sql.codegen.aggregate.fastHashMap.capacityBit", "16")
-        # UI off by default (saves a jetty server per test session); profiling
-        # scripts export SPARK_UI_ENABLED=true to read the stage REST API
+        # UI off by default (saves a jetty server per test session); export
+        # SPARK_UI_ENABLED=true to watch a live session in the web UI
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
         .config("spark.sql.session.timeZone", "UTC")
     )

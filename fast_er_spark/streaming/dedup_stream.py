@@ -76,7 +76,6 @@ def streaming_near_dup(
     n: int = 3,
     mode: str = "word",
     seed: int = 42,
-    scheme: str = "oph",
     watermark: str = "1 hour",
     min_est: float = 0.5,
     max_bucket_state: int = 256,
@@ -85,41 +84,36 @@ def streaming_near_dup(
     (applyInPandasWithState — the custom stateful operator path).
 
     Each incoming page is MinHash-signed and banded exactly like the batch
-    pipeline; state lives per (band, bucket) and holds the ids + full
-    signatures of up to ``max_bucket_state`` docs seen within the watermark
-    horizon (event-time timeout expires idle buckets, so state is bounded by
-    horizon x bucket fan-out, never stream lifetime). A new page colliding
-    with a stored signature at estimated Jaccard >= ``min_est`` emits
-    (id, prior_id, est_jaccard, band) — candidates, to be exact-verified
-    downstream exactly like the batch sketch-then-verify contract. A pair
-    colliding in several bands emits several rows; dedupe on (id, prior_id).
+    pipeline (the shingle ``mode`` picks the kernel; blank docs sign NULL
+    under the word-mode JVM kernel and emit no band keys); state lives per
+    (band, bucket) and holds the ids + full signatures of up to
+    ``max_bucket_state`` docs seen within the watermark horizon (event-time
+    timeout expires idle buckets, so state is bounded by horizon x bucket
+    fan-out, never stream lifetime). A new page colliding with a stored
+    signature at estimated Jaccard >= ``min_est`` emits (id, prior_id,
+    est_jaccard, band) — candidates, to be exact-verified downstream exactly
+    like the batch sketch-then-verify contract. A pair colliding in several
+    bands emits several rows; dedupe on (id, prior_id).
     """
     import pandas as pd
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.lsh import with_minhash_signature
+    from ..operators.lsh import band_hash_array, with_minhash_signature
 
     horizon_ms = _duration_ms(watermark)
 
     signed = with_minhash_signature(
-        stream.withWatermark(ts_col, watermark),
-        text_col, num_perm, n, mode, seed, scheme=scheme,
+        stream.withWatermark(ts_col, watermark), text_col, num_perm, n, mode, seed
     )
     # one generator select keeps ts+minhash alongside the band keys, so the
     # signature UDF runs exactly once (a band_buckets + self-join would
     # re-evaluate the UDF per consumer — PERF.md)
-    band_hashes = F.array(
-        *[
-            F.xxhash64(F.lit(b), F.slice(F.col("minhash"), b * rows_per_band + 1, rows_per_band))
-            for b in range(bands)
-        ]
-    )
     banded = signed.select(
         F.col(id_col).alias("id"),
         F.col(ts_col).alias("ts"),
         "minhash",
-        F.posexplode(band_hashes).alias("band", "bucket"),
+        F.posexplode(band_hash_array("minhash", bands, rows_per_band)).alias("band", "bucket"),
     )
 
     out_type = T.StructType([

@@ -50,10 +50,6 @@ def main() -> None:
     ap.add_argument("--substring-min-span", type=int, default=96,
                     help="exact shared-span (LCS) a substring candidate must "
                          "prove before it may merge clusters; 0 disables")
-    ap.add_argument("--sketch", choices=["oph_jvm", "oph", "kperm"],
-                    default="oph_jvm",
-                    help="MinHash family: compiled JVM one-permutation hashing, "
-                         "Arrow one-permutation hashing, or classic k-perm")
     ap.add_argument("--pregroup-exact", action="store_true",
                     help="collapse byte-identical texts before the sketch path")
     ap.add_argument("--no-resume", action="store_true")
@@ -76,7 +72,6 @@ def main() -> None:
         max_bucket_size=args.max_bucket_size,
         substring_pass=not args.no_substring_pass,
         substring_min_span=args.substring_min_span,
-        sketch=args.sketch,
         pregroup_exact=args.pregroup_exact,
         num_partitions=args.num_partitions,
     )

@@ -23,10 +23,10 @@ deterministic synthetic corpus (vectorized generator below).
 
 Usage: python scripts/scaling_bench.py [n_docs]
     [executors|executors2|topology|threads|linkage|linkage2|linkage_topology|
-     cpu_control|cpu_control2] [scheme]
-``scheme`` (dedup modes only): kperm | oph | oph_jvm (compiled executor-JVM
-kernel; requires a JDK on the driver — the jar ships to executors via the
-session file server exactly like --jars).
+     cpu_control|cpu_control2]
+The dedup modes sign with the compiled executor-JVM kernel: the driver needs
+a JDK, and the jar ships to executors via the session file server exactly
+like --jars.
 Prints one JSON line; recorded in BASELINE.md.
 """
 
@@ -52,7 +52,6 @@ master, cores, data = sys.argv[1], int(sys.argv[2]), sys.argv[3]
 # local-cluster[n,c,mem] sets WORKER capacity; executors still default to
 # 1g and OOM-loop on big inputs unless spark.executor.memory is set
 exec_mem = sys.argv[4] if len(sys.argv) > 4 else "7g"
-scheme = sys.argv[5] if len(sys.argv) > 5 else "kperm"
 # ship the package to executor python workers, spark-submit --py-files style
 # (required in local-cluster mode: executors are separate JVMs whose python
 # workers don't inherit the driver's sys.path)
@@ -78,12 +77,12 @@ n = docs.count()  # materialize cache: measure compute, not parquet read
 
 t0 = time.perf_counter()
 cand = lsh_candidate_pairs(docs, "id", "text", num_perm=128, bands=32,
-                           rows_per_band=4, n=3, seed=42, scheme=scheme)
+                           rows_per_band=4, n=3, seed=42)
 ver = verify_pairs_jaccard(cand, docs, "id", "text", n=3, threshold=0.8)
 clusters = connected_components(ver, nodes=docs.select("id"))
 clusters.write.format("noop").mode("overwrite").save()
 wall = time.perf_counter() - t0
-print(json.dumps({{"master": master, "cores": cores, "docs": n, "scheme": scheme,
+print(json.dumps({{"master": master, "cores": cores, "docs": n,
                    "wall_sec": round(wall, 2),
                    "docs_per_sec": round(n / wall, 1)}}))
 spark.stop()
@@ -191,17 +190,15 @@ def _steal_sec() -> float:
 
 
 def run_level(master: str, cores: int, data: str, trials: int = 3,
-              exec_mem: str = "7g", scheme: str = "kperm",
-              template: str | None = None) -> dict:
+              exec_mem: str = "7g", template: str | None = None) -> dict:
     """Min-of-N trials with per-trial hypervisor-steal accounting."""
     script = (template or WORKER).format(repo=REPO)
-    extra = [exec_mem] if template else [exec_mem, scheme]
     best = None
     samples = []
     for _ in range(trials):
         s0 = _steal_sec()
         out = subprocess.run(
-            [sys.executable, "-c", script, master, str(cores), data, *extra],
+            [sys.executable, "-c", script, master, str(cores), data, exec_mem],
             capture_output=True, text=True, timeout=2400,
         )
         stolen = round(_steal_sec() - s0, 1)
@@ -337,14 +334,13 @@ def main() -> None:
     if mode == "linkage_topology":
         linkage_scaling(n if len(sys.argv) > 1 else 30_000, mode="topology")
         return
-    scheme = sys.argv[3] if len(sys.argv) > 3 else "kperm"
     lo_master, lo_cores, hi_master, hi_cores, exec_mem, label = MODES[mode]
     core_ratio = hi_cores // lo_cores if hi_cores > lo_cores else 1
     with tempfile.TemporaryDirectory(prefix="scaling_corpus_") as td:
         data = os.path.join(td, "corpus.parquet")
         synth_corpus(data, n)
-        lo = run_level(lo_master, lo_cores, data, exec_mem=exec_mem, scheme=scheme)
-        hi = run_level(hi_master, hi_cores, data, exec_mem=exec_mem, scheme=scheme)
+        lo = run_level(lo_master, lo_cores, data, exec_mem=exec_mem)
+        hi = run_level(hi_master, hi_cores, data, exec_mem=exec_mem)
     eff = hi["docs_per_sec"] / (core_ratio * lo["docs_per_sec"])
     metric = (f"dedup_scaling_efficiency_Nx4_{mode}" if core_ratio > 1
               else f"dedup_multi_executor_overhead_{mode}")

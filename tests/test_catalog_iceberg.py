@@ -1,11 +1,12 @@
-"""Iceberg-branch coverage for StageCatalog — gated on the runtime jar.
+"""Iceberg-branch coverage for StageCatalog.
 
-The sandbox image ships no iceberg-spark-runtime jar and has no network, so
-this test SKIPS there (the parquet fallback is covered by test_pipeline).
-On any machine with the jar (ICEBERG_JAR env var, or dropped into
-$SPARK_HOME/jars), it runs the real branch: createOrReplace / read /
-append / tableExists against a hadoop-type catalog in a tmpdir, in its own
-subprocess (catalog + jar configs must be set at JVM launch)."""
+The append contract runs everywhere against stub writer objects. The real
+branch is gated on the runtime jar: without an iceberg-spark-runtime jar it
+SKIPS (the parquet fallback is covered by test_pipeline). On any machine
+with the jar (ICEBERG_JAR env var, or dropped into $SPARK_HOME/jars), it
+runs createOrReplace / read / append / tableExists against a hadoop-type
+catalog in a tmpdir, in its own subprocess (catalog + jar configs must be
+set at JVM launch)."""
 
 import glob
 import os
@@ -70,3 +71,63 @@ def test_stage_catalog_iceberg_branch():
         capture_output=True, text=True, timeout=600,
     )
     assert "ICEBERG_OK" in out.stdout, out.stderr[-2000:]
+
+
+class _StubWriter:
+    def __init__(self, calls: list, fail_append: bool):
+        self.calls, self.fail_append = calls, fail_append
+
+    def append(self):
+        self.calls.append("append")
+        if self.fail_append:
+            raise RuntimeError("commit conflict")
+
+    def create(self):
+        self.calls.append("create")
+
+    def createOrReplace(self):  # noqa: N802 — Spark's DataFrameWriterV2 name
+        self.calls.append("createOrReplace")
+
+
+class _StubFrame:
+    def __init__(self, calls: list, fail_append: bool = False):
+        self.calls, self.fail_append = calls, fail_append
+
+    def writeTo(self, table):  # noqa: N802
+        return _StubWriter(self.calls, self.fail_append)
+
+
+class _StubSpark:
+    def __init__(self, existing: set):
+        self.existing = existing
+        self.catalog = self
+
+    def sql(self, _query):
+        return None
+
+    def tableExists(self, table):  # noqa: N802
+        return table in self.existing
+
+
+def test_iceberg_append_never_replaces_existing_table():
+    """A failed append to an existing table must raise and leave the table
+    alone: never fall back to createOrReplace (which would wipe every
+    earlier _metrics/_lineage row) nor to create. A missing table is
+    created; an existing one is appended to."""
+    from fast_er_spark.catalog import StageCatalog
+
+    cat = StageCatalog(_StubSpark({"it.t._metrics"}), "/unused", iceberg_catalog="it", namespace="t")
+    assert cat.iceberg == "it"
+
+    calls: list = []
+    with pytest.raises(RuntimeError, match="commit conflict"):
+        cat.append(_StubFrame(calls, fail_append=True), "_metrics")
+    assert calls == ["append"]
+
+    calls = []
+    cat.append(_StubFrame(calls), "_metrics")
+    assert calls == ["append"]
+
+    calls = []
+    cat.append(_StubFrame(calls), "_lineage")
+    assert calls == ["create"]

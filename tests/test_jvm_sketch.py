@@ -288,8 +288,9 @@ def test_lcs_len_jvm_astral_code_points(spark):
 
 
 def test_oph_jvm_lsh_verified_pairs_recall(spark):
-    """The JVM scheme must clear the same recall gate as kperm/oph through
-    the identical band/verify path (verification is family-agnostic)."""
+    """The JVM kernel (word mode's signature path) must clear the >=0.99
+    recall gate through the band/verify path (verification is
+    family-agnostic)."""
     from fixtures.synth import pages
 
     from fast_er_spark.operators.lsh import lsh_candidate_pairs
@@ -302,7 +303,7 @@ def test_oph_jvm_lsh_verified_pairs_recall(spark):
 
     cand = lsh_candidate_pairs(
         df, "doc_id", "text", num_perm=128, bands=32, rows_per_band=4,
-        n=3, seed=42, scheme="oph_jvm",
+        n=3, seed=42,
     )
     verified = verify_pairs_jaccard(cand, df, "doc_id", "text", n=3, threshold=0.8)
     got = {(int(r.id_a), int(r.id_b)) for r in verified.collect()}
@@ -450,6 +451,7 @@ def test_scored_value_pairs_mask_filter_invariant(spark, monkeypatch):
     import random
 
     from fast_er_spark.functions.jw import discretize, jaro_winkler_bytes
+    from fast_er_spark.operators import agreement
     from fast_er_spark.operators.agreement import scored_value_pairs
 
     rng = random.Random(21)
@@ -473,12 +475,11 @@ def test_scored_value_pairs_mask_filter_invariant(spark, monkeypatch):
             if lvl:
                 want.add((a, b, lvl))
 
-    monkeypatch.setenv("FAST_ER_JW_MASK", "1")
     # force past the small-pair volume gate (MASK_MIN_PAIRS) so the filter
-    # actually runs on this ~62k-pair fixture
-    monkeypatch.setenv("FAST_ER_JW_MASK_MIN_PAIRS", "0")
+    # actually runs on this ~62k-pair fixture; an unreachable gate turns it off
+    monkeypatch.setattr(agreement, "MASK_MIN_PAIRS", 0)
     on = run()
-    monkeypatch.setenv("FAST_ER_JW_MASK", "0")
+    monkeypatch.setattr(agreement, "MASK_MIN_PAIRS", 10**18)
     off = run()
     assert on == off and want == off
     assert off  # non-degenerate fixture
@@ -489,6 +490,7 @@ def test_char_mask_volume_gate(spark, monkeypatch):
     clears MASK_MIN_PAIRS: at small volumes its fixed plan overhead exceeds
     the whole unpruned kernel cost (measured +0.35 s on the sf0.1 supplier
     dedup, PERF.md round 5), so default_value_candidates skips it."""
+    from fast_er_spark.operators import agreement
     from fast_er_spark.operators.agreement import scored_value_pairs
 
     va = spark.createDataFrame([(f"nm{i}",) for i in range(40)], "val_a string")
@@ -497,13 +499,11 @@ def test_char_mask_volume_gate(spark, monkeypatch):
     def plan(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
 
-    monkeypatch.setenv("FAST_ER_JW_MASK", "1")
-    monkeypatch.delenv("FAST_ER_JW_MASK_MIN_PAIRS", raising=False)
     # 1,600 implied pairs < MASK_MIN_PAIRS: gate skips the mask
     gated = scored_value_pairs(va, vb, 0.1, 0.88, 0.94)
     assert "__ma" not in plan(gated)
     # forcing the threshold to 0 re-enables it on the same frames
-    monkeypatch.setenv("FAST_ER_JW_MASK_MIN_PAIRS", "0")
+    monkeypatch.setattr(agreement, "MASK_MIN_PAIRS", 0)
     forced = scored_value_pairs(va, vb, 0.1, 0.88, 0.94)
     assert "__ma" in plan(forced)
 
@@ -599,7 +599,7 @@ def test_verify_merge_scan_matches_expression_path(spark):
     ).localCheckpoint()
     cand = lsh_candidate_pairs(
         df, "doc_id", "text", num_perm=128, bands=32, rows_per_band=4,
-        n=3, seed=42, scheme="oph_jvm",
+        n=3, seed=42,
     ).localCheckpoint()
     got = verify_pairs_jaccard(cand, df, "doc_id", "text", n=3, threshold=0.8)
     sh = df.select(

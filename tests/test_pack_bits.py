@@ -23,7 +23,7 @@ import random
 
 import pytest
 
-from fast_er_spark.linkage import _PACK_MAX_ID, _pack_ok, _single_long_bits
+from fast_er_spark.linkage import _single_long_bits
 from fast_er_spark.patterns import n_patterns, strides
 
 SHAPES = [(1, 0), (1, 1), (2, 0), (3, 1), (4, 1), (4, 4), (2, 6), (6, 2)]
@@ -92,9 +92,3 @@ def test_layout_refused_when_63_bits_overflow():
     # unknown counts (natural keys) and fuzzy-free fits never pack
     assert _single_long_bits(None, 10, st, 4, 1) is None
     assert _single_long_bits(10, 10, strides(0, 2), 0, 2) is None
-
-
-def test_pack_ok_boundary():
-    assert _pack_ok(_PACK_MAX_ID - 1, 1)
-    assert not _pack_ok(_PACK_MAX_ID, 1)
-    assert not _pack_ok(None, 1)

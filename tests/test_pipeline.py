@@ -372,25 +372,24 @@ def test_boilerplate_sentence_does_not_merge_clusters(spark, tmp_path):
 
 
 def test_dedup_config_rejects_char_mode():
-    """Verification shingles words whatever the mode, so a char-mode config
-    would sketch one shingle set and verify another: it must be refused at
-    construction, before any stage runs. The default config keeps the
-    fingerprint of the resolved word-mode, oph_jvm default, so existing
-    stage tables still resume."""
+    """Verification shingles words, so the pipeline has no shingle-mode
+    setting at all: a char-mode config is refused at construction, before
+    any stage runs. The default config keeps the fingerprint of the former
+    word-mode, oph_jvm default, so existing stage tables still resume."""
     from fast_er_spark.pipeline import DedupConfig
 
-    with pytest.raises(ValueError, match="mode='word'"):
+    with pytest.raises(TypeError, match="mode"):
         DedupConfig(mode="char")
-    with pytest.raises(ValueError, match="word shingles"):
-        DedupConfig(mode="char", sketch="oph")
-    assert DedupConfig().sketch == "oph_jvm"
     assert DedupConfig().fingerprint() == "c4f1e8bec72c1bb4"
 
 
 def test_streaming_near_dup_lsh(spark, corpus, tmp_path):
     """Stateful streaming LSH (applyInPandasWithState): near-dup candidates
     must cover >=99% of true Jaccard>=0.8 pairs across micro-batches (state
-    carries between batches: maxFilesPerTrigger=1 over 4 files)."""
+    carries between batches: maxFilesPerTrigger=1 over 4 files). Blank and
+    whitespace-only docs sign NULL under the JVM kernel and must never pair
+    — not with each other, not with anything."""
+    from pyspark.sql import Row
     from pyspark.sql import functions as F
 
     from fast_er_spark.streaming.dedup_stream import streaming_near_dup
@@ -399,7 +398,17 @@ def test_streaming_near_dup_lsh(spark, corpus, tmp_path):
     texts = {r["doc_id"]: r["text"] for r in rows}
     src = str(tmp_path / "nd_src")
     # 4 event-time-ordered files -> 4 micro-batches
-    base = df.select("doc_id", "warc_ts", "text").orderBy("warc_ts").collect()
+    base = df.select("doc_id", "warc_ts", "text").collect()
+    # blank docs spread over the event-time range, so every micro-batch
+    # sees some of them
+    top = max(texts)
+    blanks = ["", "", "", " ", "\t\n ", "   \r\n  "]
+    blank_ids = set()
+    for k, t in enumerate(blanks):
+        blank_ids.add(top + 1 + k)
+        ts = base[(k * len(base)) // len(blanks)].warc_ts
+        base.append(Row(doc_id=top + 1 + k, warc_ts=ts, text=t))
+    base.sort(key=lambda r: r.warc_ts)
     import os
     os.makedirs(src)
     chunk = (len(base) + 3) // 4
@@ -427,6 +436,7 @@ def test_streaming_near_dup_lsh(spark, corpus, tmp_path):
         for r in spark.read.parquet(out).collect()
     }
     assert all(a != b for a, b in got)
+    assert not {i for p in got for i in p} & blank_ids
 
     # the operator emits ONE best prior per colliding doc (star edges —
     # clustering closes the rest, same as the batch star guard), so the

@@ -43,12 +43,14 @@ def test_lsh_candidates_bounded_shuffles(spark):
     from fast_er_spark.operators.lsh import lsh_candidate_pairs
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    df = lsh_candidate_pairs(docs, "doc_id", "text")
-    stats = plan_stats(df)
-    # one shuffle for the bucket groupBy + one for cross-band pair dedup
-    assert stats["exchanges"] <= 3, stats
-    # exactly one Python stage: the Arrow signature UDF
-    assert stats["python_udfs"] == 1, stats
+    for mode, python_udfs in (("word", 0), ("char", 1)):
+        df = lsh_candidate_pairs(docs, "doc_id", "text", mode=mode)
+        stats = plan_stats(df)
+        # one shuffle for the bucket groupBy + one for cross-band pair dedup
+        assert stats["exchanges"] <= 3, (mode, stats)
+        # word shingles sign in the JVM kernel; char shingles take exactly
+        # one Python stage, the Arrow k-permutation UDF
+        assert stats["python_udfs"] == python_udfs, (mode, stats)
 
 
 def test_exact_dedup_is_hash_join_no_python(spark):

@@ -146,55 +146,6 @@ def test_cluster_assignments_match_oracle(spark, corpus):
     assert agree / len(want) >= 0.99
 
 
-def test_oph_lsh_verified_pairs_recall(spark, corpus):
-    """One-permutation hashing (the pipeline's production sketch) must hit
-    the same >=0.99 recall gate as the k-perm family through the identical
-    band/verify path."""
-    from fast_er_spark.operators.lsh import lsh_candidate_pairs
-    from fast_er_spark.operators.verify import verify_pairs_jaccard
-
-    df, texts = corpus
-    cand = lsh_candidate_pairs(df, "doc_id", "text", num_perm=128, bands=32,
-                               rows_per_band=4, n=N_GRAM, seed=42, scheme="oph")
-    verified = verify_pairs_jaccard(cand, df, "doc_id", "text", n=N_GRAM,
-                                    threshold=THRESHOLD)
-    got = {(int(r.id_a), int(r.id_b)) for r in verified.collect()}
-    want = jaccard_dup_pairs(texts, n=N_GRAM, mode="word", threshold=THRESHOLD)
-    assert got <= want, f"false positives: {sorted(got - want)[:5]}"
-    recall = len(got & want) / len(want)
-    assert recall >= 0.99, f"recall {recall:.4f} < 0.99 ({len(want) - len(got)} missed)"
-
-
-def test_oph_estimator_unbiased():
-    """OPH slot-match estimate must track true Jaccard (unbiased, ~1/sqrt(K)
-    rmse) on controlled-similarity pairs."""
-    import numpy as np
-    import pandas as pd
-
-    from fast_er_spark.functions.minhash import oph_signature_batch
-    from oracle.reference import shingle_set
-
-    rng = np.random.default_rng(9)
-    vocab = np.array([f"w{i:04d}" for i in range(2000)])
-    pairs = []
-    for _ in range(120):
-        a = vocab[rng.integers(0, 2000, 170)]
-        b = a.copy()
-        idx = rng.integers(0, len(b), rng.integers(1, 50))
-        b[idx] = vocab[rng.integers(0, 2000, len(idx))]
-        pairs.append((" ".join(a), " ".join(b)))
-    texts = pd.Series([p[0] for p in pairs] + [p[1] for p in pairs])
-    sig = oph_signature_batch(texts, 128, 3, "word", 42)
-    errs = []
-    for i, (x, y) in enumerate(pairs):
-        est = (np.asarray(sig[i]) == np.asarray(sig[i + len(pairs)])).mean()
-        A, B = shingle_set(x, 3, "word"), shingle_set(y, 3, "word")
-        errs.append(est - len(A & B) / len(A | B))
-    errs = np.array(errs)
-    assert abs(errs.mean()) < 0.02, errs.mean()
-    assert (errs**2).mean() ** 0.5 < 0.08
-
-
 def test_band_buckets_drops_null_signatures(spark):
     """xxhash64 ignores a null slice, so without the explicit filter every
     null-signature row (e.g. blank docs under the JVM OPH kernel) would

@@ -91,14 +91,21 @@ def test_oracle_jaccard_consistency():
 
 
 def test_oph_rejects_degenerate_num_perm():
-    import pandas as pd
-    import pytest
+    from fast_er_spark.functions.jvm_sketch import oph_signature_jvm
 
-    from fast_er_spark.functions.minhash import oph_signature_batch
-
+    # the power-of-two check runs before any Spark call: no session needed
     for bad in (1, 3, 0):
         with pytest.raises(ValueError):
-            oph_signature_batch(pd.Series(["a b c d"]), num_perm=bad)
+            oph_signature_jvm("t", num_perm=bad)
+
+
+def test_signature_kernel_rejects_unknown_mode():
+    """The shingle mode alone picks the signature kernel: 'word' or 'char',
+    nothing else (checked before the frame is touched)."""
+    from fast_er_spark.operators.lsh import with_minhash_signature
+
+    with pytest.raises(ValueError, match="'word' or 'char'"):
+        with_minhash_signature(None, "t", mode="oph")
 
 
 def test_gopher_stats_rules(spark):
@@ -277,14 +284,3 @@ def test_marker_spec_validation_and_dedup(spark):
     got = {r["i"]: (r["j"], r["p"]) for r in rows}
     assert got[0][0] == got[0][1] == [2, 1], got[0]  # 'the' once per token
     assert got[1][0] is None and got[1][1] is None  # null parity both engines
-
-
-def test_pack_gate():
-    """The packed pair key needs both row counts known and < 2^31."""
-    from fast_er_spark.linkage import _PACK_MAX_ID, _pack_ok
-
-    assert _pack_ok(10, 20)
-    assert not _pack_ok(None, 20)
-    assert not _pack_ok(10, None)
-    assert not _pack_ok(_PACK_MAX_ID, 5)
-    assert _pack_ok(_PACK_MAX_ID - 1)
