@@ -1,7 +1,9 @@
-"""Stage-table IO abstraction: Iceberg when a catalog is configured, parquet
-directories otherwise (SURVEY.md §7 — the sandbox has no Iceberg runtime jar,
-so the fallback keeps the same layout/semantics: atomic overwrite, schema on
-read, `exists` via successful-write marker).
+"""Stage-table IO abstraction: Iceberg when a catalog is named, parquet
+directories otherwise (SURVEY.md §7 — the parquet layout keeps the same
+semantics: atomic overwrite, schema on read, `exists` via successful-write
+marker). A named catalog that cannot create its namespace (runtime jar
+missing, bad credentials, a typo in the name) raises at construction; it
+never falls back to parquet, which would write every stage somewhere else.
 
 On a real cluster, configure e.g.::
 
@@ -39,9 +41,12 @@ class StageCatalog:
                 spark.sql(
                     f"CREATE NAMESPACE IF NOT EXISTS {iceberg_catalog}.{namespace}"
                 )
-                self.iceberg = iceberg_catalog
-            except Exception:
-                self.iceberg = None  # jar/catalog absent -> parquet fallback
+            except Exception as e:
+                raise RuntimeError(
+                    f"Iceberg catalog {iceberg_catalog!r} could not create namespace "
+                    f"{namespace!r}; stage tables were not written"
+                ) from e
+            self.iceberg = iceberg_catalog
 
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)

@@ -36,7 +36,7 @@ __all__ = [
     "shingle_hashes_jvm",
     "sorted_inter_union_jvm",
     "substring_anchors_jvm",
-    "lcs_len_jvm",
+    "shares_span_jvm",
     "text_stats_jvm",
     "rolling_fp_jvm",
     "marker_counts_jvm",
@@ -57,7 +57,7 @@ _JW_BIN_UDF_NAME = "fast_er_jw_level_bin"
 _CHAR_MASK_UDF_NAME = "fast_er_char_mask"
 _SHINGLE_UDF_NAME = "fast_er_shingle_hashes"
 _ANCHOR_UDF_NAME = "fast_er_substring_anchors"
-_LCS_UDF_NAME = "fast_er_lcs_len"
+_SHARES_SPAN_UDF_NAME = "fast_er_shares_span"
 _TEXT_STATS_UDF_NAME = "fast_er_text_stats"
 _ROLLING_FP_UDF_NAME = "fast_er_rolling_fp"
 _MARKER_COUNTS_UDF_NAME = "fast_er_marker_counts"
@@ -153,7 +153,7 @@ def ensure_jvm_udfs(spark: SparkSession) -> bool:
         (_SIG_SH_UDF_NAME, "FastErUdfs$SigAndShingles", T.ArrayType(T.ArrayType(T.LongType()))),
         (_INTER_UNION_UDF_NAME, "FastErUdfs$SortedInterUnion", T.LongType()),
         (_ANCHOR_UDF_NAME, "FastErUdfs$SubstringAnchors", T.ArrayType(T.LongType())),
-        (_LCS_UDF_NAME, "LcsUdfs", T.IntegerType()),
+        (_SHARES_SPAN_UDF_NAME, "LcsUdfs$SharesSpan", T.BooleanType()),
         (_TEXT_STATS_UDF_NAME, "TextUdfs", T.ArrayType(T.LongType())),
         (_ROLLING_FP_UDF_NAME, "TextUdfs$RollingFp", T.LongType()),
         (_MARKER_COUNTS_UDF_NAME, "TextUdfs$MarkerCounts", T.ArrayType(T.LongType())),
@@ -238,14 +238,15 @@ def substring_anchors_jvm(
     )
 
 
-def lcs_len_jvm(a_col, b_col, cap: int = 0) -> Column:
-    """Exact longest-common-substring length in the executor JVM
-    (jvm/LcsUdfs.java — algorithm-identical to oracle/kernels.py::lcs_len,
-    so spans match the Python reference exactly; cap<=0 = uncapped). The caller
-    must have run ensure_jvm_udfs(spark) first."""
+def shares_span_jvm(a_col, b_col, k: int) -> Column:
+    """Whether two texts share a common substring of at least ``k`` code
+    points, i.e. ``oracle/kernels.py::lcs_len(a, b) >= k`` (jvm/LcsUdfs.java
+    ::SharesSpan: a k-window hash table with every hit confirmed by code
+    points, so exact). ``k <= 0`` is always true; a null side is false
+    otherwise. The caller must have run ensure_jvm_udfs(spark) first."""
     a = F.col(a_col) if isinstance(a_col, str) else a_col
     b = F.col(b_col) if isinstance(b_col, str) else b_col
-    return F.call_udf(_LCS_UDF_NAME, a, b, F.lit(int(cap)))
+    return F.call_udf(_SHARES_SPAN_UDF_NAME, a, b, F.lit(int(k)))
 
 
 def text_stats_jvm(text_col) -> Column:

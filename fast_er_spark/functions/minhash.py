@@ -15,8 +15,9 @@ BASELINE.json input_hint ("no per-row Python" beyond the Arrow batch loop).
 
 Signatures are emitted as int64 (Spark has no unsigned types); the uint64 bit
 pattern is reinterpreted, which preserves equality — all LSH banding needs.
-Empty shingle sets get a sentinel signature derived from a per-row unique id
-so they never collide with anything.
+Empty shingle sets (blank or None text) get no signature (None), the JVM
+kernel's contract: lsh.band_hash_array emits no buckets for a null
+signature, so blank docs never pair.
 """
 
 from __future__ import annotations
@@ -87,10 +88,7 @@ def minhash_batch(
 
     for idx, base in enumerate(bases):
         if base.size == 0:
-            # unique sentinel per empty row: collides with nothing
-            sent = np.uint64(0xDEAD0000_00000000) + np.uint64(idx)
-            out[idx] = np.full(num_perm, sent, dtype=np.uint64).view(np.int64)
-            continue
+            continue  # no shingles -> no signature (stays None)
         pend.append(idx)
         pend_T += base.size
         if pend_T >= chunk_T:

@@ -1,100 +1,95 @@
 /**
- * Exact longest-common-substring length (suffix automaton of the shorter
- * string, O(|a| + |b|)), computed inside the executor JVM.
+ * Shared-span check for the substring verifier, computed inside the
+ * executor JVM.
  *
- * Algorithm mirrors oracle/kernels.py::lcs_len exactly - same
- * automaton construction, same cap short-circuit (the verifier only needs
- * span >= min_span, and cur_len grows by 1, so the short-circuit returns
- * exactly cap) - so the two engines produce identical span lengths. Both
- * strings are decoded to CODE POINT arrays first: Python len()/slicing
- * counts code points, so counting UTF-16 units here would overstate spans
- * containing astral characters (each counts 2 units but 1 code point) and
- * break the "spans match exactly" parity claim.
+ * The verifier only needs to know whether two texts share a common
+ * substring of at least k code points, i.e. whether the longest common
+ * substring (oracle/kernels.py::lcs_len) is >= k. That holds exactly when
+ * the texts share one k-code-point WINDOW, so no longest span is computed:
+ * every k-window of the shorter text goes into a primitive long
+ * open-addressing table keyed by its rolling hash, and the longer text's
+ * windows probe it. A hash hit is confirmed by comparing the code points,
+ * so the answer is exact whatever the hash does. Both strings are decoded
+ * to CODE POINT arrays first: Python len()/slicing counts code points, so
+ * counting UTF-16 units would overstate spans containing astral characters
+ * (each counts 2 units but 1 code point).
  *
- * The Python per-pair cost measured ~8 ms on ~1 KB pages; this runs in the
- * low hundreds of microseconds.
- *
- * cap <= 0 means "no cap" (full maximum).
+ * k <= 0 is always true (every pair shares an empty span); a null side is
+ * false for k > 0.
  */
 
-import java.util.HashMap;
+import java.util.Arrays;
 import org.apache.spark.sql.api.java.UDF3;
 
-public class LcsUdfs implements UDF3<String, String, Integer, Integer> {
+public final class LcsUdfs {
 
-    public static int lcsLen(String sa, String sb, int cap) {
-        if (sa == null || sb == null || sa.isEmpty() || sb.isEmpty()) return 0;
+    private LcsUdfs() {}
+
+    /** Odd multiplier of the rolling polynomial hash (mod 2^64). */
+    private static final long B = 0x100000001B3L | 1L;
+
+    public static boolean sharesSpan(String sa, String sb, int k) {
+        if (k <= 0) return true;
+        if (sa == null || sb == null) return false;
         int[] a = sa.codePoints().toArray();
         int[] b = sb.codePoints().toArray();
         if (a.length > b.length) { int[] t = a; a = b; b = t; }
-        int n = a.length;
-        int maxStates = 2 * n + 4;
-        @SuppressWarnings("unchecked")
-        HashMap<Integer, Integer>[] nxt = new HashMap[maxStates];
-        int[] link = new int[maxStates];
-        int[] len = new int[maxStates];
-        nxt[0] = new HashMap<>();
-        link[0] = -1;
-        len[0] = 0;
-        int size = 1, last = 0;
-        for (int i = 0; i < n; i++) {
-            int ch = a[i];
-            int cur = size++;
-            nxt[cur] = new HashMap<>();
-            len[cur] = len[last] + 1;
-            link[cur] = 0;
-            int p = last;
-            while (p != -1 && !nxt[p].containsKey(ch)) {
-                nxt[p].put(ch, cur);
-                p = link[p];
+        if (a.length < k) return false;
+        long bk = 1; // B^k for the rolling removal
+        for (int i = 0; i < k; i++) bk *= B;
+
+        // table of a's windows: hash -> start + 1 (0 = empty slot); a window
+        // equal to one already stored is skipped, so a repetitive text
+        // cannot grow one long probe chain
+        int wa = a.length - k + 1;
+        int cap = Integer.highestOneBit(wa) << 2;
+        int mask = cap - 1;
+        long[] keys = new long[cap];
+        int[] starts = new int[cap];
+        long h = 0;
+        for (int i = 0; i < k; i++) h = h * B + a[i];
+        for (int p = 0; ; p++) {
+            int slot = (int) mix(h) & mask;
+            while (starts[slot] != 0
+                    && !(keys[slot] == h && sameWindow(a, starts[slot] - 1, a, p, k))) {
+                slot = (slot + 1) & mask;
             }
-            if (p != -1) {
-                int q = nxt[p].get(ch);
-                if (len[p] + 1 == len[q]) {
-                    link[cur] = q;
-                } else {
-                    int clone = size++;
-                    nxt[clone] = new HashMap<>(nxt[q]);
-                    link[clone] = link[q];
-                    len[clone] = len[p] + 1;
-                    while (p != -1) {
-                        Integer to = nxt[p].get(ch);
-                        if (to == null || to != q) break;
-                        nxt[p].put(ch, clone);
-                        p = link[p];
-                    }
-                    link[q] = clone;
-                    link[cur] = clone;
-                }
+            if (starts[slot] == 0) {
+                keys[slot] = h;
+                starts[slot] = p + 1;
             }
-            last = cur;
+            if (p + 1 >= wa) break;
+            h = h * B - a[p] * bk + a[p + k];
         }
-        int best = 0, curLen = 0, v = 0;
-        int m = b.length;
-        for (int i = 0; i < m; i++) {
-            int ch = b[i];
-            while (v != 0 && !nxt[v].containsKey(ch)) {
-                v = link[v];
-                curLen = len[v];
+
+        int wb = b.length - k + 1;
+        h = 0;
+        for (int i = 0; i < k; i++) h = h * B + b[i];
+        for (int p = 0; ; p++) {
+            for (int slot = (int) mix(h) & mask; starts[slot] != 0; slot = (slot + 1) & mask) {
+                if (keys[slot] == h && sameWindow(a, starts[slot] - 1, b, p, k)) return true;
             }
-            Integer to = nxt[v].get(ch);
-            if (to != null) {
-                v = to;
-                curLen++;
-                if (curLen > best) {
-                    best = curLen;
-                    if (cap > 0 && best >= cap) return best;
-                }
-            } else {
-                v = 0;
-                curLen = 0;
-            }
+            if (p + 1 >= wb) return false;
+            h = h * B - b[p] * bk + b[p + k];
         }
-        return best;
     }
 
-    @Override
-    public Integer call(String a, String b, Integer cap) {
-        return lcsLen(a, b, cap == null ? 0 : cap);
+    private static boolean sameWindow(int[] x, int i, int[] y, int j, int k) {
+        return Arrays.equals(x, i, i + k, y, j, j + k);
+    }
+
+    /** splitmix64 finalizer: spreads the polynomial hash over the slots. */
+    private static long mix(long z) {
+        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L;
+        z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL;
+        return z ^ (z >>> 31);
+    }
+
+    /** Spark UDF: (text_a, text_b, k) -> do the texts share a k-code-point span? */
+    public static class SharesSpan implements UDF3<String, String, Integer, Boolean> {
+        @Override
+        public Boolean call(String a, String b, Integer k) {
+            return sharesSpan(a, b, k == null ? 0 : k);
+        }
     }
 }

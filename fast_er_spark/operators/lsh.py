@@ -93,7 +93,8 @@ def with_minhash_signature(
       worker. ``num_perm`` must be a power of two; blank text signs NULL.
     - ``mode='char'``: the classic K-permutation family (Arrow pandas_udf,
       minhash.minhash_batch), whose recall on short values the char-LSH
-      value candidates are tuned for (agreement.py).
+      value candidates are tuned for (agreement.py); blank text signs NULL
+      here too.
 
     Both keep E[slot match] = Jaccard, but the two families are mutually
     incompatible — never mix modes in one index."""
@@ -116,8 +117,8 @@ def band_hash_array(sig_col: str = "minhash", bands: int = 32, rows_per_band: in
     a NULL signature, so ``posexplode`` of it emits no buckets.
 
     The null guard matters: xxhash64 IGNORES a null slice argument, so
-    otherwise every null-signature row (blank docs under the JVM OPH kernel,
-    FastErUdfs.java) would hash to the same constant bucket per band and all
+    otherwise every null-signature row (blank docs under either signature
+    kernel) would hash to the same constant bucket per band and all
     such rows would pair with each other. It is a WHEN inside the explode
     input, NOT a .where() on the signature column — a filter referencing a
     UDF column splits the plan into filter+project stages that each evaluate

@@ -13,20 +13,21 @@ Expected anchor rate is 1/density per position; a shared span of s chars is
 missed with probability (1 - 1/density)^(s - anchor_len + 1) — at the default
 (32, 8) a 150-char copied span is missed with p < 2e-7.
 
-Docs sharing an anchor become containment-edge candidates via one equi-join;
-candidates are then verified with an exact longest-common-substring check
-(jvm/LcsUdfs.java). No Python on either path. This catches the duplication
-mode MinHash misses: a long verbatim block embedded in otherwise-different
-pages (whole-doc Jaccard low).
+Docs sharing an anchor become containment-edge candidates through the LSH
+bucket path (one row per anchor with its sorted holders, then
+lsh.bucket_member_pairs); candidates are then verified with an exact
+shared-span check (jvm/LcsUdfs.java). No Python on either path. This catches
+the duplication mode MinHash misses: a long verbatim block embedded in
+otherwise-different pages (whole-doc Jaccard low).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..functions.jvm_sketch import ensure_jvm_udfs, lcs_len_jvm, substring_anchors_jvm
+from ..functions.jvm_sketch import ensure_jvm_udfs, shares_span_jvm, substring_anchors_jvm
+from .lsh import bucket_member_pairs
 
 __all__ = ["doc_anchors", "anchor_pairs", "verify_anchor_pairs"]
 
@@ -86,9 +87,12 @@ def anchor_pairs(
 ) -> DataFrame:
     """(id_a, id_b) candidate containment pairs, id_a > id_b.
 
-    ``max_anchor_freq`` drops degenerate anchors shared by more than that
-    many docs into a star to the min holder (boilerplate guard — same skew
-    rationale as LSH hot buckets: bounded fan-out, connectivity kept).
+    Each anchor is an LSH-style bucket of the docs holding it
+    (lsh.bucket_member_pairs): a full clique when at most
+    ``max_anchor_freq`` docs hold it, otherwise a star to its minimum
+    holder (boilerplate guard — same skew rationale as LSH hot buckets:
+    bounded fan-out, connectivity kept). Pairs are deduplicated across
+    anchors. Relies on ``doc_anchors`` emitting each anchor once per doc.
     """
     from ..partitioning import ensure_min_parallelism
 
@@ -97,27 +101,12 @@ def anchor_pairs(
     # this guard alone; no-op once the scan outnumbers the cores)
     df = ensure_min_parallelism(df)
     anchors = doc_anchors(df, id_col, text_col, anchor_len, density, selector)
-    # frequency + min holder in one shuffle (window over the anchor key)
-    w = Window.partitionBy("anchor")
-    anchors = anchors.withColumn("afreq", F.count(F.lit(1)).over(w)).withColumn(
-        "amin", F.min("id").over(w)
+    buckets = (
+        anchors.groupBy("anchor")
+        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+        .where(F.size("ids") >= 2)
     )
-    # the windowed frame feeds THREE consumers (both clique join sides + the
-    # star branch); without materialization the text scan + anchor kernel +
-    # window shuffle re-execute per consumer (measured 3x the stage wall at
-    # 500k docs)
-    anchors = anchors.localCheckpoint(eager=False)
-
-    normal = anchors.where(F.col("afreq") <= max_anchor_freq)
-    a = normal.select("anchor", F.col("id").alias("id_a"))
-    b = normal.select("anchor", F.col("id").alias("id_b"))
-    clique = a.join(b, "anchor").where(F.col("id_a") > F.col("id_b"))
-
-    star = (
-        anchors.where((F.col("afreq") > max_anchor_freq) & (F.col("id") != F.col("amin")))
-        .select(F.col("id").alias("id_a"), F.col("amin").alias("id_b"))
-    )
-    return clique.select("id_a", "id_b").unionByName(star).dropDuplicates(["id_a", "id_b"])
+    return bucket_member_pairs(buckets, max_anchor_freq, star_pivots=1)
 
 
 def verify_anchor_pairs(
@@ -128,27 +117,27 @@ def verify_anchor_pairs(
     min_span: int = 96,
 ) -> DataFrame:
     """Keep anchor-candidate pairs whose texts REALLY share a span of at
-    least ``min_span`` chars (exact longest-common-substring check).
+    least ``min_span`` chars (code points).
 
     Anchor collision is candidate evidence only: one shared 32-char
     boilerplate sentence below the frequency cap would otherwise merge two
     unrelated pages into one cluster (round-1 VERDICT 'What's wrong' #5).
-    Verification is per-candidate and linear in page size (a suffix
-    automaton compiled in the executor JVM, jvm/LcsUdfs.java) — the same
-    sketch-then-verify contract as the Jaccard path.
+    The check is exact and linear in page size: the texts share a span of
+    ``min_span`` iff they share one ``min_span``-char window, which the
+    executor JVM finds with a window hash table confirmed char by char
+    (jvm/LcsUdfs.java) — the same sketch-then-verify contract as the
+    Jaccard path. ``min_span <= 0`` keeps every pair.
 
-    Returns (id_a, id_b, span_len) with span_len capped at min_span (the
-    automaton short-circuits once the threshold is reached).
+    Returns (id_a, id_b, span_len) with span_len = min_span: the longest
+    shared span is never computed, only that it reaches the threshold.
     """
     ensure_jvm_udfs(docs.sparkSession)
-    span_col = lcs_len_jvm(F.col("t_a"), F.col("t_b"), cap=min_span)
     t = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
     a = t.select(F.col("id").alias("id_a"), F.col("t").alias("t_a"))
     b = t.select(F.col("id").alias("id_b"), F.col("t").alias("t_b"))
     return (
         pairs.join(a, "id_a")
         .join(b, "id_b")
-        .withColumn("span_len", span_col)
-        .where(F.col("span_len") >= F.lit(min_span))
-        .select("id_a", "id_b", "span_len")
+        .where(shares_span_jvm("t_a", "t_b", min_span))
+        .select("id_a", "id_b", F.lit(min_span).cast("int").alias("span_len"))
     )

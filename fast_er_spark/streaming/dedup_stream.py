@@ -85,7 +85,7 @@ def streaming_near_dup(
 
     Each incoming page is MinHash-signed and banded exactly like the batch
     pipeline (the shingle ``mode`` picks the kernel; blank docs sign NULL
-    under the word-mode JVM kernel and emit no band keys); state lives per
+    under both kernels and emit no band keys); state lives per
     (band, bucket) and holds the ids + full signatures of up to
     ``max_bucket_state`` docs seen within the watermark horizon (event-time
     timeout expires idle buckets, so state is bounded by horizon x bucket

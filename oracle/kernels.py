@@ -9,8 +9,8 @@ value for value; the parity tests compare the two:
   statistic) twinning jvm/TextUdfs.java;
 - ``lang_id_ngram``: an Arrow pandas_udf running
   functions.text.predict_lang_ngram_py, twinning TextUdfs$NgramLangId;
-- ``lcs_len``: the suffix-automaton longest common substring that
-  jvm/LcsUdfs.java mirrors.
+- ``lcs_len``: the suffix-automaton longest common substring;
+  jvm/LcsUdfs.java::SharesSpan must answer exactly ``lcs_len(a, b) >= k``.
 """
 
 from __future__ import annotations
@@ -82,10 +82,9 @@ def lang_id_ngram(col: Column, profiles: dict | None = None) -> Column:
     return pred(col)
 
 
-def lcs_len(a: str, b: str, cap: int | None = None) -> int:
+def lcs_len(a: str, b: str) -> int:
     """Longest common substring length via a suffix automaton of the shorter
-    string — O(|a| + |b|). ``cap`` short-circuits as soon as a span of that
-    length is found."""
+    string — O(|a| + |b|)."""
     if not a or not b:
         return 0
     if len(a) > len(b):
@@ -127,10 +126,7 @@ def lcs_len(a: str, b: str, cap: int | None = None) -> int:
         if ch in nxt[v]:
             v = nxt[v][ch]
             cur_len += 1
-            if cur_len > best:
-                best = cur_len
-                if cap is not None and best >= cap:
-                    return best
+            best = max(best, cur_len)
         else:
             v = 0
             cur_len = 0

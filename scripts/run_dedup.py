@@ -48,8 +48,9 @@ def main() -> None:
     ap.add_argument("--iceberg-catalog", default=None)
     ap.add_argument("--no-substring-pass", action="store_true")
     ap.add_argument("--substring-min-span", type=int, default=96,
-                    help="exact shared-span (LCS) a substring candidate must "
-                         "prove before it may merge clusters; 0 disables")
+                    help="length (chars) of a verbatim span two docs must share "
+                         "before a substring candidate may merge clusters; "
+                         "0 keeps every candidate unverified")
     ap.add_argument("--pregroup-exact", action="store_true",
                     help="collapse byte-identical texts before the sketch path")
     ap.add_argument("--no-resume", action="store_true")

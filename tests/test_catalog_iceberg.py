@@ -2,7 +2,7 @@
 
 The append contract runs everywhere against stub writer objects. The real
 branch is gated on the runtime jar: without an iceberg-spark-runtime jar it
-SKIPS (the parquet fallback is covered by test_pipeline). On any machine
+SKIPS (the parquet path, with no catalog named, is covered by test_pipeline). On any machine
 with the jar (ICEBERG_JAR env var, or dropped into $SPARK_HOME/jars), it
 runs createOrReplace / read / append / tableExists against a hadoop-type
 catalog in a tmpdir, in its own subprocess (catalog + jar configs must be
@@ -131,3 +131,19 @@ def test_iceberg_append_never_replaces_existing_table():
     calls = []
     cat.append(_StubFrame(calls), "_lineage")
     assert calls == ["create"]
+
+
+class _FailingSpark(_StubSpark):
+    def sql(self, _query):
+        raise PermissionError("access denied to catalog 'lake'")
+
+
+def test_unusable_iceberg_catalog_raises_instead_of_parquet_fallback():
+    """A named catalog whose namespace cannot be created must raise, naming
+    the catalog and chaining the cause: silently writing parquet under the
+    workdir would put every stage table somewhere else."""
+    from fast_er_spark.catalog import StageCatalog
+
+    with pytest.raises(RuntimeError, match="'lake'") as exc:
+        StageCatalog(_FailingSpark(set()), "/unused", iceberg_catalog="lake", namespace="t")
+    assert isinstance(exc.value.__cause__, PermissionError)

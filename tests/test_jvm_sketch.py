@@ -207,17 +207,16 @@ def test_substring_anchors_jvm_alignment_invariant(spark):
     assert (41, 40) in pairs
 
 
-def test_lcs_len_jvm_parity(spark):
-    """The compiled suffix automaton must return exactly the Python
-    oracle lcs_len on random pairs, with and without the cap short-circuit."""
+def test_shares_span_jvm_parity(spark):
+    """The compiled window check must answer exactly ``lcs_len(a, b) >= k``
+    (the Python oracle) on random pairs, null and blank sides, ``k = 0``
+    (always true) and a ``k`` longer than both texts."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from fast_er_spark.functions.jvm_sketch import lcs_len_jvm
-
     rng = random.Random(7)
-    cases = [("", ""), ("abc", ""), ("abcdef", "xxabcdyy"), ("aaaa", "aa")]
+    cases = [("", ""), ("abc", ""), ("abcdef", "xxabcdyy"), ("aaaa", "aa"),
+             (None, "abc"), ("abc", None), (None, None), ("   ", "a   b"),
+             ("abcdefgh", "abcdefgh"), ("abcd", "xabcdx")]
     for _ in range(200):
         n1, n2 = rng.randint(0, 40), rng.randint(0, 40)
         s1 = "".join(rng.choice("abcd ") for _ in range(n1))
@@ -227,17 +226,26 @@ def test_lcs_len_jvm_parity(spark):
             pos = rng.randint(0, n2)
             s2 = s2[:pos] + s1[:k] + s2[pos:]
         cases.append((s1, s2))
+    _assert_shares_span_parity(spark, cases, (0, 1, 3, 5, 8, 64))
+
+
+def _assert_shares_span_parity(spark, cases, ks):
+    from fast_er_spark.functions.jvm_sketch import ensure_jvm_udfs, shares_span_jvm
+
+    ensure_jvm_udfs(spark)
     df = spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(cases)], "i long, a string, b string"
     )
-    for cap in (0, 5):
-        got = {
-            r["i"]: r["s"]
-            for r in df.select("i", lcs_len_jvm("a", "b", cap=cap).alias("s")).collect()
-        }
-        for i, (a, b) in enumerate(cases):
-            want = kernels.lcs_len(a, b, cap=cap if cap > 0 else None)
-            assert got[i] == want, (a, b, cap, got[i], want)
+    got = {
+        r["i"]: r.asDict()
+        for r in df.select(
+            "i", *[shares_span_jvm("a", "b", k).alias(f"k{k}") for k in ks]
+        ).collect()
+    }
+    for i, (a, b) in enumerate(cases):
+        lcs = kernels.lcs_len(a, b)
+        for k in ks:
+            assert got[i][f"k{k}"] is (lcs >= k), (a, b, k, got[i][f"k{k}"], lcs)
 
 
 def test_jvm_tokenizer_matches_python_whitespace_set(spark):
@@ -265,26 +273,16 @@ def test_jvm_tokenizer_matches_python_whitespace_set(spark):
         assert got[i] == want, (t, got[i], want)
 
 
-def test_lcs_len_jvm_astral_code_points(spark):
-    """LCS must count CODE POINTS like Python len(), not UTF-16 units: a
+def test_shares_span_jvm_astral_code_points(spark):
+    """Spans count CODE POINTS like Python len(), not UTF-16 units: a
     shared span of n astral chars is n, not 2n."""
-    from fast_er_spark.functions.jvm_sketch import lcs_len_jvm
-
     emoji_run = "\U0001F600\U0001F601\U0001F602\U0001F603"  # 4 code points
     cases = [
         ("xx" + emoji_run + "yy", "ab" + emoji_run + "cd"),
         (emoji_run * 3, emoji_run * 2),
         ("abc\U0001F600def", "zzz\U0001F600de"),
     ]
-    df = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(cases)], "i long, a string, b string"
-    )
-    got = {
-        r["i"]: r["s"]
-        for r in df.select("i", lcs_len_jvm("a", "b", cap=0).alias("s")).collect()
-    }
-    for i, (a, b) in enumerate(cases):
-        assert got[i] == kernels.lcs_len(a, b, cap=None), (a, b, got[i])
+    _assert_shares_span_parity(spark, cases, (1, 3, 4, 5, 8, 9))
 
 
 def test_oph_jvm_lsh_verified_pairs_recall(spark):

@@ -231,6 +231,35 @@ def test_substring_pass_catches_low_jaccard_containment(spark, corpus):
     assert not missed, f"anchor pass missed {sorted(missed)[:5]}"
 
 
+def test_anchor_pairs_hot_anchor_star(spark):
+    """Anchors held by at most ``max_anchor_freq`` docs pair as cliques;
+    a hotter anchor becomes a star to its minimum holder; a pair reached
+    through two anchors appears once."""
+    from fast_er_spark.operators.substring import anchor_pairs
+
+    # token_initial anchors: 8 chars from each token starting with a..e;
+    # every other token starts with x..z and selects nothing
+    texts = {
+        10: "zq10 alphabet zz",
+        11: "zq11 alphabet zz",
+        12: "zq12 alphabet zz",
+        13: "zq13 alphabet zz charlie9 zz",
+        20: "zq20 bravo123 zz charlie9 zz",
+        21: "zq21 bravo123 zz",
+        30: "zq30 delta001 zz echo0001 zz",
+        31: "zq31 delta001 zz echo0001 zz",
+        40: "zq40 xylophone yy",
+    }
+    df = spark.createDataFrame(list(texts.items()), "id long, text string")
+    got = sorted(
+        (int(r.id_a), int(r.id_b))
+        for r in anchor_pairs(
+            df, "id", "text", anchor_len=8, max_anchor_freq=2, selector="token_initial"
+        ).collect()
+    )
+    assert got == [(11, 10), (12, 10), (13, 10), (20, 13), (21, 20), (31, 30)], got
+
+
 def test_streaming_exact_dedup(spark, corpus, tmp_path):
     from fast_er_spark.streaming.dedup_stream import streaming_dup_rate, streaming_exact_dedup
 

@@ -74,3 +74,25 @@ def test_fuzzy_jw_single_python_stage_and_sized_partitions(spark):
     df = entry_mod.q_fuzzy_jw_supplier(spark, SF_DIR)
     stats = plan_stats(df)
     assert stats["python_udfs"] == 0, stats
+
+
+def test_anchor_pairs_no_window_join_or_checkpoint(spark):
+    """Anchors pair through one groupBy and the LSH bucket expression: no
+    window over the anchor key, no sort-merge self-join, no checkpointed
+    frame (a LogicalRDD) in the plan."""
+    from pyspark.sql import functions as F
+
+    from fast_er_spark.operators.substring import anchor_pairs
+
+    docs = spark.range(64).select(
+        "id",
+        F.concat_ws(" ", F.lit("alpha beta"), F.col("id").cast("string"),
+                    F.lit("gamma delta epsilon zeta eta theta")).alias("text"),
+    )
+    df = anchor_pairs(docs, "id", "text", anchor_len=8, density=2)
+    logical = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+    physical = formatted_plan(df)
+    assert "Window" not in logical and "Window" not in physical
+    assert "LogicalRDD" not in logical and "ExistingRDD" not in physical
+    assert plan_stats(df)["sortmerge_joins"] == 0
+    assert df.count() > 0

@@ -60,8 +60,14 @@ def test_minhash_batch_deterministic_and_empty_safe():
     s1 = minhash_batch(texts, 64, 3, "word", seed=7)
     s2 = minhash_batch(texts, 64, 3, "word", seed=7)
     assert list(s1[0]) == list(s2[0]) == list(s1[3])
-    # empty/None rows must not collide with each other or content rows
-    assert list(s1[0]) != list(s1[1]) and list(s1[1]) != list(s1[2])
+    assert len(s1[0]) == 64
+    # empty/None rows get no signature (the JVM kernel's contract), so they
+    # can never collide with each other or with content rows
+    assert s1[1] is None and s1[2] is None
+    # nor across Arrow batches: two separate calls on a blank doc
+    for mode in ("word", "char"):
+        for _ in range(2):
+            assert minhash_batch(pd.Series([""]), 128, 3, mode, 42)[0] is None
 
 
 def test_simhash_near_duplicates_low_hamming():
