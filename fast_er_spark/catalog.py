@@ -54,11 +54,13 @@ class StageCatalog:
     def _table(self, name: str) -> str:
         return f"{self.iceberg}.{self.namespace}.{name}"
 
-    def write(self, df: DataFrame, name: str) -> None:
+    def write(self, df: DataFrame, name: str) -> DataFrame:
+        """Write ``df`` as ``name``; return it read back, schema not inferred."""
         if self.iceberg:
             df.writeTo(self._table(name)).createOrReplace()
-        else:
-            df.write.mode("overwrite").parquet(self._path(name))
+            return self.spark.read.table(self._table(name))
+        df.write.mode("overwrite").parquet(self._path(name))
+        return self.spark.read.schema(df.schema).parquet(self._path(name))
 
     def append(self, df: DataFrame, name: str) -> None:
         if self.iceberg:

@@ -24,7 +24,7 @@ import json
 import time
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import StageCatalog
@@ -106,12 +106,16 @@ class DedupPipeline:
         self.catalog = StageCatalog(spark, workdir, iceberg_catalog)
         self.fp = self.config.fingerprint()
         self.results: list[StageResult] = []
+        self._stars: dict[str, int | None] = {}  # observed on this run's fresh stages
 
     # ----------------------------------------------------------- plumbing
     def _stage_name(self, stage: str) -> str:
         return f"{stage}_{self.fp}"
 
-    def _run_stage(self, stage: str, build, resume: bool) -> DataFrame:
+    def _run_stage(self, stage: str, build, resume: bool, counters=None) -> DataFrame:
+        """Resume a stage table, or build and write it, then run two actions:
+        the ``_lineage`` append, observed for the row and star counts, and
+        the ``_metrics`` append, with the ``(name, value)`` ``counters()``."""
         name = self._stage_name(stage)
         t0 = time.perf_counter()
         if resume and self.catalog.exists(name):
@@ -121,27 +125,33 @@ class DedupPipeline:
             )
             return df
         preexisting = self._persistent_rdd_ids()
-        df = build()
-        self.catalog.write(df, name)
-        out = self.catalog.read(name)
-        rows = out.count()
+        out = self.catalog.write(build(), name)
+        star = [F.count_if("is_star").alias("star")] if "is_star" in out.columns else []
+        part = out.withColumn("part_id", F.spark_partition_id()).groupBy("part_id").agg(
+            F.count(F.lit(1)).alias("rows"), *star
+        )
+        obs = Observation()
+        part = part.observe(obs, *[F.sum(c).alias(c) for c in part.columns[1:]])
+        tags = [F.lit(stage).alias("stage"), F.lit(self.fp).alias("config_fp")]
+        self.catalog.append(part.select("part_id", "rows", *tags), "_lineage")
+        got = {k: int(v or 0) for k, v in obs.get.items()}  # empty table: null sums
+        rows, self._stars[stage] = got["rows"], got.get("star")
         wall = int((time.perf_counter() - t0) * 1000)
         self.results.append(StageResult(stage, rows, wall, False))
-        self._record_metrics(stage, out, rows, wall)
+        extra = [(k, v, 0) for k, v in counters()] if counters else []
+        self.catalog.append(self._metrics_rows([(stage, rows, wall), *extra]), "_metrics")
         self._drop_stage_blocks(preexisting)
         return out
 
     def _persistent_rdd_ids(self) -> set:
-        try:
-            return set(self.spark.sparkContext._jsc.getPersistentRDDs().keySet())  # noqa: SLF001
-        except Exception:
-            return set()
+        # no fallback: an empty set would unpersist caller-owned caches too
+        return set(self.spark.sparkContext._jsc.getPersistentRDDs().keySet())  # noqa: SLF001
 
     def _drop_stage_blocks(self, preexisting: set) -> None:
         """Unpersist RDDs this stage created once its table is durable.
 
         Stage builds localCheckpoint intermediate frames (verify's shingle
-        frame, anchor windows, CC iterations); those blocks stay pinned in
+        frame, CC iterations); those blocks stay pinned in
         storage memory for the REST of the session and squeeze later
         stages' execution memory — measured 15 s -> 28 s for the anchor
         stage once the LSH stages' blocks were resident. Downstream stages
@@ -160,34 +170,17 @@ class DedupPipeline:
         except Exception:
             pass  # cleanup is best-effort; never fail the pipeline for it
 
-    def _metrics_row(self, stage: str, rows_out: int, wall_ms: int) -> DataFrame:
-        """One metrics row as a LITERAL-expression frame — createDataFrame
-        of a 1-row list plans a single-task Python-RDD job (~1-2 s of fixed
-        latency each; PERF.md round 4 "tiny-frame rule"), and a pipeline run
-        writes several of these."""
-        return self.spark.range(1).select(
-            F.lit(stage).alias("stage"),
-            F.lit(self.fp).alias("config_fp"),
-            F.lit(int(rows_out)).cast("long").alias("rows_out"),
-            F.lit(int(wall_ms)).cast("long").alias("wall_ms"),
-        )
-
-    def _record_metrics(self, stage: str, df: DataFrame, rows: int, wall_ms: int) -> None:
-        """Per-stage metrics + per-partition lineage (north_rule)."""
-        self.catalog.append(self._metrics_row(stage, rows, wall_ms), "_metrics")
-        part = (
-            df.withColumn("part_id", F.spark_partition_id())
-            .groupBy("part_id")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("config_fp", F.lit(self.fp))
-        )
-        self.catalog.append(part, "_lineage")
-
-    def _record_counter(self, name: str, value: int) -> None:
-        """Append a named counter to the metrics table (rows_out carries the
-        value; wall_ms 0 — counters are facts, not stages)."""
-        self.catalog.append(self._metrics_row(name, value, 0), "_metrics")
+    def _metrics_rows(self, facts: list[tuple[str, int, int]]) -> DataFrame:
+        """``(stage, rows_out, wall_ms)`` rows as one LITERAL-expression
+        frame — createDataFrame of a list plans a single-task Python-RDD
+        job (~1-2 s of fixed latency each; PERF.md round 4 "tiny-frame
+        rule"). A counter's row carries its value in rows_out, wall_ms 0."""
+        return self.spark.range(1, numPartitions=1).select(F.inline(F.array(*[
+            F.struct(F.lit(s).alias("stage"), F.lit(self.fp).alias("config_fp"),
+                     F.lit(r).cast("long").alias("rows_out"),
+                     F.lit(w).cast("long").alias("wall_ms"))
+            for s, r, w in facts
+        ])))
 
     def metrics(self) -> DataFrame:
         return self.catalog.read("_metrics")
@@ -198,6 +191,7 @@ class DedupPipeline:
     # --------------------------------------------------------------- run
     def run(self, corpus: DataFrame, resume: bool = True) -> DataFrame:
         c = self.config
+        self._stars.clear()
 
         def build_input():
             df = corpus
@@ -240,24 +234,27 @@ class DedupPipeline:
             resume,
         )
 
+        def star_counters():
+            # star-cap recall telemetry (lsh.py RECALL CAVEAT): star-only
+            # candidates rejected by verification are pairs a hot bucket
+            # proposed across clusters, where TRUE dup pairs lost to caps
+            # show first. None without is_star (pre-telemetry tables).
+            kept = self._stars["verified"]
+            if kept is None or "is_star" not in cand.columns:
+                return []
+            n_star = self._stars.get("candidates")
+            if n_star is None:  # candidates resumed: one count on its table
+                n_star = cand.where(F.col("is_star")).count()
+            return [("star_candidates", n_star), ("star_rejected_by_verify", n_star - kept)]
+
         verified = self._run_stage(
             "verified",
             lambda: verify_pairs_jaccard(
                 cand, sketch_docs, "id", "text", n=c.ngram, threshold=c.threshold
             ),
             resume,
+            star_counters,
         )
-
-        # star-cap recall telemetry (lsh.py RECALL CAVEAT): star-only
-        # candidates rejected by verification are the pairs a hot bucket
-        # proposed across clusters — if TRUE dup pairs are being lost to
-        # caps, this count is where it shows first. Guarded on the column
-        # so pre-telemetry stage tables still resume cleanly.
-        if "is_star" in cand.columns and "is_star" in verified.columns:
-            n_star = cand.where(F.col("is_star")).count()
-            n_star_kept = verified.where(F.col("is_star")).count()
-            self._record_counter("star_candidates", n_star)
-            self._record_counter("star_rejected_by_verify", n_star - n_star_kept)
 
         edge_frames = [verified.select("id_a", "id_b")]
         if c.substring_pass:

@@ -41,12 +41,27 @@ def test_extraction_byte_identical(spark, corpus):
         assert extract_text(render_html(r["text"])) == r["text"]
 
 
-def test_pipeline_end_to_end_and_resume(spark, corpus):
+def test_pipeline_end_to_end_and_resume(spark, corpus, monkeypatch):
+    from fast_er_spark.catalog import StageCatalog
     from fast_er_spark.pipeline import DedupConfig, DedupPipeline
 
     rows, df = corpus
     texts = {r["doc_id"]: r["text"] for r in rows}
     workdir = tempfile.mkdtemp(prefix="dedup_stage_")
+    # every frame StageCatalog.write returns, and every append, by table
+    written, appends = {}, []
+    write, append = StageCatalog.write, StageCatalog.append
+
+    def recording_write(self, frame, name):
+        written[name] = write(self, frame, name)
+        return written[name]
+
+    def recording_append(self, frame, name):
+        appends.append(name)
+        return append(self, frame, name)
+
+    monkeypatch.setattr(StageCatalog, "write", recording_write)
+    monkeypatch.setattr(StageCatalog, "append", recording_append)
     try:
         cfg = DedupConfig(html_col="html", substring_pass=True)
         pipe = DedupPipeline(spark, workdir, cfg)
@@ -63,6 +78,21 @@ def test_pipeline_end_to_end_and_resume(spark, corpus):
         }
         lin = pipe.lineage().groupBy("stage").count().collect()
         assert {r["stage"] for r in lin} == set(pipe.STAGES)
+        # one _lineage and one _metrics append per stage, and the lineage
+        # rows of each stage sum to its rows_out
+        assert sorted(appends) == sorted(["_lineage", "_metrics"] * len(pipe.STAGES))
+        rows_out = {r["stage"]: r["rows_out"] for r in pipe.metrics().collect()}
+        lin_rows = {
+            r["stage"]: r["rows"]
+            for r in pipe.lineage().groupBy("stage").agg({"rows": "sum"})
+            .withColumnRenamed("sum(rows)", "rows").collect()
+        }
+        assert lin_rows == {s: rows_out[s] for s in pipe.STAGES}
+        assert {s.name: s.rows for s in pipe.results} == lin_rows
+        # the frame write returns is the table as read back, schema and all
+        assert set(written) == {pipe._stage_name(s) for s in pipe.STAGES}
+        for name, frame in written.items():
+            assert frame.schema == pipe.catalog.read(name).schema, name
 
         # duplicate-cluster quality: every verified-jaccard dup pair must be
         # co-clustered (substring edges may merge more, never less)
@@ -70,10 +100,15 @@ def test_pipeline_end_to_end_and_resume(spark, corpus):
         co = sum(1 for a, b in want_pairs if got[a] == got[b])
         assert co / len(want_pairs) >= 0.99
 
-        # RESUME: second run must read every stage back, same answer
+        # RESUME: second run must read every stage back, same answer, and
+        # record nothing: each stage and counter stays one metrics row
+        appends.clear()
         pipe2 = DedupPipeline(spark, workdir, cfg)
         clusters2 = pipe2.run(df, resume=True)
         assert all(s.resumed for s in pipe2.results)
+        assert appends == []
+        names = [r["stage"] for r in pipe2.metrics().collect()]
+        assert sorted(names) == sorted(stages), names
         got2 = {int(r.id): int(r.component) for r in clusters2.collect()}
         assert got2 == got
 
@@ -174,6 +209,52 @@ def test_star_cap_skew_recall_and_telemetry(spark, tmp_path):
     m = {r["stage"]: int(r["rows_out"]) for r in pipe.metrics().collect()}
     assert m["star_candidates"] > 0  # the caps were binding, not idle
     assert m["star_rejected_by_verify"] == 0  # same-cluster stars all verify
+
+    # verified rebuilt over a resumed candidates table: the star count then
+    # comes from a count on that table, and the counters repeat exactly
+    import glob
+
+    for path in glob.glob(str(tmp_path / "wd_star" / "verified_*")):
+        shutil.rmtree(path)
+    pipe2 = DedupPipeline(spark, str(tmp_path / "wd_star"), cfg)
+    pipe2.run(df)
+    resumed = {s.name: s.resumed for s in pipe2.results}
+    assert resumed["candidates"] and not resumed["verified"]
+    star_rows = sorted(
+        (r["stage"], int(r["rows_out"]))
+        for r in pipe2.metrics().where("stage LIKE 'star_%'").collect()
+    )
+    assert star_rows == sorted(
+        [("star_candidates", m["star_candidates"]), ("star_rejected_by_verify", 0)] * 2
+    )
+
+
+class _BrokenGateway(Exception):
+    pass
+
+
+class _BrokenRddProbeSession:
+    """A session whose persistent-RDD probe fails, as over a broken py4j
+    gateway."""
+
+    def __init__(self):
+        self.sparkContext = self._jsc = self
+
+    def getPersistentRDDs(self):  # noqa: N802 — JavaSparkContext's name
+        raise _BrokenGateway("py4j gateway broke")
+
+
+def test_failed_rdd_probe_raises_and_spares_caller_caches():
+    """A stage whose persistent-RDD probe fails must raise before it
+    builds anything: an empty 'preexisting' set would let the post-stage
+    cleanup unpersist every caller-owned cache in the context."""
+    from fast_er_spark.pipeline import DedupPipeline
+
+    pipe = DedupPipeline(_BrokenRddProbeSession(), "/unused")
+    built = []
+    with pytest.raises(_BrokenGateway):
+        pipe._run_stage("input", lambda: built.append(1), resume=False)
+    assert built == []
 
 
 def test_pipeline_resumes_mid_run(spark, corpus):
