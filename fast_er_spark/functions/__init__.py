@@ -1,18 +1,9 @@
 from .extract import extract_text_bytes, extract_text_udf
-from .jw import discretize, jaro_winkler, jaro_winkler_bytes, jw_batch
-from .minhash import jaccard_estimate, minhash_batch, minhash_params, minhash_signature
-from .shingles import hash64, hash_shingles, hash_shingles_batch, shingles
-from .simhash import hamming64, simhash, simhash_bands, simhash_batch
-from .text import (
-    distinct_token_count,
-    lang_marker_score,
-    punct_ratio,
-    quality_score,
-    rolling_fingerprint,
-    stopword_ratio,
-    token_count,
-    tokens,
-)
+from .jw import discretize, jaro_winkler, jaro_winkler_bytes
+from .minhash import minhash_batch, minhash_params
+from .shingles import hash64, hash_shingles_batch, shingles
+from .simhash import simhash, simhash_bands, simhash_batch
+from .text import rolling_fingerprint
 
 __all__ = [
     "extract_text_bytes",
@@ -20,25 +11,13 @@ __all__ = [
     "discretize",
     "jaro_winkler",
     "jaro_winkler_bytes",
-    "jw_batch",
-    "jaccard_estimate",
     "minhash_batch",
     "minhash_params",
-    "minhash_signature",
     "hash64",
-    "hash_shingles",
     "hash_shingles_batch",
     "shingles",
-    "hamming64",
     "simhash",
     "simhash_bands",
     "simhash_batch",
-    "distinct_token_count",
-    "lang_marker_score",
-    "punct_ratio",
-    "quality_score",
     "rolling_fingerprint",
-    "stopword_ratio",
-    "token_count",
-    "tokens",
 ]

@@ -27,7 +27,7 @@ import pandas as pd
 
 from .shingles import hash_shingles_batch
 
-__all__ = ["minhash_params", "minhash_signature", "minhash_batch", "jaccard_estimate"]
+__all__ = ["minhash_params", "minhash_batch"]
 
 
 def minhash_params(num_perm: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
@@ -35,15 +35,6 @@ def minhash_params(num_perm: int, seed: int = 42) -> tuple[np.ndarray, np.ndarra
     a = rng.integers(0, 1 << 63, size=num_perm, dtype=np.uint64) * np.uint64(2) + np.uint64(1)
     b = rng.integers(0, 1 << 63, size=num_perm, dtype=np.uint64)
     return a, b
-
-
-def minhash_signature(base_hashes: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(num_perm,) signature (uint64 bit pattern in int64) from distinct
-    base hashes of one shingle set. Caller handles the empty case."""
-    x = base_hashes.astype(np.uint64)
-    with np.errstate(over="ignore"):
-        sig = (a[:, None] * x[None, :] + b[:, None]).min(axis=1)
-    return sig.view(np.int64)
 
 
 def minhash_batch(
@@ -95,10 +86,3 @@ def minhash_batch(
             flush()
     flush()
     return pd.Series(out)
-
-
-def jaccard_estimate(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
-    sig_a = np.asarray(sig_a)
-    sig_b = np.asarray(sig_b)
-    return float((sig_a == sig_b).mean())
-

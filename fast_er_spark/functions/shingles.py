@@ -17,7 +17,7 @@ import hashlib
 
 import numpy as np
 
-__all__ = ["shingles", "hash64", "hash_shingles", "MERSENNE_P"]
+__all__ = ["shingles", "hash64", "hash_shingles_batch", "MERSENNE_P"]
 
 # Mersenne prime 2^61 - 1: modulus for the affine MinHash permutation family.
 MERSENNE_P = (1 << 61) - 1
@@ -44,15 +44,6 @@ def hash64(s: str, seed: int = 0) -> int:
     """Stable 61-bit hash of a string (blake2b-8 truncated into [0, 2^61-1))."""
     h = hashlib.blake2b(s.encode("utf-8"), digest_size=8, salt=seed.to_bytes(8, "little"))
     return int.from_bytes(h.digest(), "little") % MERSENNE_P
-
-
-def hash_shingles(sh: list[str], seed: int = 0) -> np.ndarray:
-    """Distinct base hashes of a shingle list as uint64 array."""
-    if not sh:
-        return np.empty(0, dtype=np.uint64)
-    return np.fromiter(
-        {hash64(s, seed) for s in sh}, dtype=np.uint64
-    )
 
 
 # --- vectorized batch shingle hashing (the hot path) -----------------------

@@ -16,7 +16,7 @@ import pandas as pd
 
 from .shingles import hash_shingles_batch
 
-__all__ = ["simhash", "simhash_batch", "hamming64", "simhash_bands"]
+__all__ = ["simhash", "simhash_batch", "simhash_bands"]
 
 
 def simhash(base_hashes: np.ndarray, weights: np.ndarray | None = None) -> int:
@@ -47,10 +47,6 @@ def simhash_batch(
     for i, base in enumerate(hash_shingles_batch(texts, n, mode, seed)):
         out[i] = simhash(base)
     return pd.Series(out)
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
 
 def simhash_bands(fp: int, n_bands: int = 4) -> list[int]:

@@ -1,11 +1,12 @@
 """Text-analysis Columns — no Python UDFs.
 
-Token counting, quality scoring and the Gopher rules are Spark built-in
-expressions. ``text_stats``, ``rolling_fingerprint``, ``lang_marker_counts``
-and ``lang_id_ngram`` run compiled one-pass kernels (jvm/TextUdfs.java) and
-register them on the active session; their expression and Python twins live
-in oracle/kernels.py. Each oracled query has an exact ANSI-SQL twin used by
-the driver's DuckDB oracle (see __spark_entry__.oracle_sql).
+The Gopher rules and the quality score over ``text_stats`` are Spark
+built-in expressions. ``text_stats``, ``rolling_fingerprint``,
+``lang_marker_counts`` and ``lang_id_ngram`` run compiled one-pass kernels
+(jvm/TextUdfs.java) and register them on the active session; their
+expression and Python twins live in oracle/kernels.py. Each oracled query
+has an exact ANSI-SQL twin used by the driver's DuckDB oracle (see
+__spark_entry__.oracle_sql).
 """
 
 from __future__ import annotations
@@ -26,73 +27,14 @@ __all__ = [
     "GOPHER_STOPWORDS",
     "ngram_lang_profiles",
     "ngram_profile_spec",
-    "predict_lang_ngram_py",
     "lang_id_ngram",
     "NGRAM_SEED_TEXTS",
-    "tokens",
-    "token_count",
-    "distinct_token_count",
-    "punct_ratio",
-    "stopword_ratio",
-    "quality_score",
     "quality_score_from_stats",
-    "lang_marker_score",
     "lang_marker_counts",
     "marker_spec",
     "rolling_fingerprint",
     "text_stats",
-    "STOPWORDS_EN",
-    "FP_MOD",
-    "FP_BASE",
 ]
-
-STOPWORDS_EN = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
-
-FP_MOD = 1_000_000_007
-FP_BASE = 31
-
-
-def tokens(col: Column) -> Column:
-    """Whitespace tokens; empty/blank text -> empty array (not [''])."""
-    return F.filter(F.split(col, r"\s+"), lambda t: t != F.lit(""))
-
-
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
-def distinct_token_count(col: Column) -> Column:
-    return F.size(F.array_distinct(tokens(col)))
-
-
-def punct_ratio(col: Column) -> Column:
-    """Fraction of characters that are not alphanumeric/space."""
-    n = F.length(col)
-    stripped = F.length(F.regexp_replace(col, r"[^0-9A-Za-z\s]", ""))
-    return F.when(n > 0, (n - stripped) / n).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
-    sw = stopwords or STOPWORDS_EN
-    tok = tokens(F.lower(col))
-    hits = F.size(F.filter(tok, lambda t: t.isin(sw)))
-    n = F.size(tok)
-    return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-
-
-def quality_score(col: Column) -> Column:
-    """Heuristic [0,1] quality: length band + low punctuation + type/token
-    ratio. Deterministic, SQL-twinned; a stand-in for Gopher-style rules."""
-    n_tok = token_count(col)
-    len_ok = F.when((n_tok >= 5) & (n_tok <= 5000), F.lit(1.0)).otherwise(F.lit(0.0))
-    ttr = F.when(n_tok > 0, distinct_token_count(col) / n_tok).otherwise(F.lit(0.0))
-    return F.round((len_ok + (1.0 - punct_ratio(col)) + ttr) / 3.0, 6)
-
-
-def lang_marker_score(col: Column, markers: list[str]) -> Column:
-    """Count of tokens that appear in a language marker list (n-gram-free
-    language-ID heuristic; argmax over languages gives the prediction)."""
-    return F.size(F.filter(tokens(F.lower(col)), lambda t: t.isin(markers)))
 
 
 def rolling_fingerprint(col: Column) -> Column:
@@ -114,8 +56,10 @@ def text_stats(col: Column) -> Column:
 
 
 def quality_score_from_stats(stats: Column) -> Column:
-    """quality_score recomputed from a text_stats() array — same formula,
-    same float operation order, so the two entry points never disagree."""
+    """Heuristic [0,1] quality from a text_stats() array: length band + low
+    punctuation + type/token ratio. Deterministic and SQL-twinned; a
+    stand-in for Gopher-style rules. oracle/kernels.py::quality_score is
+    its expression twin (same formula, same float operation order)."""
     n_tok, n_dis, n, kept = stats[0], stats[1], stats[2], stats[3]
     len_ok = F.when((n_tok >= 5) & (n_tok <= 5000), F.lit(1.0)).otherwise(F.lit(0.0))
     ttr = F.when(n_tok > 0, n_dis / n_tok).otherwise(F.lit(0.0))
@@ -604,25 +548,6 @@ def ngram_profile_spec(profiles: dict) -> str:
                     f"profile entry {tok!r} contains a control separator"
                 )
     return "\x03".join(lg + "\x02" + "\x01".join(ngs) for lg, ngs in profiles.items())
-
-
-def predict_lang_ngram_py(text: str | None, profiles: dict, k: int = _NGRAM_K) -> str | None:
-    """Pure-Python twin of the JVM kernel (identical algorithm + tie
-    rules for BMP text): blank/None -> None; ties -> first language in
-    profile insertion order."""
-    if text is None:
-        return None
-    counts = _ngram_counts(text)
-    if not counts:
-        return None
-    doc = _rank_profile(counts, k)
-    best, best_d = None, None
-    for lg, ngs in profiles.items():
-        rank = {g: r for r, g in enumerate(ngs)}
-        d = sum(abs(r - rank[g]) if g in rank else k for r, g in enumerate(doc))
-        if best_d is None or d < best_d:
-            best, best_d = lg, d
-    return best
 
 
 def lang_id_ngram(col: Column, profiles: dict | None = None) -> Column:

@@ -3,21 +3,19 @@ from .agreement import (
     exact_levels_dedup,
     exact_levels_linkage,
     fuzzy_levels_dedup,
-    fuzzy_levels_linkage,
     pattern_counts,
 )
 from .components import connected_components
 from .lsh import band_buckets, lsh_candidate_pairs, with_minhash_signature
 from .similarity import cosine_topk, lsh_topk
 from .substring import anchor_pairs, doc_anchors
-from .verify import verify_pairs_jaccard, verify_pairs_jw
+from .verify import verify_pairs_jaccard
 
 __all__ = [
     "assemble_patterns",
     "exact_levels_dedup",
     "exact_levels_linkage",
     "fuzzy_levels_dedup",
-    "fuzzy_levels_linkage",
     "pattern_counts",
     "connected_components",
     "band_buckets",
@@ -28,5 +26,4 @@ __all__ = [
     "anchor_pairs",
     "doc_anchors",
     "verify_pairs_jaccard",
-    "verify_pairs_jw",
 ]

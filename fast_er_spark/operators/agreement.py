@@ -38,7 +38,6 @@ __all__ = [
     "char_lsh_value_candidates",
     "default_value_candidates",
     "scored_value_pairs",
-    "fuzzy_levels_linkage",
     "fuzzy_levels_dedup",
     "exact_levels_linkage",
     "exact_levels_dedup",
@@ -304,8 +303,8 @@ def fuzzy_value_parts_linkage(
     can consume the value-pair frame directly — joint
     (fuzzy-level x exact-pattern) counts collapse the nA*nB pair
     multiplicity at the value level, so single-agreement pairs never need
-    to be materialized. ``fuzzy_levels_linkage`` below is the joined-back
-    per-pair view."""
+    to be materialized. ``join_back_linkage`` below gives the per-pair
+    view."""
     # NO checkpoint on the distinct frames, deliberately (measured this
     # round): localCheckpoint(eager=False) of an AQE plan with a shuffle
     # EXECUTES that shuffle at call time on the driver thread — 8 serial
@@ -342,34 +341,6 @@ def join_back_linkage(
         .join(rows_b, ["val_b", *bl])
         .select(id_a, id_b, "level")
     )
-
-
-def fuzzy_levels_linkage(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    col_a: str,
-    col_b: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    p: float = 0.1,
-    lower: float = 0.88,
-    upper: float = 0.94,
-    candidates=None,
-    block: bool = False,
-    sizes: tuple | None = None,
-) -> DataFrame:
-    """(id_a, id_b, level) for one fuzzy variable across A x B.
-
-    ``block=True``: the input frames carry a ``__block`` column and only
-    same-block row pairs are emitted (reference "Blocking",
-    docs/source/usage.rst) — the block key joins the join-back keys, so
-    scoring still runs once per distinct value pair.
-    """
-    matched, rows_a, rows_b = fuzzy_value_parts_linkage(
-        df_a, df_b, col_a, col_b, id_a, id_b, p, lower, upper,
-        candidates, block, sizes,
-    )
-    return join_back_linkage(matched, rows_a, rows_b, id_a, id_b, block)
 
 
 def fuzzy_value_parts_dedup(

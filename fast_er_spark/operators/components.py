@@ -19,12 +19,14 @@ Fixpoint: edge set stable => edges form stars (node -> component min).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["connected_components"]
+
+# edge sets up to this size are collected and solved on the driver: 2M
+# edges is a ~32 MB collect, far under any sane spark.driver.maxResultSize
+DRIVER_MAX_EDGES = 2_000_000
 
 
 def _bidir(e: DataFrame) -> DataFrame:
@@ -86,25 +88,21 @@ def connected_components(
     id_col: str = "id",
     max_iter: int = 30,
     rows_per_partition: int = 100_000,
-    engine: str = "auto",
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """(id, component) with component = min node id in the component.
 
     ``nodes`` (optional) adds isolated nodes (their own singleton component).
 
-    Engine choice is SIZE-ADAPTIVE (``engine='auto'``), the same class of
-    decision as Spark's broadcast-vs-shuffle join: verified dup-pair edge
-    sets are O(duplicates), usually minute relative to the corpus, and the
-    star iterations' fixed cost (2 shuffles + 1 action per round, O(log^2 n)
+    The engine is picked from the edge count, the same class of decision
+    as Spark's broadcast-vs-shuffle join: verified dup-pair edge sets are
+    O(duplicates), usually minute relative to the corpus, and the star
+    iterations' fixed cost (2 shuffles + 1 action per round, O(log^2 n)
     rounds) dwarfs a driver union-find at small edge counts. At or under
-    ``driver_max_edges`` (default 2M edges = a ~32 MB collect, far under any
-    sane spark.driver.maxResultSize; env FAST_ER_CC_DRIVER_MAX overrides)
-    the edge list is collected and solved with path-compressed union-by-min
-    — O(E alpha(E)) driver CPU, well under a second at the cap — and only
-    the node-assignment frame returns to the cluster. Larger edge sets take
-    the distributed large-star/small-star path unchanged ('distributed'
-    forces it; 'driver' forces the union-find and raises past the cap).
+    ``DRIVER_MAX_EDGES`` the edge list is collected and solved with
+    path-compressed union-by-min — O(E alpha(E)) driver CPU, well under a
+    second at the cap — and only the node-assignment frame returns to the
+    cluster. Larger edge sets take the distributed large-star/small-star
+    path.
 
     Distributed-path partitioning is sized to the EDGE COUNT, not the
     session default: iterating a small edge list across hundreds of shuffle
@@ -117,9 +115,7 @@ def connected_components(
     )
     e = e.localCheckpoint(eager=True)
     n_edges = e.count()
-    if driver_max_edges is None:
-        driver_max_edges = int(os.environ.get("FAST_ER_CC_DRIVER_MAX", "2000000"))
-    if engine == "driver" or (engine == "auto" and n_edges <= driver_max_edges):
+    if n_edges <= DRIVER_MAX_EDGES:
         return _cc_driver(e, nodes, id_col)
     spark = e.sparkSession
     session_parallelism = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))

@@ -25,8 +25,9 @@ connected if it survives DOWNSTREAM VERIFICATION against a pivot. A hot
 bucket that mixes distinct clusters can therefore silently drop members
 whose own cluster has no pivot. Multi-probe (star_pivots=3 default) bounds
 that risk — a member stays connected unless it fails verification against
-ALL pivots — but does not eliminate it; count verification-dropped star
-edges when tuning max_bucket_size (a cheap anti-join on the verified stage).
+ALL pivots — but does not eliminate it. DedupPipeline counts the star
+candidates that verification rejects (the ``star_rejected_by_verify`` row
+of its ``_metrics`` table); watch it when tuning max_bucket_size.
 
 Tuning: collision probability for Jaccard j is 1 - (1 - j^r)^b with b bands
 of r rows. Defaults (b=32, r=4, 128 perms) give P(candidate) > 0.9999 at

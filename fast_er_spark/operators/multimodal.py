@@ -22,19 +22,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-__all__ = ["MEDIA_SCHEMA", "attach_fake_media", "media_features", "frame_sample"]
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("data", T.BinaryType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-    ]
-)
+__all__ = ["attach_fake_media", "media_features"]
 
 
 def attach_fake_media(df: DataFrame, id_col: str, mime: str = "image/png") -> DataFrame:
@@ -94,20 +83,4 @@ def media_features(df: DataFrame, id_col: str, media_col: str = "media",
 
     return df.select(F.col(id_col).alias(id_col), F.col(media_col)).mapInPandas(
         extract, FEATURE_SCHEMA
-    )
-
-
-def frame_sample(df: DataFrame, id_col: str, media_col: str = "media",
-                 every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: explode one row per sampled timestamp
-    (decode stubbed the same way). Emits (id, frame_ts_ms)."""
-    n_frames = F.when(
-        F.col(f"{media_col}.duration_ms").isNotNull(),
-        F.floor(F.col(f"{media_col}.duration_ms") / every_ms) + 1,
-    ).otherwise(F.lit(1))
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.transform(F.sequence(F.lit(0), n_frames - 1), lambda i: i * every_ms)
-        ).alias("frame_ts_ms"),
     )

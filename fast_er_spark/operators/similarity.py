@@ -28,7 +28,7 @@ __all__ = [
     "lsh_topk",
     "ivf_centroids",
     "ivf_topk",
-    "quantize_vector",
+    "quantize_norm_batch",
     "quantized_cosine_threshold",
     "embedding_near_dup_pairs",
 ]
@@ -99,62 +99,36 @@ def srp_sketch(dim: int, n_planes: int = 16, table: int = 0, seed: int = 42):
 
 
 def srp_sketch_multi(dim: int, n_planes: int, n_tables: int, seed: int = 42):
-    """All-tables SRP sketch UDF: vector -> array of ``n_tables`` bucket
-    keys, one matmul per Arrow batch instead of one UDF pass per table.
-    Table ``t``'s planes are generated exactly like ``srp_sketch(table=t)``
-    (rng seed + 1000*t), so the two are drop-in compatible."""
-    per_table = [
+    """All-tables SRP sketch: (batch, dim) matrix -> (batch, n_tables)
+    bucket keys, one matmul for every table. Table ``t``'s planes are
+    generated exactly like ``srp_sketch(table=t)`` (rng seed + 1000*t), so
+    the two give the same keys."""
+    planes = np.concatenate([
         np.random.default_rng(seed + 1000 * t).standard_normal((n_planes, dim))
         for t in range(n_tables)
-    ]
-    planes = np.concatenate(per_table, axis=0)  # (T*P, dim)
+    ])  # (T*P, dim)
     weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sketch(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())  # (batch, dim)
-        bits = (mat @ planes.T) > 0  # (batch, T*P)
-        keys = bits.reshape(len(vecs), n_tables, n_planes).astype(np.int64) @ weights
-        return pd.Series(list(keys))
+    def keys(mat: np.ndarray) -> np.ndarray:
+        bits = (mat @ planes.T) > 0
+        return bits.reshape(len(mat), n_tables, n_planes).astype(np.int64) @ weights
 
-    return sketch
+    return keys
 
 
-def quantize_vector(vec_col, quantize: int = 100):
-    """array<float> -> array<long>: components rounded to ``1/quantize``
-    units. Integer vectors make the cosine-threshold test exact (no float
-    comparison), at the cost of quantization error ~1/(2*quantize) per
-    component — the contract the brute-force oracle twin uses too.
+def quantize_norm_batch(mat: np.ndarray, quantize: int = 100) -> tuple[np.ndarray, np.ndarray]:
+    """(q, n) for a (batch, dim) float64 matrix: components rounded to
+    ``1/quantize`` units as int64, and each row's squared norm. Integer
+    vectors make the cosine-threshold test exact (no float comparison), at
+    the cost of quantization error ~1/(2*quantize) per component — the
+    contract the brute-force oracle twin uses too.
 
-    This is the EXPRESSION form (used by the SQL-twinned oracle queries);
-    the scale pair path uses quantize_norm_batch — same values, one
-    vectorized Arrow pass instead of two interpreted per-element HOFs."""
-    return F.transform(
-        F.col(vec_col) if isinstance(vec_col, str) else vec_col,
-        lambda x: F.round(x * quantize).cast("long"),
-    )
-
-
-def quantize_norm_batch(quantize: int = 100):
-    """(q: array<long>, n: long) per vector in ONE Arrow pass — the
-    vectorized twin of quantize_vector + the squared-norm fold. Spark's
-    higher-order transform/aggregate run INTERPRETED per element (the
-    measured 16x trap, PERF.md), which at 10^9 x 768-dim vectors puts an
-    interpreter loop on every component; this pays one Arrow crossing for
-    whole-batch numpy instead.
-
-    Value parity is exact: F.round is HALF_UP (away from zero) on the
-    double, replicated as floor(|v| + 0.5) * sign(v) — np.round would be
-    banker's rounding and diverge on exact-.5 doubles (parity-tested)."""
-
-    @F.pandas_udf("q array<long>, n long")
-    def qn(vecs: pd.Series) -> pd.DataFrame:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64) * quantize
-        q = (np.floor(np.abs(mat) + 0.5) * np.sign(mat)).astype(np.int64)
-        n = np.einsum("ij,ij->i", q, q)
-        return pd.DataFrame({"q": list(q), "n": n})
-
-    return qn
+    Rounding is HALF_UP (away from zero) like SQL ROUND, written as
+    floor(|v| + 0.5) * sign(v) — np.round would be banker's rounding and
+    diverge on exact-.5 doubles (parity-tested against F.round)."""
+    scaled = mat * quantize
+    q = (np.floor(np.abs(scaled) + 0.5) * np.sign(scaled)).astype(np.int64)
+    return q, np.einsum("ij,ij->i", q, q)
 
 
 def quantized_cosine_threshold(threshold: float):
@@ -229,18 +203,7 @@ def embedding_near_dup_pairs(
     ).where(F.col("v").isNotNull() & (F.size("v") == dim))
 
     if method == "srp":
-        # planes generated exactly like srp_sketch_multi (rng seed + 1000*t)
-        per_table = [
-            np.random.default_rng(seed + 1000 * t).standard_normal((n_planes, dim))
-            for t in range(n_tables)
-        ]
-        planes = np.concatenate(per_table, axis=0)
-        weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
-
-        def keys_fn(mat: np.ndarray) -> np.ndarray:
-            bits = (mat @ planes.T) > 0
-            return bits.reshape(len(mat), n_tables, n_planes).astype(np.int64) @ weights
-
+        keys_fn = srp_sketch_multi(dim, n_planes, n_tables, seed)
     elif method == "ivf":
         cents = ivf_centroids(corpus, dim, vec_col, n_cells, sample=sample, seed=seed)
 
@@ -252,18 +215,12 @@ def embedding_near_dup_pairs(
         raise ValueError("method must be 'srp' or 'ivf'")
 
     # quantized components + squared norm + ALL bucket keys per VECTOR in a
-    # SINGLE vectorized Arrow pass over ONE corpus scan: the split form
-    # (quantize_norm_batch for verify, srp_sketch_multi/ivf-assign for
-    # banding) read the corpus and crossed the Python boundary twice for
-    # per-vector work that shares its input matrix. Values are identical —
-    # same rng planes / centroids, same HALF_UP quantization (see
-    # quantize_norm_batch: np.round would be banker's rounding and diverge).
+    # SINGLE vectorized Arrow pass over ONE corpus scan: verify and banding
+    # share the input matrix, so they share the scan and the Python crossing
     @F.pandas_udf("q array<long>, n long, keys array<long>")
     def feat(vecs: pd.Series) -> pd.DataFrame:
         mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        scaled = mat * quantize
-        q = (np.floor(np.abs(scaled) + 0.5) * np.sign(scaled)).astype(np.int64)
-        n = np.einsum("ij,ij->i", q, q)
+        q, n = quantize_norm_batch(mat, quantize)
         keys = keys_fn(mat)
         return pd.DataFrame({"q": list(q), "n": n, "keys": list(keys)})
 

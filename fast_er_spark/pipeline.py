@@ -31,7 +31,6 @@ from .catalog import StageCatalog
 from .functions.extract import extract_text_udf
 from .operators.components import connected_components
 from .operators.lsh import lsh_candidate_pairs
-from .operators.pregroup import pregroup_exact
 from .operators.substring import anchor_pairs, verify_anchor_pairs
 from .operators.verify import verify_pairs_jaccard
 
@@ -60,16 +59,14 @@ class DedupConfig:
     # must NOT merge two unrelated pages); 0 disables verification
     substring_min_span: int = 96
     num_partitions: int | None = None
-    # collapse byte-identical texts before the sketch path (operators/
-    # pregroup.py): same cluster assignments, pair list star-compressed
-    # within identical-text groups, expensive stages shrink by the exact-dup
-    # fraction (30-50% on web corpora)
-    pregroup_exact: bool = False
 
     def fingerprint(self) -> str:
-        # the retired mode/sketch fields stay in the hash at the values every
-        # run used, so stage tables written before their removal still resume
-        fields = {**asdict(self), "mode": "word", "sketch": "oph_jvm"}
+        # the retired mode/sketch/pregroup_exact fields stay in the hash at
+        # the values every default run used, so stage tables written before
+        # their removal still resume
+        fields = {
+            **asdict(self), "mode": "word", "sketch": "oph_jvm", "pregroup_exact": False,
+        }
         return hashlib.sha256(json.dumps(fields, sort_keys=True).encode()).hexdigest()[:16]
 
 
@@ -203,15 +200,6 @@ class DedupPipeline:
 
         docs = self._run_stage("input", build_input, resume)
 
-        if c.pregroup_exact:
-            # build the (reps, edges) pair ONCE; the two stage closures share
-            # it lazily so the fingerprint window shuffle runs a single time
-            pre = pregroup_exact(docs, "id", "text")
-            sketch_docs = self._run_stage("pregroup_reps", lambda: pre[0], resume)
-            exact_edges = self._run_stage("pregroup_edges", lambda: pre[1], resume)
-        else:
-            sketch_docs, exact_edges = docs, None
-
         # NOT fused through a sketch stage table, deliberately (negative
         # result, this round): staging the fused (minhash, sh) frame and
         # feeding candidates/verify from it measured ~2x SLOWER end-to-end
@@ -225,7 +213,7 @@ class DedupPipeline:
         cand = self._run_stage(
             "candidates",
             lambda: lsh_candidate_pairs(
-                sketch_docs, "id", "text",
+                docs, "id", "text",
                 num_perm=c.num_perm, bands=c.bands, rows_per_band=c.rows_per_band,
                 n=c.ngram, seed=c.seed,
                 max_bucket_size=c.max_bucket_size, num_partitions=c.num_partitions,
@@ -250,18 +238,18 @@ class DedupPipeline:
         verified = self._run_stage(
             "verified",
             lambda: verify_pairs_jaccard(
-                cand, sketch_docs, "id", "text", n=c.ngram, threshold=c.threshold
+                cand, docs, "id", "text", n=c.ngram, threshold=c.threshold
             ),
             resume,
             star_counters,
         )
 
-        edge_frames = [verified.select("id_a", "id_b")]
+        edge_df = verified.select("id_a", "id_b")
         if c.substring_pass:
             sub = self._run_stage(
                 "substring_edges",
                 lambda: anchor_pairs(
-                    sketch_docs, "id", "text",
+                    docs, "id", "text",
                     anchor_len=c.anchor_len, density=c.anchor_density,
                 ),
                 resume,
@@ -272,21 +260,15 @@ class DedupPipeline:
                 sub = self._run_stage(
                     "substring_verified",
                     lambda: verify_anchor_pairs(
-                        sub, sketch_docs, "id", "text", min_span=c.substring_min_span
+                        sub, docs, "id", "text", min_span=c.substring_min_span
                     ),
                     resume,
                 )
-            edge_frames.append(sub.select("id_a", "id_b"))
-        if exact_edges is not None:
-            edge_frames.append(exact_edges.select("id_a", "id_b"))
+            edge_df = edge_df.unionByName(sub.select("id_a", "id_b")).dropDuplicates(
+                ["id_a", "id_b"]
+            )
 
-        def build_edges():
-            out = edge_frames[0]
-            for f in edge_frames[1:]:
-                out = out.unionByName(f)
-            return out.dropDuplicates(["id_a", "id_b"]) if len(edge_frames) > 1 else out
-
-        edges = self._run_stage("edges", build_edges, resume)
+        edges = self._run_stage("edges", lambda: edge_df, resume)
 
         clusters = self._run_stage(
             "clusters",

@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark"]
 
 # local mode = one JVM for driver + all executor threads: size the heap for
 # N concurrent tasks' sort/join buffers or they spill — measured local[32]
@@ -69,7 +69,3 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
     )
     return builder.getOrCreate()
-
-
-def stop_spark(spark: SparkSession) -> None:
-    spark.stop()

@@ -6,9 +6,10 @@ value for value; the parity tests compare the two:
 
 - ``text_stats``, ``rolling_fingerprint``, ``lang_marker_counts``: Spark
   built-in expressions (interpreted higher-order functions, one pass per
-  statistic) twinning jvm/TextUdfs.java;
-- ``lang_id_ngram``: an Arrow pandas_udf running
-  functions.text.predict_lang_ngram_py, twinning TextUdfs$NgramLangId;
+  statistic) twinning jvm/TextUdfs.java; ``quality_score`` is the same
+  formula as functions.text.quality_score_from_stats, from expressions;
+- ``lang_id_ngram``: an Arrow pandas_udf running ``predict_lang_ngram_py``,
+  twinning TextUdfs$NgramLangId;
 - ``lcs_len``: the suffix-automaton longest common substring;
   jvm/LcsUdfs.java::SharesSpan must answer exactly ``lcs_len(a, b) >= k``.
 """
@@ -20,22 +21,60 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from fast_er_spark.functions.text import (
-    FP_BASE,
-    FP_MOD,
-    distinct_token_count,
-    lang_marker_score,
+    _NGRAM_K,
+    _ngram_counts,
+    _rank_profile,
     ngram_lang_profiles,
-    predict_lang_ngram_py,
-    token_count,
 )
 
 __all__ = [
+    "quality_score",
+    "lang_marker_score",
     "text_stats",
     "rolling_fingerprint",
     "lang_marker_counts",
+    "predict_lang_ngram_py",
     "lang_id_ngram",
     "lcs_len",
 ]
+
+# jvm/TextUdfs.java::RollingFp's modulus and base
+FP_MOD = 1_000_000_007
+FP_BASE = 31
+
+
+def tokens(col: Column) -> Column:
+    """Whitespace tokens; empty/blank text -> empty array (not [''])."""
+    return F.filter(F.split(col, r"\s+"), lambda t: t != F.lit(""))
+
+
+def token_count(col: Column) -> Column:
+    return F.size(tokens(col))
+
+
+def distinct_token_count(col: Column) -> Column:
+    return F.size(F.array_distinct(tokens(col)))
+
+
+def punct_ratio(col: Column) -> Column:
+    """Fraction of characters that are not alphanumeric/space."""
+    n = F.length(col)
+    stripped = F.length(F.regexp_replace(col, r"[^0-9A-Za-z\s]", ""))
+    return F.when(n > 0, (n - stripped) / n).otherwise(F.lit(0.0))
+
+
+def quality_score(col: Column) -> Column:
+    """Heuristic [0,1] quality: length band + low punctuation + type/token
+    ratio."""
+    n_tok = token_count(col)
+    len_ok = F.when((n_tok >= 5) & (n_tok <= 5000), F.lit(1.0)).otherwise(F.lit(0.0))
+    ttr = F.when(n_tok > 0, distinct_token_count(col) / n_tok).otherwise(F.lit(0.0))
+    return F.round((len_ok + (1.0 - punct_ratio(col)) + ttr) / 3.0, 6)
+
+
+def lang_marker_score(col: Column, markers: list[str]) -> Column:
+    """Count of tokens that appear in a language marker list."""
+    return F.size(F.filter(tokens(F.lower(col)), lambda t: t.isin(markers)))
 
 
 def rolling_fingerprint(col: Column) -> Column:
@@ -70,6 +109,24 @@ def lang_marker_counts(col: Column, markers: dict) -> Column:
         col.isNotNull(),
         F.array(*[lang_marker_score(col, mk).cast("long") for mk in markers.values()]),
     )
+
+
+def predict_lang_ngram_py(text: str | None, profiles: dict, k: int = _NGRAM_K) -> str | None:
+    """The kernel's algorithm and tie rules for BMP text: blank/None ->
+    None; ties -> first language in profile insertion order."""
+    if text is None:
+        return None
+    counts = _ngram_counts(text)
+    if not counts:
+        return None
+    doc = _rank_profile(counts, k)
+    best, best_d = None, None
+    for lg, ngs in profiles.items():
+        rank = {g: r for r, g in enumerate(ngs)}
+        d = sum(abs(r - rank[g]) if g in rank else k for r, g in enumerate(doc))
+        if best_d is None or d < best_d:
+            best, best_d = lg, d
+    return best
 
 
 def lang_id_ngram(col: Column, profiles: dict | None = None) -> Column:

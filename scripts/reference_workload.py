@@ -43,7 +43,8 @@ from fast_er_spark.session import get_spark
 from fixtures.synth import voters
 
 n = int(sys.argv[1])
-spark = get_spark("reference_workload", cpus=32, shuffle_partitions=64)
+cpus = len(os.sched_getaffinity(0))
+spark = get_spark("reference_workload", cpus=cpus, shuffle_partitions=2 * cpus)
 spark.sparkContext.setLogLevel("ERROR")
 rows_a, rows_b = voters(n=n, overlap=0.5, seed=42)
 df_a = spark.createDataFrame(pd.DataFrame(rows_a)).localCheckpoint()
@@ -68,6 +69,7 @@ print(json.dumps({
     "precision": round(n_true / n_linked, 4) if n_linked else None,
     "recall": round(n_true / n_shared, 4),
     "n_shared": n_shared,
+    "master": spark.sparkContext.master,
 }))
 spark.stop()
 """
@@ -112,7 +114,7 @@ def main() -> None:
                 "trials": results,
                 "reference": {"wall_sec": 28.4, "precision": 0.9802, "recall": 0.9983,
                               "hardware": "Colab T4 GPU"},
-                "hardware": "local[32] CPU",
+                "hardware": f"{best['master']} CPU",
             }
         )
     )

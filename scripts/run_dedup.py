@@ -12,7 +12,10 @@ Cluster usage::
         --input  s3://bucket/pages         `# (url, warc_ts, html, text, lang)` \
         --workdir s3://bucket/dedup_stages \
         --output s3://bucket/clusters \
-        [--iceberg-catalog lake] [--threshold 0.8] [--html-col html] [--resume]
+        [--iceberg-catalog lake] [--threshold 0.8] [--html-col html] [--no-resume]
+
+A rerun with the same ``--workdir`` and settings resumes from the stage
+tables already written; ``--no-resume`` recomputes every stage.
 
 Local smoke::
 
@@ -32,7 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     ap = argparse.ArgumentParser(description="near-duplicate detection + clustering")
-    ap.add_argument("--input", required=True, help="parquet path or table of pages")
+    ap.add_argument("--input", required=True, help="parquet path of the pages")
     ap.add_argument("--workdir", required=True, help="stage-checkpoint location")
     ap.add_argument("--output", required=True, help="cluster assignment output")
     ap.add_argument("--id-col", default="doc_id")
@@ -51,8 +54,6 @@ def main() -> None:
                     help="length (chars) of a verbatim span two docs must share "
                          "before a substring candidate may merge clusters; "
                          "0 keeps every candidate unverified")
-    ap.add_argument("--pregroup-exact", action="store_true",
-                    help="collapse byte-identical texts before the sketch path")
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
@@ -73,7 +74,6 @@ def main() -> None:
         max_bucket_size=args.max_bucket_size,
         substring_pass=not args.no_substring_pass,
         substring_min_span=args.substring_min_span,
-        pregroup_exact=args.pregroup_exact,
         num_partitions=args.num_partitions,
     )
     pipe = DedupPipeline(spark, args.workdir, cfg, iceberg_catalog=args.iceberg_catalog)

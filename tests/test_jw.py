@@ -8,9 +8,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from fast_er_spark.functions.jw import discretize, jaro_winkler, jw_batch
-
-import pandas as pd
+from fast_er_spark.functions.jw import discretize, jaro_winkler
 
 
 def test_classic_pairs():
@@ -71,15 +69,6 @@ def test_discretize_bands():
     assert discretize(1.0) == 2
 
 
-def test_batch_matches_scalar_and_nulls():
-    a = pd.Series(["MARTHA", "DWAYNE", None, "abc"])
-    b = pd.Series(["MARHTA", "DUANE", "x", None])
-    out = jw_batch(a, b)
-    assert out[0] == pytest.approx(jaro_winkler("MARTHA", "MARHTA"))
-    assert out[1] == pytest.approx(jaro_winkler("DWAYNE", "DUANE"))
-    assert out[2] == 0.0 and out[3] == 0.0
-
-
 @settings(max_examples=200, deadline=None)
 @given(st.text(max_size=24), st.text(max_size=24))
 def test_properties(s1, s2):
@@ -88,103 +77,6 @@ def test_properties(s1, s2):
     assert v == pytest.approx(w, abs=1e-12)  # symmetry
     assert 0.0 <= v <= 1.0  # range, given p <= 0.25
     assert not math.isnan(v)
-
-
-def test_bit_parallel_parity_with_scalar():
-    """jw_bits_batch / jw_batch must agree with the scalar reference kernel
-    bit for bit on adversarial inputs (tiny strings, repeats, NULs, high
-    bytes, shared prefixes, chunk boundaries)."""
-    import random
-
-    import numpy as np
-    import pandas as pd
-
-    from fast_er_spark.functions.jw import (
-        jaro_winkler_bytes,
-        jw_batch,
-        jw_bits_batch,
-    )
-
-    rng = random.Random(11)
-    pools = [b"ab", b"abcde", bytes(range(97, 123)), b"aaaabbbb", bytes([1, 2, 255, 97])]
-    pairs = []
-    for _ in range(5000):
-        pool = rng.choice(pools)
-        pairs.append(
-            (
-                bytes(rng.choice(pool) for _ in range(rng.randint(0, 63))),
-                bytes(rng.choice(pool) for _ in range(rng.randint(0, 63))),
-            )
-        )
-    want = np.array([jaro_winkler_bytes(x, y) for x, y in pairs])
-    got = jw_bits_batch([x for x, _ in pairs], [y for _, y in pairs])
-    assert (np.abs(want - got) <= 1e-12).all()
-
-    svals = ["martha", None, "x" * 100, "abc", "héllo", "a\x00b", "", "a", "zz" * 31]
-    sp = [(x, y) for x in svals for y in svals]
-    got_s = jw_batch(
-        pd.Series([x for x, _ in sp], dtype=object),
-        pd.Series([y for _, y in sp], dtype=object),
-    ).to_numpy()
-    want_s = np.array(
-        [
-            0.0
-            if x is None or y is None
-            else jaro_winkler_bytes(str(x).encode(), str(y).encode())
-            for x, y in sp
-        ]
-    )
-    assert (np.abs(want_s - got_s) <= 1e-12).all()
-
-
-def test_bit_parallel_hypothesis_parity():
-    """Property-based parity: the bit-parallel kernel equals the scalar
-    reference kernel for arbitrary byte strings up to 63 bytes."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from fast_er_spark.functions.jw import jaro_winkler_bytes, jw_bits_batch
-
-    @settings(max_examples=300, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(
-                st.binary(min_size=0, max_size=63),
-                st.binary(min_size=0, max_size=63),
-            ),
-            min_size=1,
-            max_size=50,
-        )
-    )
-    def check(pairs):
-        got = jw_bits_batch([a for a, _ in pairs], [b for _, b in pairs])
-        want = np.array([jaro_winkler_bytes(a, b) for a, b in pairs])
-        assert (np.abs(got - want) <= 1e-12).all()
-
-    check()
-
-
-def test_trailing_nul_routes_to_scalar_path():
-    """numpy 'U' storage drops trailing U+0000, so 'ab\\x00' looks like 'ab'
-    to the vectorized path — such rows must fall back to the byte-exact
-    scalar implementation (round-2 ADVICE)."""
-    from fast_er_spark.functions.jw import jaro_winkler_bytes
-
-    cases = [
-        ("ab\x00", "ab"),
-        ("ab", "ab\x00"),
-        ("martha\x00\x00", "marhta"),
-        ("a\x00b", "ab"),  # interior NUL (already covered, keep both paths)
-        ("\x00", "\x00"),
-    ]
-    a = pd.Series([c[0] for c in cases])
-    b = pd.Series([c[1] for c in cases])
-    got = jw_batch(a, b).tolist()
-    want = [
-        jaro_winkler_bytes(x.encode("utf-8"), y.encode("utf-8")) for x, y in cases
-    ]
-    assert got == pytest.approx(want)
 
 
 def test_char_mask_bound_soundness_fuzz():

@@ -118,19 +118,15 @@ def test_hot_bucket_star_cap_bounds_fanout(spark):
 
 
 def test_srp_sketch_multi_matches_single_table(spark):
+    from pyspark.sql import functions as F
+
     from fast_er_spark.operators.similarity import srp_sketch
 
     rows, _ = embeddings(n=50, dim=16, seed=11)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    from pyspark.sql import functions as F
-
-    multi = srp_sketch_multi(16, n_planes=6, n_tables=3)
-    got = {
-        r["vec_id"]: r["ks"]
-        for r in df.select(
-            "vec_id", multi(F.col("embedding").cast("array<double>")).alias("ks")
-        ).collect()
-    }
+    vecs = df.select("vec_id", F.col("embedding").cast("array<double>").alias("v")).collect()
+    multi = srp_sketch_multi(16, n_planes=6, n_tables=3)(np.array([r["v"] for r in vecs]))
+    got = {r["vec_id"]: ks for r, ks in zip(vecs, multi)}
     for t in range(3):
         single = srp_sketch(16, n_planes=6, table=t)
         exp = {
@@ -144,15 +140,12 @@ def test_srp_sketch_multi_matches_single_table(spark):
 
 
 def test_quantize_norm_batch_matches_expression(spark):
-    """The Arrow quantizer must equal the expression path bit-for-bit —
-    including exact-.5 doubles, where np.round (banker's) would diverge
-    from F.round (HALF_UP): with quantize=2, +-0.25 -> +-0.5 -> +-1."""
+    """The numpy quantizer must equal F.round bit-for-bit — including
+    exact-.5 doubles, where np.round (banker's) would diverge from F.round
+    (HALF_UP): with quantize=2, +-0.25 -> +-0.5 -> +-1."""
     from pyspark.sql import functions as F
 
-    from fast_er_spark.operators.similarity import (
-        quantize_norm_batch,
-        quantize_vector,
-    )
+    from fast_er_spark.operators.similarity import quantize_norm_batch
 
     rows = [
         (0, [0.25, -0.25, 0.75, -0.75]),     # exact .5 multiples at q=2
@@ -161,16 +154,12 @@ def test_quantize_norm_batch_matches_expression(spark):
         (3, [1e-9, -1e-9, 0.9999999, -0.123456]),
     ]
     df = spark.createDataFrame(rows, "i long, v array<double>")
+    mat = np.array([v for _, v in rows])
     for q in (2, 100):
-        qcol = quantize_vector("v", q)
+        qcol = F.transform("v", lambda x: F.round(x * q).cast("long"))
         sqn = F.aggregate(qcol, F.lit(0).cast("long"), lambda a, x: a + x * x)
-        got = {
-            r["i"]: (r["qe"], r["ne"], r["qn"]["q"], r["qn"]["n"])
-            for r in df.select(
-                "i", qcol.alias("qe"), sqn.alias("ne"),
-                quantize_norm_batch(q)(F.col("v")).alias("qn"),
-            ).collect()
-        }
-        for i, (qe, ne, qa, na) in got.items():
-            assert qe == qa, (q, rows[i][1], qe, qa)
-            assert ne == na, (q, rows[i][1], ne, na)
+        qa, na = quantize_norm_batch(mat, q)
+        for r in df.select("i", qcol.alias("qe"), sqn.alias("ne")).collect():
+            i = r["i"]
+            assert r["qe"] == qa[i].tolist(), (q, rows[i][1], r["qe"], qa[i])
+            assert r["ne"] == na[i], (q, rows[i][1], r["ne"], na[i])

@@ -8,7 +8,7 @@ import pytest
 
 from fixtures.synth import pages
 from oracle.reference import connected_components as cc_oracle
-from oracle.reference import jaccard_dup_pairs, shingle_set
+from oracle.reference import jaccard_dup_pairs
 
 
 N_GRAM = 3
@@ -23,29 +23,6 @@ def corpus(spark):
     ).cache()
     texts = {r["doc_id"]: r["text"] for r in rows}
     return df, texts
-
-
-def test_shingle_array_matches_python(spark):
-    from pyspark.sql import functions as F
-
-    from fast_er_spark.operators.verify import shingle_array
-
-    samples = [
-        "a b c d e",
-        "one two",
-        "single",
-        "",
-        "   ",
-        "x y z",
-        "tok " * 30,
-    ]
-    df = spark.createDataFrame([(i, s) for i, s in enumerate(samples)], "i long, t string")
-    got = {
-        r["i"]: set(r["sh"])
-        for r in df.select("i", shingle_array(F.col("t"), N_GRAM).alias("sh")).collect()
-    }
-    for i, s in enumerate(samples):
-        assert got[i] == shingle_set(s, N_GRAM, "word"), (i, s)
 
 
 def test_lsh_verified_pairs_recall(spark, corpus):
@@ -89,10 +66,11 @@ def test_connected_components_vs_union_find(spark):
     assert got == want
 
 
-def test_connected_components_engines_agree(spark):
-    """The size-adaptive driver union-find (engine='auto' under the edge cap)
-    must emit exactly the distributed star-fixpoint's assignments — same
-    rows, same min-id components, isolated nodes included."""
+def test_connected_components_engines_agree(spark, monkeypatch):
+    """The driver union-find (edge count at or under DRIVER_MAX_EDGES) must
+    emit exactly the distributed star-fixpoint's assignments — same rows,
+    same min-id components, isolated nodes included."""
+    from fast_er_spark.operators import components
     from fast_er_spark.operators.components import connected_components
 
     rng = random.Random(11)
@@ -104,24 +82,25 @@ def test_connected_components_engines_agree(spark):
     nodes = [(n,) for n in range(0, 420)]
     e_df = spark.createDataFrame(edges, "id_a long, id_b long")
     n_df = spark.createDataFrame(nodes, "id long")
-    dist = {
-        (int(r.id), int(r.component))
-        for r in connected_components(e_df, nodes=n_df, engine="distributed").collect()
-    }
-    drv = {
-        (int(r.id), int(r.component))
-        for r in connected_components(e_df, nodes=n_df, engine="driver").collect()
-    }
-    auto = {
-        (int(r.id), int(r.component))
-        for r in connected_components(e_df, nodes=n_df).collect()
-    }
-    assert dist == drv == auto
+
+    calls = []
+    for name in ("_cc_driver", "_cc_iterate"):
+        fn = getattr(components, name)
+        monkeypatch.setattr(
+            components, name, lambda *a, _fn=fn, _n=name: (calls.append(_n), _fn(*a))[1]
+        )
+
+    def run(cap):
+        monkeypatch.setattr(components, "DRIVER_MAX_EDGES", cap)
+        out = connected_components(e_df, nodes=n_df)
+        return {(int(r.id), int(r.component)) for r in out.collect()}, out.schema
+
+    drv, drv_schema = run(len(edges))  # exactly at the cap: driver
+    dist, dist_schema = run(len(edges) - 1)  # one edge over: distributed
+    assert calls == ["_cc_driver", "_cc_iterate"]
+    assert dist == drv
     # schema parity: downstream casts rely on identical column types
-    assert (
-        connected_components(e_df, nodes=n_df, engine="driver").schema
-        == connected_components(e_df, nodes=n_df, engine="distributed").schema
-    )
+    assert drv_schema == dist_schema
 
 
 def test_cluster_assignments_match_oracle(spark, corpus):

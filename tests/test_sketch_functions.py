@@ -4,14 +4,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from fast_er_spark.functions.minhash import (
-    jaccard_estimate,
-    minhash_batch,
-    minhash_params,
-    minhash_signature,
-)
-from fast_er_spark.functions.shingles import hash_shingles, hash_shingles_batch, shingles
-from fast_er_spark.functions.simhash import hamming64, simhash_bands, simhash_batch
+from fast_er_spark.functions.minhash import minhash_batch
+from fast_er_spark.functions.shingles import hash_shingles_batch, shingles
+from fast_er_spark.functions.simhash import simhash_bands, simhash_batch
 from oracle.reference import jaccard, shingle_set
 
 
@@ -42,16 +37,15 @@ def test_batch_hashes_match_per_string_cardinality():
 
 
 def test_minhash_jaccard_estimate_accuracy():
-    rng = np.random.default_rng(0)
-    a, b = minhash_params(256, seed=42)
-    base = rng.integers(0, 1 << 61, size=600, dtype=np.uint64)
-    set_a = base[:400]
+    """Word 1-gram texts with a known token overlap: the share of equal
+    signature slots estimates their Jaccard."""
+    toks = [f"t{i}" for i in range(800)]
+    doc_a = " ".join(toks[:400])
     for overlap in (100, 200, 300, 400):
-        set_b = np.concatenate([base[:overlap], base[400 : 800 - overlap]])
+        doc_b = " ".join(toks[:overlap] + toks[400 : 800 - overlap])
         true_j = overlap / (800 - overlap)
-        sig_a = minhash_signature(set_a, a, b)
-        sig_b = minhash_signature(set_b, a, b)
-        est = jaccard_estimate(sig_a, sig_b)
+        sig_a, sig_b = minhash_batch(pd.Series([doc_a, doc_b]), 256, 1, "word", 42)
+        est = float((sig_a == sig_b).mean())
         assert est == pytest.approx(true_j, abs=0.12), (overlap, true_j, est)
 
 
@@ -75,18 +69,15 @@ def test_simhash_near_duplicates_low_hamming():
     near = doc.replace("lazy", "sleepy", 2)
     far = "completely different content about spark shuffles and joins " * 8
     fps = simhash_batch(pd.Series([doc, near, far]), 3, "word", 42)
-    assert hamming64(int(fps[0]), int(fps[1])) <= 12
-    assert hamming64(int(fps[0]), int(fps[2])) > 20
+    def hamming(a, b):
+        return bin((int(a) ^ int(b)) & ((1 << 64) - 1)).count("1")
+
+    assert hamming(fps[0], fps[1]) <= 12
+    assert hamming(fps[0], fps[2]) > 20
     # banding: near dups share a block at small hamming
     b0 = set(simhash_bands(int(fps[0])))
     b2 = set(simhash_bands(int(fps[2])))
     assert b0 != b2
-
-
-def test_hash_shingles_stable_across_calls():
-    h1 = hash_shingles(["a b c", "b c d"], seed=3)
-    h2 = hash_shingles(["b c d", "a b c"], seed=3)
-    assert set(h1.tolist()) == set(h2.tolist())
 
 
 def test_oracle_jaccard_consistency():
@@ -191,11 +182,8 @@ def test_ngram_lang_id_accuracy_python():
     """Cavnar-Trenkle profiles must classify held-out sentences (NOT in the
     seed corpora) correctly for every language, across two registers —
     26 labeled fixtures, 100% required."""
-    from fast_er_spark.functions.text import (
-        NGRAM_SEED_TEXTS,
-        ngram_lang_profiles,
-        predict_lang_ngram_py,
-    )
+    from fast_er_spark.functions.text import NGRAM_SEED_TEXTS, ngram_lang_profiles
+    from oracle.kernels import predict_lang_ngram_py
 
     profiles = ngram_lang_profiles()
     assert set(NGRAM_SEED_TEXTS) == set(HELD_OUT_SENTENCES) == set(HELD_OUT_SENTENCES_2)
