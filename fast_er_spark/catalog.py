@@ -75,10 +75,13 @@ class StageCatalog:
         else:
             df.write.mode("append").parquet(self._path(name))
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema=None) -> DataFrame:
+        """Read ``name``; with ``schema`` no parquet inference job runs (an
+        Iceberg table is read by name: its catalog holds the schema)."""
         if self.iceberg:
             return self.spark.read.table(self._table(name))
-        return self.spark.read.parquet(self._path(name))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(name))
 
     def exists(self, name: str) -> bool:
         if self.iceberg:

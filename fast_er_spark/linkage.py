@@ -30,7 +30,6 @@ size. The analytic-singles engine and blocking are rectangle-only.
 from __future__ import annotations
 
 import atexit
-import os
 import shutil
 import tempfile
 import uuid
@@ -638,20 +637,14 @@ class Comparison:
         self._multi_materialized = False
 
     def _analytic(self) -> bool:
-        """Analytic-singles counts engine gate. 'auto' (default): on for
-        BIG pair spaces, where single-agreement pairs dominate the
-        assembly shuffle and their analytical treatment removes the
-        materialized pattern frame entirely; small fits keep the one
-        union+groupBy plan (the extra value-cube jobs would cost more
-        scheduling than they save). '1'/'force' = always (parity tests),
-        '0' = never. Rectangle-only (see _Rectangle.analytic_ok and
+        """Analytic-singles counts engine gate: on for BIG pair spaces,
+        where single-agreement pairs dominate the assembly shuffle and
+        their analytical treatment removes the materialized pattern frame
+        entirely; small fits keep the one union+groupBy plan (the extra
+        value-cube jobs would cost more scheduling than they save).
+        Rectangle-only (see _Rectangle.analytic_ok and
         _Triangle.analytic_ok)."""
-        mode = os.environ.get("FAST_ER_ANALYTIC_SINGLES", "auto")
-        if mode == "0" or not self._u.analytic_ok or self.k_fuzzy < 1:
-            return False
-        if mode in ("1", "force"):
-            return True
-        return self._big()
+        return self._u.analytic_ok and self.k_fuzzy >= 1 and self._big()
 
     def _big(self) -> bool:
         """Pair space >= _SPILL_PAIR_SPACE -> parquet spill + pre-partitioned

@@ -27,7 +27,8 @@ whose own cluster has no pivot. Multi-probe (star_pivots=3 default) bounds
 that risk — a member stays connected unless it fails verification against
 ALL pivots — but does not eliminate it. DedupPipeline counts the star
 candidates that verification rejects (the ``star_rejected_by_verify`` row
-of its ``_metrics`` table); watch it when tuning max_bucket_size.
+of its ``metrics()``, projected from the ``_ledger`` table); watch it when
+tuning max_bucket_size.
 
 Tuning: collision probability for Jaccard j is 1 - (1 - j^r)^b with b bands
 of r rows. Defaults (b=32, r=4, 128 perms) give P(candidate) > 0.9999 at
@@ -167,7 +168,6 @@ def lsh_candidate_pairs(
     mode: str = "word",
     seed: int = 42,
     max_bucket_size: int = 2000,
-    num_partitions: int | None = None,
     star_pivots: int = 3,
     mark_star: bool = False,
     presigned: DataFrame | None = None,
@@ -200,8 +200,6 @@ def lsh_candidate_pairs(
         )
         signed = with_minhash_signature(base, "__text", num_perm, n, mode, seed)
     ex = band_buckets(signed, "id", "minhash", bands, rows_per_band)
-    if num_partitions:
-        ex = ex.repartition(num_partitions, "band", "bucket")
 
     # ONE hash aggregation gathers each bucket's members — no sort-based
     # window, no self-join — and ONE projection emits the pairs, so the

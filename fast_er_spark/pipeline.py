@@ -3,9 +3,11 @@
 The north_rule pipeline: extract -> shingle/MinHash -> LSH candidates ->
 exact verify -> substring anchor pass -> edges -> connected components, with
 every stage CHECKPOINTED to a stage table (Iceberg when configured, parquet
-otherwise), per-stage + per-partition lineage/metrics tables, and mid-run
-RESUME: a stage whose output exists under the same config fingerprint is read
-back instead of recomputed.
+otherwise) and recorded by one append to the ``_ledger`` table, the only
+record of a finished stage. A run reads the ledger once and RESUMES a stage
+it records under the same config fingerprint whose table exists, so a stage
+killed between its write and its append is rebuilt. ``metrics()`` and
+``lineage()`` are projections of the ledger.
 
 Scale design notes (10^12-doc targets):
 - every stage is a pure DataFrame transform; stage boundaries are exactly the
@@ -26,6 +28,7 @@ from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .catalog import StageCatalog
 from .functions.extract import extract_text_udf
@@ -35,6 +38,16 @@ from .operators.substring import anchor_pairs, verify_anchor_pairs
 from .operators.verify import verify_pairs_jaccard
 
 __all__ = ["DedupConfig", "DedupPipeline"]
+
+# read with this schema, so no inference job runs. A stage's append holds
+# its partition rows and one summary row (part_id null), sharing one seq
+LEDGER = ("seq long, stage string, config_fp string, part_id int, rows long, star long, "
+          "wall_ms long, schema string, star_in long")
+
+
+def _ledger_row(cols: dict) -> list:
+    """The ledger's columns in order, null where ``cols`` gives none."""
+    return [cols.get(c, F.lit(None)).cast(t).alias(c) for c, t in map(str.split, LEDGER.split(", "))]
 
 
 @dataclass
@@ -56,16 +69,16 @@ class DedupConfig:
     anchor_density: int = 8
     # anchor candidates only become edges after an exact longest-common-
     # substring check >= this many chars (one shared boilerplate sentence
-    # must NOT merge two unrelated pages); 0 disables verification
+    # must NOT merge two unrelated pages); 0 keeps every candidate
     substring_min_span: int = 96
-    num_partitions: int | None = None
 
     def fingerprint(self) -> str:
-        # the retired mode/sketch/pregroup_exact fields stay in the hash at
-        # the values every default run used, so stage tables written before
-        # their removal still resume
+        # the retired mode/sketch/pregroup_exact/num_partitions fields stay
+        # in the hash at the values every default run used, so a default
+        # config keeps its fingerprint
         fields = {
             **asdict(self), "mode": "word", "sketch": "oph_jvm", "pregroup_exact": False,
+            "num_partitions": None,
         }
         return hashlib.sha256(json.dumps(fields, sort_keys=True).encode()).hexdigest()[:16]
 
@@ -103,40 +116,47 @@ class DedupPipeline:
         self.catalog = StageCatalog(spark, workdir, iceberg_catalog)
         self.fp = self.config.fingerprint()
         self.results: list[StageResult] = []
-        self._stars: dict[str, int | None] = {}  # observed on this run's fresh stages
+        self._stars: dict[str, int | None] = {}  # this run's stages, fresh or resumed
+        self._recorded: dict = {}  # stage -> its latest ledger append
 
     # ----------------------------------------------------------- plumbing
     def _stage_name(self, stage: str) -> str:
         return f"{stage}_{self.fp}"
 
-    def _run_stage(self, stage: str, build, resume: bool, counters=None) -> DataFrame:
-        """Resume a stage table, or build and write it, then run two actions:
-        the ``_lineage`` append, observed for the row and star counts, and
-        the ``_metrics`` append, with the ``(name, value)`` ``counters()``."""
+    def _run_stage(self, stage: str, build, star_in: int | None = None) -> DataFrame:
+        """Resume ``stage`` if the ledger records it and its table exists, or
+        build and write it, then append its observed partition counts and a
+        summary row (wall_ms of build + write, schema, star_in) in one job."""
         name = self._stage_name(stage)
         t0 = time.perf_counter()
-        if resume and self.catalog.exists(name):
-            df = self.catalog.read(name)
-            self.results.append(
-                StageResult(stage, df.count(), int((time.perf_counter() - t0) * 1000), True)
-            )
-            return df
+        rec = self._recorded.get(stage)
+        if rec is not None and self.catalog.exists(name):
+            out = self.catalog.read(name, T.StructType.fromJson(json.loads(rec.schema)))
+            self._stars[stage] = rec.star
+            wall = int((time.perf_counter() - t0) * 1000)
+            self.results.append(StageResult(stage, rec.rows_out, wall, True))
+            return out
         preexisting = self._persistent_rdd_ids()
         out = self.catalog.write(build(), name)
-        star = [F.count_if("is_star").alias("star")] if "is_star" in out.columns else []
+        wall = int((time.perf_counter() - t0) * 1000)
+        has_star = "is_star" in out.columns
+        star = F.count_if("is_star") if has_star else F.lit(None)
         part = out.withColumn("part_id", F.spark_partition_id()).groupBy("part_id").agg(
-            F.count(F.lit(1)).alias("rows"), *star
+            F.count(F.lit(1)).alias("rows"), star.cast("long").alias("star")
         )
         obs = Observation()
-        part = part.observe(obs, *[F.sum(c).alias(c) for c in part.columns[1:]])
-        tags = [F.lit(stage).alias("stage"), F.lit(self.fp).alias("config_fp")]
-        self.catalog.append(part.select("part_id", "rows", *tags), "_lineage")
+        part = part.observe(obs, F.sum("rows").alias("rows"), F.sum("star").alias("star"))
+        key = {"seq": F.lit(time.time_ns()), "stage": F.lit(stage), "config_fp": F.lit(self.fp)}
+        summary = {"rows": F.lit(0), "star": F.lit(0 if has_star else None), "wall_ms": F.lit(wall),
+                   "schema": F.lit(out.schema.json()), "star_in": F.lit(star_in)}
+        self.catalog.append(
+            part.select(*_ledger_row({**key, **{c: F.col(c) for c in part.columns}}))
+            .union(self.spark.range(1, numPartitions=1).select(*_ledger_row({**key, **summary}))),
+            "_ledger",
+        )
         got = {k: int(v or 0) for k, v in obs.get.items()}  # empty table: null sums
-        rows, self._stars[stage] = got["rows"], got.get("star")
-        wall = int((time.perf_counter() - t0) * 1000)
-        self.results.append(StageResult(stage, rows, wall, False))
-        extra = [(k, v, 0) for k, v in counters()] if counters else []
-        self.catalog.append(self._metrics_rows([(stage, rows, wall), *extra]), "_metrics")
+        self._stars[stage] = got["star"] if has_star else None
+        self.results.append(StageResult(stage, got["rows"], wall, False))
         self._drop_stage_blocks(preexisting)
         return out
 
@@ -167,28 +187,40 @@ class DedupPipeline:
         except Exception:
             pass  # cleanup is best-effort; never fail the pipeline for it
 
-    def _metrics_rows(self, facts: list[tuple[str, int, int]]) -> DataFrame:
-        """``(stage, rows_out, wall_ms)`` rows as one LITERAL-expression
-        frame — createDataFrame of a list plans a single-task Python-RDD
-        job (~1-2 s of fixed latency each; PERF.md round 4 "tiny-frame
-        rule"). A counter's row carries its value in rows_out, wall_ms 0."""
-        return self.spark.range(1, numPartitions=1).select(F.inline(F.array(*[
-            F.struct(F.lit(s).alias("stage"), F.lit(self.fp).alias("config_fp"),
-                     F.lit(r).cast("long").alias("rows_out"),
-                     F.lit(w).cast("long").alias("wall_ms"))
-            for s, r, w in facts
-        ])))
+    def _appends(self) -> DataFrame:
+        """One row per append: summed rows and star, the summary's fields."""
+        return self.catalog.read("_ledger", LEDGER).groupBy("seq", "stage", "config_fp").agg(
+            F.sum("rows").alias("rows_out"), F.sum("star").alias("star"),
+            *[F.max(c).alias(c) for c in ("wall_ms", "schema", "star_in")],
+        )
+
+    def _read_ledger(self) -> dict:
+        """stage -> its latest append under this config, in one read."""
+        appends = self._appends().where(F.col("config_fp") == self.fp).collect()
+        return {r.stage: r for r in sorted(appends, key=lambda r: r.seq)}
 
     def metrics(self) -> DataFrame:
-        return self.catalog.read("_metrics")
+        """``(stage, config_fp, rows_out, wall_ms)`` per stage append, and per
+        ``verified`` append its star-cap counters (lsh.py RECALL CAVEAT)."""
+        appends = self._appends()
+        starred, zero = appends.where(F.col("star_in").isNotNull()), F.lit(0).cast("long")
+        return appends.select("stage", "config_fp", "rows_out", "wall_ms").union(
+            starred.select(F.lit("star_candidates"), "config_fp", "star_in", zero)
+        ).union(starred.select(
+            F.lit("star_rejected_by_verify"), "config_fp", F.col("star_in") - F.col("star"), zero
+        ))
 
     def lineage(self) -> DataFrame:
-        return self.catalog.read("_lineage")
+        """``(part_id, rows, stage, config_fp)`` per written stage partition."""
+        return self.catalog.read("_ledger", LEDGER).where(F.col("part_id").isNotNull()).select(
+            "part_id", "rows", "stage", "config_fp"
+        )
 
     # --------------------------------------------------------------- run
     def run(self, corpus: DataFrame, resume: bool = True) -> DataFrame:
         c = self.config
         self._stars.clear()
+        self._recorded = self._read_ledger() if resume and self.catalog.exists("_ledger") else {}
 
         def build_input():
             df = corpus
@@ -198,7 +230,7 @@ class DedupPipeline:
                 F.col(c.id_col).cast("long").alias("id"), F.col(c.text_col).alias("text")
             )
 
-        docs = self._run_stage("input", build_input, resume)
+        docs = self._run_stage("input", build_input)
 
         # NOT fused through a sketch stage table, deliberately (negative
         # result, this round): staging the fused (minhash, sh) frame and
@@ -215,64 +247,41 @@ class DedupPipeline:
             lambda: lsh_candidate_pairs(
                 docs, "id", "text",
                 num_perm=c.num_perm, bands=c.bands, rows_per_band=c.rows_per_band,
-                n=c.ngram, seed=c.seed,
-                max_bucket_size=c.max_bucket_size, num_partitions=c.num_partitions,
-                mark_star=True,
+                n=c.ngram, seed=c.seed, max_bucket_size=c.max_bucket_size, mark_star=True,
             ),
-            resume,
         )
-
-        def star_counters():
-            # star-cap recall telemetry (lsh.py RECALL CAVEAT): star-only
-            # candidates rejected by verification are pairs a hot bucket
-            # proposed across clusters, where TRUE dup pairs lost to caps
-            # show first. None without is_star (pre-telemetry tables).
-            kept = self._stars["verified"]
-            if kept is None or "is_star" not in cand.columns:
-                return []
-            n_star = self._stars.get("candidates")
-            if n_star is None:  # candidates resumed: one count on its table
-                n_star = cand.where(F.col("is_star")).count()
-            return [("star_candidates", n_star), ("star_rejected_by_verify", n_star - kept)]
 
         verified = self._run_stage(
             "verified",
             lambda: verify_pairs_jaccard(
                 cand, docs, "id", "text", n=c.ngram, threshold=c.threshold
             ),
-            resume,
-            star_counters,
+            star_in=self._stars["candidates"],
         )
 
         edge_df = verified.select("id_a", "id_b")
         if c.substring_pass:
-            sub = self._run_stage(
+            anchors = self._run_stage(
                 "substring_edges",
                 lambda: anchor_pairs(
                     docs, "id", "text",
                     anchor_len=c.anchor_len, density=c.anchor_density,
                 ),
-                resume,
             )
-            if c.substring_min_span > 0:
-                # anchor collisions are candidates, not edges: only pairs
-                # with an exact shared span >= min_span may merge clusters
-                sub = self._run_stage(
-                    "substring_verified",
-                    lambda: verify_anchor_pairs(
-                        sub, docs, "id", "text", min_span=c.substring_min_span
-                    ),
-                    resume,
-                )
+            # anchor collisions are candidates, not edges: only pairs with
+            # an exact shared span >= min_span may merge clusters
+            sub = self._run_stage(
+                "substring_verified",
+                lambda: verify_anchor_pairs(
+                    anchors, docs, "id", "text", min_span=c.substring_min_span
+                ),
+            )
             edge_df = edge_df.unionByName(sub.select("id_a", "id_b")).dropDuplicates(
                 ["id_a", "id_b"]
             )
 
-        edges = self._run_stage("edges", lambda: edge_df, resume)
+        edges = self._run_stage("edges", lambda: edge_df)
 
-        clusters = self._run_stage(
-            "clusters",
-            lambda: connected_components(edges, nodes=docs.select("id")),
-            resume,
+        return self._run_stage(
+            "clusters", lambda: connected_components(edges, nodes=docs.select("id"))
         )
-        return clusters

@@ -9,7 +9,7 @@ Usage::
     python scripts/dump_plans.py OUTDIR SUFFIX query [query ...]
 
 Environment: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32).
+SPARK_GRAFT_CPUS (default: the cpus this process may run on).
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from fast_er_spark.session import get_spark  # noqa: E402
 def main() -> None:
     outdir, suffix, *names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     spark = get_spark("fast-er-spark-plandump", cpus=cpus, shuffle_partitions=max(cpus, 16))
     spark.sparkContext.setLogLevel("ERROR")
     qmap = entry_mod.queries()

@@ -47,7 +47,6 @@ def main() -> None:
     ap.add_argument("--rows-per-band", type=int, default=4)
     ap.add_argument("--ngram", type=int, default=3)
     ap.add_argument("--max-bucket-size", type=int, default=2000)
-    ap.add_argument("--num-partitions", type=int, default=None)
     ap.add_argument("--iceberg-catalog", default=None)
     ap.add_argument("--no-substring-pass", action="store_true")
     ap.add_argument("--substring-min-span", type=int, default=96,
@@ -74,7 +73,6 @@ def main() -> None:
         max_bucket_size=args.max_bucket_size,
         substring_pass=not args.no_substring_pass,
         substring_min_span=args.substring_min_span,
-        num_partitions=args.num_partitions,
     )
     pipe = DedupPipeline(spark, args.workdir, cfg, iceberg_catalog=args.iceberg_catalog)
     corpus = spark.read.parquet(args.input)

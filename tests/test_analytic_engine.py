@@ -1,17 +1,16 @@
 """Parity tests for the analytic-singles counts engine (linkage.py).
 
-The engine (FAST_ER_ANALYTIC_SINGLES) materializes only multi-agreement
+The engine (on for big unblocked fits) materializes only multi-agreement
 (>= 2 fuzzy) pairs and reconstructs the single-agreement histogram from
 value-level joint counts (per-side CUBE joined through the scored
 value-pair frame, Moebius inversion over exact subsets). These tests pin
 exact equality against the classic engine — counts, transform pairs, and
 matched_pairs across every nonzero pattern (multi, single, exact-only) —
-on a fixture dense enough that all three pattern classes occur.
+on a fixture dense enough that all three pattern classes occur. Each test
+forces the engine on or off by patching ``Comparison._analytic``.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
@@ -33,20 +32,18 @@ FUZ = ["last_name", "first_name", "house_number", "street_name"]
 EX = ["birth_year"]
 
 
-def _fit(frames, mode, **kw):
-    os.environ["FAST_ER_ANALYTIC_SINGLES"] = mode
-    try:
-        comp = Comparison(frames[0], frames[1], FUZ, FUZ, EX, EX, **kw)
+def _fit(frames, analytic, fuzzy=FUZ, exact=EX, **kw):
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(Comparison, "_analytic", lambda self: analytic)
+        comp = Comparison(frames[0], frames[1], fuzzy, fuzzy, exact, exact, **kw)
         comp.fit()
         comp.counts()
-    finally:
-        os.environ.pop("FAST_ER_ANALYTIC_SINGLES", None)
     return comp
 
 
 def test_counts_and_matched_pairs_parity(frames):
-    c0 = _fit(frames, "0")
-    c1 = _fit(frames, "force")
+    c0 = _fit(frames, False)
+    c1 = _fit(frames, True)
     assert c1._parts is not None and c0._parts is None  # gate actually flips
     h0, h1 = c0.counts(), c1.counts()
     assert np.array_equal(h0, h1)
@@ -68,8 +65,8 @@ def test_counts_and_matched_pairs_parity(frames):
 
 
 def test_transform_parity(frames):
-    c0 = _fit(frames, "0")
-    c1 = _fit(frames, "force")
+    c0 = _fit(frames, False)
+    c1 = _fit(frames, True)
     est = Estimation(len(FUZ), len(EX), c0.counts(), seed=13).fit()
     p0 = sorted(
         (r["Index_A"], r["Index_B"], round(r["ksi"], 12))
@@ -83,9 +80,8 @@ def test_transform_parity(frames):
 
 
 def test_auto_gate_off_for_small_fits(frames):
-    # auto mode: a 600x600 pair space is far below the spill threshold, so
-    # the classic engine must run (no persisted value-pair frames)
-    os.environ.pop("FAST_ER_ANALYTIC_SINGLES", None)
+    # a 600x600 pair space is far below the spill threshold, so the
+    # classic engine must run (no persisted value-pair frames)
     comp = Comparison(frames[0], frames[1], FUZ, FUZ, EX, EX)
     comp.fit()
     assert comp._parts is None
@@ -110,8 +106,8 @@ def test_null_values_parity(frames, spark):
         ).localCheckpoint()
 
     fr = (poke(frames[0]), poke(frames[1]))
-    c0 = _fit(fr, "0")
-    c1 = _fit(fr, "force")
+    c0 = _fit(fr, False)
+    c1 = _fit(fr, True)
     h0, h1 = c0.counts(), c1.counts()
     assert np.array_equal(h0, h1)
     pids = [int(i) for i in np.nonzero(h0)[0] if i != 0]
@@ -132,8 +128,8 @@ def test_natural_key_parity(frames):
     df_b = frames[1].withColumn(
         "rid", F.abs(F.xxhash64(frames[1]["ncid"])) % F.lit(10_000_000_000)
     )
-    c0 = _fit((df_a, df_b), "0", id_a="rid", id_b="rid")
-    c1 = _fit((df_a, df_b), "force", id_a="rid", id_b="rid")
+    c0 = _fit((df_a, df_b), False, id_a="rid", id_b="rid")
+    c1 = _fit((df_a, df_b), True, id_a="rid", id_b="rid")
     assert np.array_equal(c0.counts(), c1.counts())
 
 
@@ -147,18 +143,8 @@ def test_counts_and_matched_pairs_parity_two_exact(frames):
     fuz2 = ["last_name", "first_name"]
     ex2 = ["birth_year", "street_name"]
 
-    def fit2(mode):
-        os.environ["FAST_ER_ANALYTIC_SINGLES"] = mode
-        try:
-            comp = Comparison(frames[0], frames[1], fuz2, fuz2, ex2, ex2)
-            comp.fit()
-            comp.counts()
-        finally:
-            os.environ.pop("FAST_ER_ANALYTIC_SINGLES", None)
-        return comp
-
-    c0 = fit2("0")
-    c1 = fit2("force")
+    c0 = _fit(frames, False, fuz2, ex2)
+    c1 = _fit(frames, True, fuz2, ex2)
     assert c1._parts is not None and c0._parts is None
     h0, h1 = c0.counts(), c1.counts()
     assert np.array_equal(h0, h1)

@@ -1,8 +1,10 @@
 """Iceberg-branch coverage for StageCatalog.
 
-The append contract runs everywhere against stub writer objects. The real
-branch is gated on the runtime jar: without an iceberg-spark-runtime jar it
-SKIPS (the parquet path, with no catalog named, is covered by test_pipeline). On any machine
+The append contract (the pipeline's ``_ledger`` is appended to, never
+replaced) and the by-name read of a resumed stage run everywhere against
+stub writer and reader objects. The real branch is gated on the runtime jar:
+without an iceberg-spark-runtime jar it SKIPS (the parquet path, with no
+catalog named, is covered by test_pipeline). On any machine
 with the jar (ICEBERG_JAR env var, or dropped into $SPARK_HOME/jars), it
 runs createOrReplace / read / append / tableExists against a hadoop-type
 catalog in a tmpdir, in its own subprocess (catalog + jar configs must be
@@ -51,6 +53,7 @@ assert not cat.exists("s1")
 cat.write(df, "s1")
 assert cat.exists("s1")
 assert cat.read("s1").count() == 5
+assert cat.read("s1", "x long").count() == 5  # by name, schema from the catalog
 cat.append(df, "s1")
 assert cat.read("s1").count() == 10
 cat.write(df, "s1")  # atomic replace
@@ -112,25 +115,54 @@ class _StubSpark:
 def test_iceberg_append_never_replaces_existing_table():
     """A failed append to an existing table must raise and leave the table
     alone: never fall back to createOrReplace (which would wipe every
-    earlier _metrics/_lineage row) nor to create. A missing table is
-    created; an existing one is appended to."""
+    earlier _ledger row, the pipeline's only record of finished stages) nor
+    to create. A missing table is created; an existing one is appended
+    to."""
     from fast_er_spark.catalog import StageCatalog
 
-    cat = StageCatalog(_StubSpark({"it.t._metrics"}), "/unused", iceberg_catalog="it", namespace="t")
+    cat = StageCatalog(_StubSpark({"it.t._ledger"}), "/unused", iceberg_catalog="it", namespace="t")
     assert cat.iceberg == "it"
 
     calls: list = []
     with pytest.raises(RuntimeError, match="commit conflict"):
-        cat.append(_StubFrame(calls, fail_append=True), "_metrics")
+        cat.append(_StubFrame(calls, fail_append=True), "_ledger")
     assert calls == ["append"]
 
     calls = []
-    cat.append(_StubFrame(calls), "_metrics")
+    cat.append(_StubFrame(calls), "_ledger")
     assert calls == ["append"]
 
     calls = []
-    cat.append(_StubFrame(calls), "_lineage")
+    StageCatalog(_StubSpark(set()), "/unused", iceberg_catalog="it", namespace="t").append(
+        _StubFrame(calls), "_ledger"
+    )
     assert calls == ["create"]
+
+
+class _StubReader:
+    def __init__(self, calls: list):
+        self.calls = calls
+
+    def table(self, name):
+        self.calls.append(("table", name))
+        return name
+
+    def schema(self, schema):
+        self.calls.append(("schema", schema))
+        return self
+
+
+def test_iceberg_read_with_schema_reads_table_by_name():
+    """A resumed stage passes the schema its ledger row recorded to
+    read(); an Iceberg table is still read by name, with the schema its
+    catalog holds, and the given one is not applied."""
+    from fast_er_spark.catalog import StageCatalog
+
+    spark, calls = _StubSpark({"it.t.input_x"}), []
+    spark.read = _StubReader(calls)
+    cat = StageCatalog(spark, "/unused", iceberg_catalog="it", namespace="t")
+    assert cat.read("input_x", "id long, text string") == "it.t.input_x"
+    assert calls == [("table", "it.t.input_x")]
 
 
 class _FailingSpark(_StubSpark):

@@ -1,6 +1,6 @@
-"""The README's "Cluster knobs" table must list exactly the FAST_ER_*
-environment variables the package reads — no undocumented switch, no
-documented switch that no longer exists."""
+"""The package reads no FAST_ER_* environment variable: every behaviour is
+chosen by code or by Spark configuration, never by an undocumented switch.
+The README's "Cluster knobs" table lists no such name either."""
 
 import re
 from pathlib import Path
@@ -30,10 +30,7 @@ def _knob_table() -> set[str]:
 
 
 def test_readme_knob_table_matches_package_reads():
-    read = _read_in_package()
-    assert read, "no FAST_ER_* reads found: the scan pattern is broken"
-    table = _knob_table()
-    assert read == table, {
-        "read but not in the README table": sorted(read - table),
-        "in the README table but never read": sorted(table - read),
-    }
+    sample = 'mode = os.environ.get("FAST_ER_X", "auto")'
+    assert READ.findall(sample) == ["FAST_ER_X"], "the scan pattern is broken"
+    assert _read_in_package() == set()
+    assert _knob_table() == set()

@@ -295,19 +295,17 @@ def test_big_path_packed_shuffle_and_spill_parity(spark, monkeypatch, tmp_path):
     pat_small = {(r.id_a, r.id_b, r.pattern_id) for r in small.patterns.collect()}
 
     monkeypatch.setattr(L, "_SPILL_PAIR_SPACE", 0)
-    # pin the CLASSIC big path: big fits default to the analytic-singles
-    # engine (which persists the small multi frame instead of spilling the
-    # full pattern frame — covered by tests/test_analytic_engine.py)
-    monkeypatch.setenv("FAST_ER_ANALYTIC_SINGLES", "0")
     spark.conf.set("spark.fast_er.spillDir", str(tmp_path))
     try:
-        # the auto gate must pick the analytic engine for a big unblocked
-        # fit, and its counts must match the small path exactly
-        monkeypatch.setenv("FAST_ER_ANALYTIC_SINGLES", "auto")
+        # the gate must pick the analytic engine for a big unblocked fit,
+        # and its counts must match the small path exactly
         auto_big = Comparison(df_a, df_b, FUZZY, FUZZY, EXACT, EXACT).fit()
         assert auto_big._big() and auto_big._parts is not None
         np.testing.assert_array_equal(auto_big.counts(), c_small)
-        monkeypatch.setenv("FAST_ER_ANALYTIC_SINGLES", "0")
+        # pin the CLASSIC big path: big fits default to the analytic-singles
+        # engine (which persists the small multi frame instead of spilling
+        # the full pattern frame — covered by tests/test_analytic_engine.py)
+        monkeypatch.setattr(Comparison, "_analytic", lambda self: False)
 
         big = Comparison(df_a, df_b, FUZZY, FUZZY, EXACT, EXACT).fit()
         assert big._big() and big._pack_bits is not None and big._parts is None

@@ -78,9 +78,9 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, monkeypatch):
         }
         lin = pipe.lineage().groupBy("stage").count().collect()
         assert {r["stage"] for r in lin} == set(pipe.STAGES)
-        # one _lineage and one _metrics append per stage, and the lineage
-        # rows of each stage sum to its rows_out
-        assert sorted(appends) == sorted(["_lineage", "_metrics"] * len(pipe.STAGES))
+        # one _ledger append per stage, and the lineage rows of each stage
+        # sum to its rows_out
+        assert appends == ["_ledger"] * len(pipe.STAGES)
         rows_out = {r["stage"]: r["rows_out"] for r in pipe.metrics().collect()}
         lin_rows = {
             r["stage"]: r["rows"]
@@ -101,12 +101,23 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, monkeypatch):
         assert co / len(want_pairs) >= 0.99
 
         # RESUME: second run must read every stage back, same answer, and
-        # record nothing: each stage and counter stays one metrics row
+        # record nothing: each stage and counter stays one metrics row. Its
+        # rows come from the ledger, read once: no count and no schema
+        # inference per stage
         appends.clear()
         pipe2 = DedupPipeline(spark, workdir, cfg)
-        clusters2 = pipe2.run(df, resume=True)
+        sc = spark.sparkContext
+        sc.setJobGroup("full_resume", "full resume")
+        try:
+            clusters2 = pipe2.run(df, resume=True)
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(sc.statusTracker().getJobIdsForGroup("full_resume")) <= 2
         assert all(s.resumed for s in pipe2.results)
         assert appends == []
+        assert [(s.name, s.rows) for s in pipe2.results] == [
+            (s.name, s.rows) for s in pipe.results
+        ]
         names = [r["stage"] for r in pipe2.metrics().collect()]
         assert sorted(names) == sorted(stages), names
         got2 = {int(r.id): int(r.component) for r in clusters2.collect()}
@@ -205,7 +216,7 @@ def test_star_cap_skew_recall_and_telemetry(spark, tmp_path):
     assert m["star_rejected_by_verify"] == 0  # same-cluster stars all verify
 
     # verified rebuilt over a resumed candidates table: the star count then
-    # comes from a count on that table, and the counters repeat exactly
+    # comes from the candidates' ledger rows, and the counters repeat exactly
     import glob
 
     for path in glob.glob(str(tmp_path / "wd_star" / "verified_*")):
@@ -247,7 +258,7 @@ def test_failed_rdd_probe_raises_and_spares_caller_caches():
     pipe = DedupPipeline(_BrokenRddProbeSession(), "/unused")
     built = []
     with pytest.raises(_BrokenGateway):
-        pipe._run_stage("input", lambda: built.append(1), resume=False)
+        pipe._run_stage("input", lambda: built.append(1))
     assert built == []
 
 
@@ -280,6 +291,70 @@ def test_pipeline_resumes_mid_run(spark, corpus):
         assert second == first
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_stage_killed_before_its_ledger_append_is_rebuilt(spark, corpus, monkeypatch):
+    """The ledger, not the table, records a finished stage: a run killed
+    between the ``verified`` write and its ledger append leaves a table but
+    no record, so the re-run rebuilds ``verified`` (over the resumed
+    candidates) and then records it and its star-cap counters."""
+    from fast_er_spark.catalog import StageCatalog
+    from fast_er_spark.pipeline import DedupConfig, DedupPipeline
+
+    rows, df = corpus
+    workdir = tempfile.mkdtemp(prefix="dedup_crash_")
+    write, append = StageCatalog.write, StageCatalog.append
+    written = []
+
+    def recording_write(self, frame, name):
+        written.append(name)
+        return write(self, frame, name)
+
+    def crashing_append(self, frame, name):
+        if written[-1].startswith("verified_"):
+            raise RuntimeError("killed before the ledger append")
+        return append(self, frame, name)
+
+    try:
+        cfg = DedupConfig(html_col="html", substring_pass=False)
+        monkeypatch.setattr(StageCatalog, "write", recording_write)
+        monkeypatch.setattr(StageCatalog, "append", crashing_append)
+        with pytest.raises(RuntimeError, match="killed"):
+            DedupPipeline(spark, workdir, cfg).run(df)
+        monkeypatch.setattr(StageCatalog, "append", append)
+
+        pipe = DedupPipeline(spark, workdir, cfg)
+        pipe.run(df)
+        resumed = {s.name: s.resumed for s in pipe.results}
+        assert resumed["input"] and resumed["candidates"] and not resumed["verified"]
+        stages = {r["stage"] for r in pipe.metrics().collect()}
+        assert {"verified", "star_candidates", "star_rejected_by_verify"} <= stages
+        assert "verified" in {r["stage"] for r in pipe.lineage().collect()}
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_empty_stages_are_recorded(spark, tmp_path):
+    """Blank docs pair with nothing, so every stage between input and
+    clusters writes an empty table, which has no partition rows: each
+    stage's ledger summary row still gives it a metrics row."""
+    from fast_er_spark.pipeline import DedupConfig, DedupPipeline
+
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(["", " ", "\t", None, "  \n", ""])],
+        "doc_id long, text string",
+    )
+    pipe = DedupPipeline(spark, str(tmp_path / "wd_empty"), DedupConfig())
+    got = {int(r.id): int(r.component) for r in pipe.run(df).collect()}
+    assert got == {i: i for i in range(6)}
+    m = {r["stage"]: int(r["rows_out"]) for r in pipe.metrics().collect()}
+    assert m == {
+        "input": 6, "candidates": 0, "verified": 0, "substring_edges": 0,
+        "substring_verified": 0, "edges": 0, "clusters": 6,
+        "star_candidates": 0, "star_rejected_by_verify": 0,
+    }
+    lin = {r["stage"] for r in pipe.lineage().collect()}
+    assert lin == {"input", "clusters"}
 
 
 def test_substring_pass_catches_low_jaccard_containment(spark, corpus):
